@@ -6,10 +6,11 @@ package graft
   * `spark.sql.shuffle.partitions` is a latent scale bug — at ×100 the
   * harness's fixed 32 made q13's shingle-join partitions spill
   * (270 s), and the SAME binary at 256 partitions ran −27% with no
-  * code change. On clusters AQE coalescing makes the static number a
-  * mere ceiling ([[RunTask.sessionDefaults]] pins AQE on), but the
-  * repo's measurement mains (Bench/QBench/ScaleUp) deliberately run
-  * static plans — so THEY must derive the width from the data.
+  * code change. AQE is on in [[RunTask.sessionDefaults]] and, by Spark
+  * 4.1's default, in every measurement main (Bench/QBench/ScaleUp/
+  * PlanDump); its coalescing only merges partitions, so the derived
+  * width is AQE's starting ceiling. Too low a ceiling spills, which is
+  * why the mains derive it from the data.
   *
   * The rule: one shuffle partition per [[BytesPerPartition]] of input
   * parquet, clamped to [[[MinPartitions]], [[MaxPartitions]]].

@@ -70,7 +70,7 @@ object CurationChain {
     Dedup.dedupNearDups(d,
       Dedup.nearDupMinHash(d, shingleSize = ShingleSize,
         threshold = JaccardThreshold, mat = mat),
-      "doc_id")
+      "doc_id", mat = mat)
 
   /** Stage 4 — decontamination (q30's split): the benchmark set is the
     * ORIGINAL corpus's `doc_id % BenchMod == 0` slice (an eval set is
@@ -101,11 +101,11 @@ object CurationChain {
     * pair graph + anti join, decontamination = shingle join + final
     * join), so an unmaterialized chain RE-RUNS each upstream stage
     * once per downstream branch — multiplicatively. Materialization
-    * policy is therefore injectable (the [[Dedup.connectedComponents]]
-    * checkpointer seam generalized): the stage body is BY-NAME, so a
-    * materializer that already holds a stage's landing can skip
-    * constructing (and, for eager operators, executing) it entirely —
-    * the resume path.
+    * policy is therefore injectable, and operator-internal cuts (e.g.
+    * [[Dedup.connectedComponents]]'s rounds) name themselves here too:
+    * the stage body is BY-NAME, so a materializer that already holds a
+    * stage's landing can skip constructing (and, for eager operators,
+    * executing) it entirely — the resume path.
     */
   trait StageMaterializer {
     def apply(stage: String)(d: => DataFrame): DataFrame
@@ -133,14 +133,44 @@ object CurationChain {
     * zero. Paths go through the Hadoop filesystem of `dir`, so
     * hdfs:///s3a:// landings work unchanged. One dir corresponds to
     * one logical run over one input: point a re-run at the same dir to
-    * resume it, a new input at a fresh dir.
+    * resume it, a new input at a fresh dir. The dir is BOUND to
+    * `input`: `dir/_INPUT` records its sorted `inputFiles` with each
+    * file's length and modification time, and a different listing
+    * throws before any landing is reused. A frame with no input files
+    * (an in-memory `toDF`) is not fingerprinted.
     */
-  final case class DurableMaterializer(spark: SparkSession, dir: String)
-      extends StageMaterializer {
+  final case class DurableMaterializer(spark: SparkSession, dir: String,
+                                       input: DataFrame) extends StageMaterializer {
+    import org.apache.hadoop.fs.Path
+    private val conf = spark.sparkContext.hadoopConfiguration
+    private val fs = new Path(dir).getFileSystem(conf)
+
+    // once per materializer, before its first stage is reused or landed
+    private lazy val boundToInput: Unit = {
+      val listing = input.inputFiles.sorted.toList.map { f =>
+        val st = new Path(f).getFileSystem(conf).getFileStatus(new Path(f))
+        s"$f\t${st.getLen}\t${st.getModificationTime}"
+      }
+      val marker = new Path(dir, "_INPUT")
+      if (listing.isEmpty) ()
+      else if (!fs.exists(marker)) {
+        val out = fs.create(marker, false)
+        try out.write(listing.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+      } else {
+        val in = fs.open(marker)
+        val recorded = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+          finally in.close()
+        for ((r, l) <- recorded.zipAll(listing, "", "").find(p => p._1 != p._2))
+          throw new IllegalStateException(s"DurableMaterializer dir $dir was landed " +
+            "from different input; first differing file: " +
+            s"${(if (l.nonEmpty) l else r).takeWhile(_ != '\t')} (recorded [$r], now [$l])")
+      }
+    }
+
     def apply(stage: String)(d: => DataFrame): DataFrame = {
-      val path = new org.apache.hadoop.fs.Path(dir, stage)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
+      boundToInput
+      val path = new Path(dir, stage)
+      if (!fs.exists(new Path(path, "_SUCCESS")))
         d.write.mode("overwrite").parquet(path.toString)
       spark.read.parquet(path.toString)
     }

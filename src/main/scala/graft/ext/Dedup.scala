@@ -166,13 +166,15 @@ object Dedup {
     * O(diameter) — the per-round Spark-job cost is what dominates at
     * 100 TB. Returns (member, component).
     *
-    * Checkpointing: per-round materialization bounds the lineage. With
-    * `checkpointDir` set, rounds use reliable `Dataset.checkpoint()`
-    * into that (HDFS/S3) directory — a lost executor mid-loop recovers
-    * from the checkpoint files. Unset, rounds use
-    * `localCheckpoint(true)` (executor block storage): fine for tests
-    * and single-node runs, unrecoverable if an executor dies — at
-    * 100 TB always pass a reliable dir.
+    * Materialization: every cut (the edge frame `cc_edges`, the initial
+    * labels `cc_labels_0`, each round `cc_round_<i>`) goes through the
+    * injectable [[CurationChain.StageMaterializer]] seam, which bounds
+    * the lineage per round. The default eager localCheckpoint is the
+    * single-host trade (executor block storage, unrecoverable if an
+    * executor dies); at 100 TB pass a
+    * [[CurationChain.DurableMaterializer]], whose parquet landings a
+    * lost executor — or a resumed run — reads back. The stage names
+    * are fixed, so one durable dir holds ONE component computation.
     *
     * Exiting via the `maxIterations` cap without a fixpoint would
     * silently return WRONG labels (some member not yet carrying its
@@ -181,8 +183,9 @@ object Dedup {
     * 2^20 — far past any realistic near-dup chain.
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsWithRounds(pairs, maxIterations, checkpointDir)._1
+                          mat: CurationChain.StageMaterializer =
+                            CurationChain.LocalCheckpointMaterializer): DataFrame =
+    connectedComponentsWithRounds(pairs, maxIterations, mat)._1
 
   /** [[connectedComponents]] plus the number of label-propagation
     * rounds it ran — the round count is the real 100 TB cost (one
@@ -191,32 +194,13 @@ object Dedup {
     */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, maxIterations: Int = 20,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val sc = pairs.sparkSession.sparkContext
-    // setCheckpointDir is SparkContext-global: restore the caller's dir
-    // after the loop so this operator doesn't silently redirect every
-    // later checkpoint in the session (already-written checkpoint files
-    // stay valid — RDDs hold absolute paths)
-    val previousDir = sc.getCheckpointDir
-    val mat: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        sc.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint(true)
-    }
-    // restore UNCONDITIONALLY: setCheckpointDir(null) clears (Option(null)
-    // → None, null-safe path) — previousDir.foreach would leak this
-    // operator's dir onto the context when none was previously set
-    try connectedComponentsLoop(pairs, maxIterations, mat)
-    finally if (checkpointDir.isDefined) sc.setCheckpointDir(previousDir.orNull)
-  }
-
-  private def connectedComponentsLoop(pairs: DataFrame, maxIterations: Int,
-                                      mat: DataFrame => DataFrame): (DataFrame, Int) = {
-    val edges = mat(pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct())
-    var labels = mat(edges.select(col("src").as("member"))
+      mat: CurationChain.StageMaterializer =
+        CurationChain.LocalCheckpointMaterializer): (DataFrame, Int) = {
+    val edges = mat("cc_edges")(
+      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
+        .distinct())
+    var labels = mat("cc_labels_0")(edges.select(col("src").as("member"))
       .distinct()
       .withColumn("component", col("member")))
     var converged = false
@@ -242,13 +226,14 @@ object Dedup {
       // rounds instead of 10 000. The round carries its own change
       // flag so convergence is a scan of the just-materialized result.
       val shortMap = prop.select(col("member").as("__lm"), col("__p").as("__lc"))
-      val next = mat(prop.join(shortMap, col("__p") === col("__lm"), "left")
-        .select(col("member"),
-          coalesce(col("__lc"), col("__p")).as("component"),
-          (coalesce(col("__lc"), col("__p")) < col("__old")).as("__changed")))
+      i += 1
+      val next = mat(s"cc_round_$i")(
+        prop.join(shortMap, col("__p") === col("__lm"), "left")
+          .select(col("member"),
+            coalesce(col("__lc"), col("__p")).as("component"),
+            (coalesce(col("__lc"), col("__p")) < col("__old")).as("__changed")))
       converged = next.where(col("__changed")).isEmpty
       labels = next.select("member", "component")
-      i += 1
     }
     if (!converged)
       throw new IllegalStateException(
@@ -378,9 +363,10 @@ object Dedup {
     */
   def impactReport(docs: DataFrame, pairs: DataFrame, groupCols: Seq[String],
                    idCol: String = "doc_id", maxIterations: Int = 20,
-                   checkpointDir: Option[String] = None): DataFrame = {
+                   mat: CurationChain.StageMaterializer =
+                     CurationChain.LocalCheckpointMaterializer): DataFrame = {
     require(groupCols.nonEmpty, "impactReport needs at least one group column")
-    val comp = connectedComponents(pairs, maxIterations, checkpointDir)
+    val comp = connectedComponents(pairs, maxIterations, mat)
       .withColumnRenamed("member", idCol)
     docs.join(comp, Seq(idCol), "left")
       .groupBy(groupCols.map(col): _*)
@@ -396,13 +382,14 @@ object Dedup {
   /** Near-duplicate REMOVAL: run pair detection, cluster the pairs, and
     * keep only each cluster's lowest-id member (plus every document in
     * no cluster). The anti-join ships only the small loser set.
-    * `maxIterations`/`checkpointDir` pass through to
-    * [[connectedComponents]] (reliable checkpointing at scale).
+    * `maxIterations`/`mat` pass through to [[connectedComponents]]
+    * (a durable materializer lands its rounds at scale).
     */
   def dedupNearDups(docs: DataFrame, pairs: DataFrame,
                     idCol: String = "doc_id", maxIterations: Int = 20,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    val losers = connectedComponents(pairs, maxIterations, checkpointDir)
+                    mat: CurationChain.StageMaterializer =
+                      CurationChain.LocalCheckpointMaterializer): DataFrame = {
+    val losers = connectedComponents(pairs, maxIterations, mat)
       .where(col("member") =!= col("component"))
       .select(col("member").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
@@ -419,9 +406,10 @@ object Dedup {
     */
   def dedupNearDupsBest(docs: DataFrame, pairs: DataFrame, scoreCol: String,
                         idCol: String = "doc_id", maxIterations: Int = 20,
-                        checkpointDir: Option[String] = None): DataFrame = {
+                        mat: CurationChain.StageMaterializer =
+                          CurationChain.LocalCheckpointMaterializer): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val members = connectedComponents(pairs, maxIterations, checkpointDir)
+    val members = connectedComponents(pairs, maxIterations, mat)
       .join(docs.select(col(idCol).as("member"), col(scoreCol).as("__score")), "member")
     val w = Window.partitionBy(col("component"))
       .orderBy(col("__score").desc, col("member").asc)

@@ -538,9 +538,13 @@ object LinkGraph {
     * the host-cardinality rank frame; the page corpus is long gone).
     * A handful of rounds separates spam from endorsed hosts; run ~20
     * for near-converged ranks and set `checkpointEvery` so lineage
-    * stays bounded ([[Dedup.connectedComponents]]'s discipline:
-    * reliable `checkpointDir` on a cluster, localCheckpoint fallback
-    * for single-node runs).
+    * stays bounded. Every cut (`rank_pairs`, `rank_nodes`,
+    * `rank_weighted`, every `checkpointEvery`-th round as
+    * `rank_iter_<i>`) goes through `mat`, the
+    * [[CurationChain.StageMaterializer]] seam shared with
+    * [[Dedup.connectedComponents]]: the default localCheckpoint for
+    * single-node runs, a [[CurationChain.DurableMaterializer]] on a
+    * cluster.
     *
     * `sortedFold = true` (default) makes per-node sums bit-replayable
     * across engines (see the object doc); pass false at extreme hub
@@ -563,92 +567,80 @@ object LinkGraph {
                damping: Double = 0.85,
                sortedFold: Boolean = true,
                checkpointEvery: Int = 0,
-               checkpointDir: Option[String] = None,
+               mat: CurationChain.StageMaterializer =
+                 CurationChain.LocalCheckpointMaterializer,
                weightedByLinks: Boolean = false,
                maxSortedFoldInDegree: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "hostRank: iterations must be >= 1")
     require(damping > 0.0 && damping < 1.0,
       s"hostRank: damping must be in (0,1), got $damping")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val previousDir = sc.getCheckpointDir
-    val mat: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => sc.setCheckpointDir(dir); df => df.checkpoint()
-      case None => df => df.localCheckpoint(true)
+    // the graph frames materialize ONCE ([[Dedup.connectedComponents]]'s
+    // discipline): they are host-cardinality, and without this every
+    // iteration's lazy plan would re-derive them — re-SCANNING the
+    // page corpus behind the edge frame once per reuse (a 3-iteration
+    // lazy plan carried 28 scans; materialized it carries none)
+    // link weights are integer-valued doubles throughout, so every
+    // weight sum is EXACT regardless of combine order (below 2^53)
+    val pairs = mat("rank_pairs")(
+      if (weightedByLinks)
+        edges.groupBy(col("src_host").as("__src"),
+          col("dst_host").as("__dst"))
+          .agg(sum(col("n_links")).cast("double").as("__w"))
+      else
+        edges.select(col("src_host").as("__src"),
+          col("dst_host").as("__dst")).distinct()
+          .withColumn("__w", lit(1.0)))
+    val nodes = mat("rank_nodes")(pairs.select(col("__src").as("host"))
+      .union(pairs.select(col("__dst").as("host"))).distinct())
+    // N collects once — a single long, the bounded-collect pattern
+    // (the base term needs a literal so the oracle's constant parses
+    // to the identical double)
+    val n = nodes.count()
+    require(n > 0, "hostRank: empty edge frame — no hosts to rank")
+    if (sortedFold) {
+      // the sorted fold builds one collect_list row per node, bounded
+      // by that node's IN-DEGREE — fail LOUDLY on an extreme hub
+      // instead of letting one unbounded row OOM an executor (the
+      // maxCountDocFreq discipline, [[Dedup]]): the pairs frame is
+      // host-cardinality and already materialized, so the guard agg
+      // is cheap next to the iterations it protects
+      val hub = pairs.groupBy(col("__dst"))
+        .agg(count(lit(1)).as("__in")).agg(max(col("__in"))).collect()(0)
+      val maxIn = if (hub.isNullAt(0)) 0L else hub.getLong(0)
+      require(maxIn <= maxSortedFoldInDegree,
+        s"hostRank: a hub host has $maxIn distinct in-hosts " +
+          s"(maxSortedFoldInDegree=$maxSortedFoldInDegree) — the sorted " +
+          "bit-replayable fold would build one row that large per " +
+          "iteration; pass sortedFold=false (order-free shuffle-partial " +
+          "sum, same ranking to ~1 ulp) or raise the bound deliberately")
     }
-    try {
-      // the graph frames materialize ONCE ([[Dedup.connectedComponents]]'s
-      // discipline): they are host-cardinality, and without this every
-      // iteration's lazy plan would re-derive them — re-SCANNING the
-      // page corpus behind the edge frame once per reuse (a 3-iteration
-      // lazy plan carried 28 scans; materialized it carries none)
-      // link weights are integer-valued doubles throughout, so every
-      // weight sum is EXACT regardless of combine order (below 2^53)
-      val pairs = mat(
-        if (weightedByLinks)
-          edges.groupBy(col("src_host").as("__src"),
-            col("dst_host").as("__dst"))
-            .agg(sum(col("n_links")).cast("double").as("__w"))
+    val base = (1.0 - damping) / n
+    val outdeg = pairs.groupBy(col("__src"))
+      .agg(sum(col("__w")).as("__outdeg"))
+    val weighted = mat("rank_weighted")(pairs.join(outdeg, "__src"))
+    var ranks = nodes.withColumn("rank", lit(1.0 / n))
+    for (i <- 1 to iterations) {
+      val contribs = weighted
+        .join(ranks.withColumnRenamed("host", "__src"), "__src")
+        .select(col("__dst").as("host"),
+          (col("rank") * col("__w") / col("__outdeg")).as("__c"))
+      val summed =
+        if (sortedFold)
+          contribs.groupBy("host").agg(
+            aggregate(sort_array(collect_list(col("__c"))),
+              lit(0.0), (acc, x) => acc + x).as("__s"))
         else
-          edges.select(col("src_host").as("__src"),
-            col("dst_host").as("__dst")).distinct()
-            .withColumn("__w", lit(1.0)))
-      val nodes = mat(pairs.select(col("__src").as("host"))
-        .union(pairs.select(col("__dst").as("host"))).distinct())
-      // N collects once — a single long, the bounded-collect pattern
-      // (the base term needs a literal so the oracle's constant parses
-      // to the identical double)
-      val n = nodes.count()
-      require(n > 0, "hostRank: empty edge frame — no hosts to rank")
-      if (sortedFold) {
-        // the sorted fold builds one collect_list row per node, bounded
-        // by that node's IN-DEGREE — fail LOUDLY on an extreme hub
-        // instead of letting one unbounded row OOM an executor (the
-        // maxCountDocFreq discipline, [[Dedup]]): the pairs frame is
-        // host-cardinality and already materialized, so the guard agg
-        // is cheap next to the iterations it protects
-        val hub = pairs.groupBy(col("__dst"))
-          .agg(count(lit(1)).as("__in")).agg(max(col("__in"))).collect()(0)
-        val maxIn = if (hub.isNullAt(0)) 0L else hub.getLong(0)
-        require(maxIn <= maxSortedFoldInDegree,
-          s"hostRank: a hub host has $maxIn distinct in-hosts " +
-            s"(maxSortedFoldInDegree=$maxSortedFoldInDegree) — the sorted " +
-            "bit-replayable fold would build one row that large per " +
-            "iteration; pass sortedFold=false (order-free shuffle-partial " +
-            "sum, same ranking to ~1 ulp) or raise the bound deliberately")
-      }
-      val base = (1.0 - damping) / n
-      val outdeg = pairs.groupBy(col("__src"))
-        .agg(sum(col("__w")).as("__outdeg"))
-      val weighted = mat(pairs.join(outdeg, "__src"))
-      var ranks = nodes.withColumn("rank", lit(1.0 / n))
-      for (i <- 1 to iterations) {
-        val contribs = weighted
-          .join(ranks.withColumnRenamed("host", "__src"), "__src")
-          .select(col("__dst").as("host"),
-            (col("rank") * col("__w") / col("__outdeg")).as("__c"))
-        val summed =
-          if (sortedFold)
-            contribs.groupBy("host").agg(
-              aggregate(sort_array(collect_list(col("__c"))),
-                lit(0.0), (acc, x) => acc + x).as("__s"))
-          else
-            contribs.groupBy("host").agg(sum(col("__c")).as("__s"))
-        val next = nodes.join(summed, Seq("host"), "left")
-          .select(col("host"),
-            (lit(base) + lit(damping) * coalesce(col("__s"), lit(0.0)))
-              .as("rank"))
-        ranks =
-          if (checkpointEvery > 0 && i % checkpointEvery == 0 &&
-            i < iterations) mat(next)
-          else next
-      }
-      ranks
-      // restore the shared context's checkpoint dir UNCONDITIONALLY:
-      // setCheckpointDir(null) clears it (Option(null) → None, and the
-      // null path is handled) — without this a caller-supplied dir
-      // would leak onto the context when none was previously set
-    } finally if (checkpointDir.isDefined) sc.setCheckpointDir(previousDir.orNull)
+          contribs.groupBy("host").agg(sum(col("__c")).as("__s"))
+      val next = nodes.join(summed, Seq("host"), "left")
+        .select(col("host"),
+          (lit(base) + lit(damping) * coalesce(col("__s"), lit(0.0)))
+            .as("rank"))
+      ranks =
+        if (checkpointEvery > 0 && i % checkpointEvery == 0 &&
+          i < iterations) mat(s"rank_iter_$i")(next)
+        else next
+    }
+    ranks
   }
 
   /** [[hostRank]]'s iteration replayed as DuckDB chained CTEs over an

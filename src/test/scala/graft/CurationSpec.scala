@@ -56,7 +56,7 @@ class CurationSpec extends AnyFunSuite {
     // the cut is a pure materialization-policy choice, never semantics
     val docsSmall = docs.limit(200)
     def durable(name: String) =
-      CurationChain.DurableMaterializer(spark, SparkTestBase.tmpDir(name))
+      CurationChain.DurableMaterializer(spark, SparkTestBase.tmpDir(name), docsSmall)
     def rows(d: DataFrame): Seq[org.apache.spark.sql.Row] = {
       val cols = d.columns.map(col)
       d.orderBy(cols.toIndexedSeq: _*).collect().toSeq
@@ -104,6 +104,32 @@ class CurationSpec extends AnyFunSuite {
         "/root/testdata/sf0.001", mat = durable("gated"))) ===
       rows(graft.ext.ExtQueries.gatedFrontHalf(spark,
         "/root/testdata/sf0.001")))
+    // the iterative operators: every connected-components round and
+    // every hostRank cut lands through the same seam. The crafted
+    // 10-chain forces several CC rounds on top of the MinHash pairs.
+    val pairs = Dedup.nearDupMinHash(docsSmall, threshold = 0.8)
+      .select("a_id", "b_id")
+      .union((1L to 9L).map(i => (i, i + 1)).toDF("a_id", "b_id"))
+    val ccMat = durable("cc")
+    assert(rows(Dedup.connectedComponents(pairs, mat = ccMat)) ===
+      rows(Dedup.connectedComponents(pairs)))
+    assert(new java.io.File(s"${ccMat.dir}/cc_edges/_SUCCESS").isFile)
+    assert(rows(Dedup.dedupNearDups(docsSmall, pairs, mat = durable("ndd"))) ===
+      rows(Dedup.dedupNearDups(docsSmall, pairs)))
+    val scored = docsSmall.withColumn("n_chars", length($"text"))
+    assert(rows(Dedup.dedupNearDupsBest(scored, pairs, scoreCol = "n_chars",
+        mat = durable("nddb"))) ===
+      rows(Dedup.dedupNearDupsBest(scored, pairs, scoreCol = "n_chars")))
+    assert(rows(Dedup.impactReport(docsSmall, pairs, Seq("lang"),
+        mat = durable("impact"))) ===
+      rows(Dedup.impactReport(docsSmall, pairs, Seq("lang"))))
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "c", "d" -> "a")
+      .toDF("src_host", "dst_host")
+    val rankMat = durable("rank")
+    assert(rows(graft.ext.LinkGraph.hostRank(edges, checkpointEvery = 2,
+        mat = rankMat)) ===
+      rows(graft.ext.LinkGraph.hostRank(edges, checkpointEvery = 2)))
+    assert(new java.io.File(s"${rankMat.dir}/rank_pairs/_SUCCESS").isFile)
   }
 
   test("curation chain: monotone shrink, splits partition, packing bounded, deterministic") {
@@ -271,7 +297,7 @@ class CurationSpec extends AnyFunSuite {
       .collect().toSeq
 
     val dir = SparkTestBase.tmpDir("graft_chain_durable")
-    val durable = CurationChain.DurableMaterializer(spark, dir)
+    val durable = CurationChain.DurableMaterializer(spark, dir, docs)
     // first attempt dies before stage 3: s1 + s2 land, s3/s4 never run
     intercept[RuntimeException] {
       CurationChain.run(docs, new Bomb(durable, "s3_near_dup_dedup"))
@@ -286,12 +312,14 @@ class CurationSpec extends AnyFunSuite {
     val spy = new Spy(durable)
     val resumed = CurationChain.run(docs, spy).orderBy("lang", "bin_id")
       .collect().toSeq
-    // "minhash_sigs" is stage 3's operator-INTERNAL cut
-    // (Dedup.nearDupMinHash's signature frame): since the seam routing
-    // it also reaches the injected materializer, so a resumed s3
-    // evaluates and lands it — it was unlanded when the bomb fired
+    // "minhash_sigs" and the "cc_*" cuts are stage 3's operator-INTERNAL
+    // cuts (Dedup.nearDupMinHash's signature frame, then the
+    // connected-components edges, initial labels and rounds): the seam
+    // routes them to the injected materializer too, so a resumed s3
+    // evaluates and lands them — they were unlanded when the bomb fired
     assert(spy.evaluated.toList ===
-      List("s3_near_dup_dedup", "minhash_sigs", "s4_decontaminate"),
+      List("s3_near_dup_dedup", "minhash_sigs", "cc_edges", "cc_labels_0",
+        "cc_round_1", "cc_round_2", "s4_decontaminate"),
       "resume must evaluate exactly the unlanded stages")
     assert(landedFiles(dir).view.filterKeys(landedBefore.contains).toMap
       === landedBefore,
@@ -304,6 +332,40 @@ class CurationSpec extends AnyFunSuite {
     val rerun = CurationChain.run(docs, spy2).orderBy("lang", "bin_id")
       .collect().toSeq
     assert(spy2.evaluated.isEmpty && rerun === expected)
+  }
+
+  test("durable dir is bound to its input: other corpus fails loudly, same corpus resumes") {
+    import graft.ext.CurationChain
+    import CurationChain.StageMaterializer
+    class Spy(inner: StageMaterializer) extends StageMaterializer {
+      val evaluated = scala.collection.mutable.ListBuffer.empty[String]
+      def apply(stage: String)(d: => DataFrame) =
+        inner(stage) { evaluated += stage; d }
+    }
+    // two parquet corpora: the even and the odd half of the fixture
+    val root = SparkTestBase.tmpDir("graft_bound_corpora")
+    docs.where($"doc_id" % 2 === 0).write.parquet(s"$root/a")
+    docs.where($"doc_id" % 2 =!= 0).write.parquet(s"$root/b")
+    val a = spark.read.parquet(s"$root/a")
+    val b = spark.read.parquet(s"$root/b")
+    val dir = SparkTestBase.tmpDir("graft_bound_dir")
+    val first = CurationChain.run(a, CurationChain.DurableMaterializer(spark, dir, a))
+      .orderBy("lang", "bin_id").collect().toSeq
+    assert(new java.io.File(s"$dir/_INPUT").isFile)
+
+    // corpus B at corpus A's dir: refused before any stage is reused
+    val spyB = new Spy(CurationChain.DurableMaterializer(spark, dir, b))
+    val e = intercept[IllegalStateException] {
+      CurationChain.run(b, spyB).collect()
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains(s"$root/b/"),
+      e.getMessage)
+    assert(spyB.evaluated.isEmpty)
+
+    // the same corpus A resumes with zero stage evaluation
+    val spyA = new Spy(CurationChain.DurableMaterializer(spark, dir, a))
+    val again = CurationChain.run(a, spyA).orderBy("lang", "bin_id").collect().toSeq
+    assert(spyA.evaluated.isEmpty && again === first)
   }
 
   test("CcNet durable materialization: a killed curation resumes from the landed prediction frame") {
@@ -333,7 +395,7 @@ class CurationSpec extends AnyFunSuite {
     val expected = CcNet.curateWithModel(corpus, model)
       .orderBy("doc_id").collect().toSeq
     val dir = SparkTestBase.tmpDir("graft_ccnet_durable")
-    val durable = CurationChain.DurableMaterializer(spark, dir)
+    val durable = CurationChain.DurableMaterializer(spark, dir, corpus)
     // first attempt dies before the scoring stage: the prediction
     // frame (the corpus's dominant linear cost) has already landed
     intercept[RuntimeException] {

@@ -625,17 +625,6 @@ class ExtSpec extends AnyFunSuite {
     assert(salted === plain)
   }
 
-  test("connectedComponents: reliable checkpoint dir path gives identical labels") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
-    val dir = SparkTestBase.tmpDir("graft_cc_ckpt")
-    val cc = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    // the reliable path actually wrote checkpoint files
-    val wrote = new java.io.File(dir).listFiles()
-    assert(wrote != null && wrote.nonEmpty, s"no checkpoint data under $dir")
-  }
-
   test("connectedComponents throws instead of returning unconverged labels") {
     // a 5-chain needs >1 min-label rounds; cap at 1 must fail loudly
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a_id", "b_id")
