@@ -223,16 +223,18 @@ object PipelineRunner {
     * silently lost. But re-landing the whole boundary slice on EVERY run
     * would grow the append landing without bound — with a coarse
     * watermark column (a date, say) every no-op run would re-land the
-    * full boundary-day slice. So the `== mark` rows are anti-joined
-    * (null-safe, all columns) against the landed rows at that value:
+    * full boundary-day slice. So the slice is anti-joined (null-safe,
+    * all columns) against the landed rows at the mark value:
     * steady-state no-op runs land nothing, while a late commit sharing
     * the mark value still lands because no landed row matches it. The
     * landed probe side is read with `column == mark` pushed to the
     * parquet scan — row-group stats prune everything but the boundary
     * files, so the probe is O(boundary slice), not O(table history).
-    * The source is scanned twice (`> mark` and `== mark`, disjoint
-    * pushed predicates), so total rows shipped from the source still
-    * equal the one `>=` slice.
+    * The source is scanned ONCE, with the one pushed `>=` predicate (a
+    * JDBC source gets a single `>=` query). Only the `== mark` rows can
+    * be dropped: every probe row holds exactly the mark value, so a row
+    * above the mark differs from all of them in the watermark column and
+    * never matches.
     *
     * The literal is cast to the column's own type — string-vs-bigint
     * comparison would coerce both sides to double and lose watermark
@@ -249,14 +251,11 @@ object PipelineRunner {
                                 path: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val mark = lit(d.lastValue).cast(df.schema(d.column).dataType)
+    val slice = df.where(col(d.column) >= mark)
     path.flatMap(landedBoundary(ctx, _, d.column, mark, df.schema)) match {
       case Some(prior) =>
-        val boundary = df.where(col(d.column) === mark)
-        val cond = df.columns.map(c => boundary(c) <=> prior(c)).reduce(_ && _)
-        df.where(col(d.column) > mark)
-          .unionByName(boundary.join(prior, cond, "left_anti"))
-      case None =>
-        df.where(col(d.column) >= mark)
+        slice.join(prior, df.columns.map(c => slice(c) <=> prior(c)).reduce(_ && _), "left_anti")
+      case None => slice
     }
   }
 

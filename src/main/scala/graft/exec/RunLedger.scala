@@ -25,6 +25,18 @@ import org.apache.spark.sql.functions._
   * Row counts come from `Dataset.observe` metrics collected DURING the
   * landing write itself — never from a second scan of the data, which
   * at 100 TB would double the extract cost.
+  *
+  * Every append lands as ONE parquet file of its own and runs no Spark
+  * job: the rows are already on the driver, so they go straight
+  * through Spark's own parquet writer factory (the one its write tasks
+  * use, so the file format is exactly a `df.write.parquet` file) into a
+  * hidden `.part-<uuid>…inprogress` name, then are renamed to
+  * `part-00000-<uuid>-c000.snappy.parquet` — the temp-then-rename of
+  * [[graft.io.Watermarks.set]]. Readers never see a torn file (a crash
+  * leaves only hidden residue, which Spark's listing and [[compact]]
+  * skip), and concurrent appends — the tasks of one
+  * `Tasks.runDag(parallelism > 1)` sharing a ledger dir — never share
+  * a staging directory, so none of them can fail or lose a row.
   */
 object RunLedger {
 
@@ -47,15 +59,13 @@ object RunLedger {
       started_ms: Long,
       wall_ms: Long)
 
-  /** Append one run row (a single-row local-relation write — one tiny
-    * parquet file per run; [[compact]] folds the accretion on whatever
-    * cadence the scheduler prefers).
+  /** Append one run row (one tiny parquet file per run, no Spark job;
+    * [[compact]] folds the accretion on whatever cadence the scheduler
+    * prefers).
     */
   def append(spark: SparkSession, dir: String, e: Entry): Unit = {
     import spark.implicits._
-    Seq(e).toDF()
-      .withColumn("started_at", timestamp_millis(col("started_ms")))
-      .write.mode("append").parquet(dir)
+    landLocal(Seq(e).toDF(), dir)
   }
 
   /** The full run history, newest first. */
@@ -202,13 +212,49 @@ object RunLedger {
       started_ms: Option[Long], // first attempt's epoch ms (ran tasks only)
       wall_ms: Option[Long]) // whole attempt sequence
 
-  /** Append a DAG run's outcome rows (one small-file write per run). */
+  /** Append a DAG run's outcome rows (one small file per run, no
+    * Spark job).
+    */
   def appendDagRun(spark: SparkSession, dir: String,
                    entries: Seq[DagEntry]): Unit = {
     import spark.implicits._
-    entries.toDF()
-      .withColumn("started_at", timestamp_millis(col("started_ms")))
-      .write.mode("append").parquet(dir)
+    landLocal(entries.toDF(), dir)
+  }
+
+  /** Land a driver-local frame of ledger rows, plus its `started_at`
+    * timestamp, as one parquet file in `dir` without a Spark job (see
+    * the object doc). The frame is a local relation, so collecting its
+    * physical plan runs nothing; the file is written under a hidden
+    * name and renamed into place, and a failed write removes it.
+    */
+  private def landLocal(rows: DataFrame, dir: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val spark = rows.sparkSession
+    val plan = rows.withColumn("started_at", timestamp_millis(col("started_ms")))
+      .queryExecution.executedPlan
+    val data = plan.executeCollect()
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, plan.schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}"
+    val target = new Path(dir, name)
+    val tmp = new Path(dir, s".$name.inprogress")
+    val fs = target.getFileSystem(job.getConfiguration)
+    try {
+      val out = factory.newInstance(tmp.toString, plan.schema, task)
+      try data.foreach(out.write) finally out.close()
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"ledger append rename failed: $tmp -> $target")
+    } catch {
+      case e: Throwable =>
+        scala.util.Try(fs.delete(tmp, false))
+        throw e
+    }
   }
 
   /** The full DAG-run history, newest first (skips carry no timing and

@@ -185,7 +185,9 @@ object Tasks {
     * each extract/transform appends its run row AFTER its writes
     * succeed ([[RunLedger]]), so a DAG run leaves one ledger row per
     * SUCCEEDED task and none for failed/skipped ones — the ledger
-    * stays "what actually landed".
+    * stays "what actually landed". Concurrent tasks share one ledger
+    * dir safely: each append renames its own file into place, with no
+    * staging directory shared between appends.
     *
     * `sleep` is the retry-wait primitive (default `Thread.sleep`) —
     * a seam so tests assert the exact requested waits without

@@ -165,14 +165,14 @@ object JournalMerge {
         case _ => throw new IllegalStateException(
           s"no primary key registered for $schema.$table")
       }
-      val cols = if (wh.exists(schema, table)) wh.columns(schema, table)
-                 else journal.columns.toSeq
+      // one existence probe and one master read: the column list comes
+      // from the same frame the delta merge reads
+      val master = if (wh.exists(schema, table)) Some(wh.read(schema, table)) else None
+      val cols = master.fold(journal.columns.toSeq)(_.columns.toSeq)
       val newMaster = mode match {
         case MergeMode.Full => full(journal, pks).select(cols.map(col): _*)
         case MergeMode.Delta =>
-          val master = if (wh.exists(schema, table)) wh.read(schema, table)
-                       else journal.where(lit(false)).select(cols.map(col): _*)
-          delta(master, journal, pks)
+          delta(master.getOrElse(journal.where(lit(false)).select(cols.map(col): _*)), journal, pks)
       }
       wh.replace(newMaster, schema, table)
       wh.flipRecordState(schema, journalTable)

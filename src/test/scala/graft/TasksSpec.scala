@@ -614,6 +614,108 @@ class TasksSpec extends AnyFunSuite {
     assert(after === before, "compaction preserves every row and the read order")
   }
 
+  private def ledgerEntry(id: String, i: Int) = graft.exec.RunLedger.Entry(
+    id, "extract", Seq(s"src_$i"), None, rows_out = i.toLong,
+    landed_path = s"/lake/t$i", started_ms = 1000L * i, wall_ms = 5L)
+
+  private def dagEntry(id: String, i: Int) = graft.exec.RunLedger.DagEntry(
+    "run", id, "succeeded", 1, Nil, None, None, Some(1000L * i), Some(5L))
+
+  test("ledger: concurrent runDag tasks append into one dir — every append lands, one row each") {
+    import graft.exec.{DagStatus, EtlTask, RunLedger, Tasks}
+    val work = SparkTestBase.tmpDir("graft_ledger_concurrent")
+    val (dir, dagDir) = (s"$work/led", s"$work/dag")
+    val rounds = 5
+    val perRound = 8
+    (1 to rounds).foreach { r =>
+      // the barrier lines up each batch of four pool threads so their
+      // appends really overlap
+      val barrier = new java.util.concurrent.CyclicBarrier(4)
+      val tasks = (1 to perRound).map { i =>
+        val id = s"r${r}_t$i"
+        EtlTask(id, () => {
+          barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          RunLedger.append(spark, dir, ledgerEntry(id, i))
+          RunLedger.appendDagRun(spark, dagDir, Seq(dagEntry(id, i)))
+        })
+      }
+      val run = Tasks.runDag(tasks, parallelism = 4)
+      assert(run.succeeded, s"round $r: " + run.status.collect {
+        case (id, DagStatus.Failed(e)) => s"$id: $e"
+      }.mkString("; "))
+    }
+    val expected = for (r <- 1 to rounds; i <- 1 to perRound) yield s"r${r}_t$i"
+    val ids = RunLedger.read(spark, dir).select("task_id").as[String].collect().sorted.toSeq
+    assert(ids === expected.sorted, "exactly one ledger row per append")
+    val dagIds = RunLedger.readDagRuns(spark, dagDir).select("task_id").as[String]
+      .collect().sorted.toSeq
+    assert(dagIds === expected.sorted, "exactly one DAG-record row per append")
+  }
+
+  test("ledger: an append runs no Spark job") {
+    import graft.exec.RunLedger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = SparkTestBase.tmpDir("graft_ledger_nojob") + "/led"
+    val group = s"ledger-nojob-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "ledger")
+      RunLedger.append(spark, dir, ledgerEntry("t", 1))
+      RunLedger.appendDagRun(spark, s"$dir-dag", Seq(dagEntry("t", 1), dagEntry("u", 2)))
+      // listener events arrive in order: once this marker job is seen,
+      // every job the appends started has been seen too
+      spark.sparkContext.setJobGroup(group, "marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.toArray.toSeq === Seq("marker"), "the appends must launch no job")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(RunLedger.read(spark, dir).count() === 1)
+    assert(RunLedger.readDagRuns(spark, s"$dir-dag").count() === 2)
+  }
+
+  test("ledger: hidden in-progress residue of a crashed append is ignored by read and compact") {
+    import graft.exec.RunLedger
+    val work = SparkTestBase.tmpDir("graft_ledger_residue")
+    def withResidue(dir: String): Unit = Files.write(
+      Paths.get(dir, ".part-00000-x-c000.snappy.parquet.inprogress"),
+      "not a parquet file".getBytes("UTF-8"))
+    def parquetFiles(dir: String) = new java.io.File(dir).listFiles()
+      .count(f => f.isFile && f.getName.endsWith(".parquet"))
+    // a clean dir and one with residue, same appends
+    Seq("clean", "crashed").foreach { name =>
+      (1 to 3).foreach { i =>
+        RunLedger.append(spark, s"$work/$name/led", ledgerEntry(s"t$i", i))
+        RunLedger.appendDagRun(spark, s"$work/$name/dag", Seq(dagEntry(s"t$i", i)))
+      }
+    }
+    withResidue(s"$work/crashed/led")
+    withResidue(s"$work/crashed/dag")
+    def ledgerRows(name: String) = RunLedger.read(spark, s"$work/$name/led")
+      .select("task_id", "rows_out").as[(String, Long)].collect().toSeq
+    def dagRows(name: String) = RunLedger.readDagRuns(spark, s"$work/$name/dag")
+      .select("task_id", "started_ms").as[(String, Option[Long])].collect().toSeq
+    assert(ledgerRows("crashed") === ledgerRows("clean"))
+    assert(dagRows("crashed") === dagRows("clean"))
+    assert(ledgerRows("crashed").map(_._1) === Seq("t3", "t2", "t1"))
+    assert(parquetFiles(s"$work/crashed/led") === 3)
+    Seq("led", "dag").foreach { d =>
+      assert(RunLedger.compact(spark, s"$work/crashed/$d") ===
+        RunLedger.compact(spark, s"$work/clean/$d"))
+    }
+    assert(ledgerRows("crashed") === ledgerRows("clean"))
+    assert(dagRows("crashed") === dagRows("clean"))
+  }
+
   test("RunTask rejects malformed invocations with actionable errors") {
     val env = Map("GRAFT_LAKE" -> "/x", "GRAFT_WAREHOUSE" -> "/x")
     val usage = intercept[ConfigException](RunTask.run(spark, List("frobnicate"), env))
