@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Trainable language identification — the CCNet/fastText-lid shape:
@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   * projection; training is one hash-aggregate over ≤ K·numBuckets
   * keys; the model is O(K·numBuckets) rows — bounded and broadcast at
   * score time (≈ a few MB for K≈10, B=2^16), so scoring is one
-  * broadcast join per distinct (doc, bucket) plus a bounded per-doc
-  * array fold. No corpus-sized driver state, no quadratic term.
+  * broadcast join per distinct (doc, bucket) plus one per-doc window
+  * fold ([[TextOps.orderedDocSums]], K sums at once). No corpus-sized
+  * driver state, no quadratic term.
   */
 object LangModel {
 
@@ -143,13 +144,7 @@ object LangModel {
     // column; positional __c<i> names are collision-proof for ANY label
     // each language's per-bucket weight log(cnt + α) − log(tot + αB)
     // depends only on (bucket, lang), so it is computed ONCE here in
-    // the broadcast model frame instead of twice per (doc, bucket,
-    // lang) element inside the interpreted fold below (ArrayAggregate
-    // is CodegenFallback — every lambda op is interpreted, and the two
-    // StrictMath.log calls dominated it). Same Spark expressions over
-    // the same values, just earlier in the plan → identical doubles,
-    // and the fold's multiply/add sequence is unchanged → scores stay
-    // bit-identical (the golden pins hold across the rewrite).
+    // the broadcast model frame, not per (doc, bucket, lang) element.
     val wide = buckets.groupBy("bucket")
       .pivot("lang", langs.map(_._1)).agg(first(col("cnt")))
       .toDF("bucket" +: langs.indices.map(i => s"__c$i"): _*)
@@ -161,40 +156,14 @@ object LangModel {
         docs.select(col(idCol), col(textCol)), textCol, ns, numBuckets,
         Seq(idCol))
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("__m"))
-    // the per-(doc, bucket, lang) product m·w — and the unseen-bucket
-    // coalesce — move into this post-join projection, which is
-    // whole-stage-codegen'd. Same operands in the same order →
-    // identical product doubles → identical sums.
-    val products = docBuckets
-      .join(broadcast(wide), Seq("bucket"), "left")
-      .select(col(idCol) +: col("bucket") +:
-        langs.zipWithIndex.map { case ((_, _, _, unseen), i) =>
-          (col("__m").cast("double") *
-            coalesce(col(s"__w$i"), lit(unseen))).as(s"__p$i")
-        }: _*)
-    // per-language SEQUENTIAL sum in bucket order — the repo's
-    // deterministic-sum contract — as window sums over the per-doc
-    // partition ordered by bucket: Sum's update expression is
-    // coalesce(sum, 0.0) + p applied row by row in sort order, the
-    // IDENTICAL IEEE op sequence to the interpreted aggregate() fold
-    // it replaces (acc = 0.0; acc + p per element, bucket-ascending),
-    // so scores are bit-identical (the golden pins hold across the
-    // rewrite) — but the adds now run in WindowExec's compiled
-    // aggregate processor instead of a CodegenFallback lambda per
-    // element per language. bucket is unique per doc after the
-    // (id, bucket) pre-aggregation, so the order is total.
-    import org.apache.spark.sql.expressions.Window
-    val byBucket = Window.partitionBy(col(idCol)).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val summed = products
-      .select(col(idCol) +: langs.indices.map(i =>
-        sum(col(s"__p$i")).over(byBucket).as(s"__s$i")): _*)
-      // one row per doc: every row of a partition carries the same
-      // K sums, so max() selects exactly that value — and the groupBy
-      // rides the window's hash partitioning (no new exchange)
-      .groupBy(col(idCol))
-      .agg(max(col("__s0")).as("__s0"),
-        langs.indices.drop(1).map(i => max(col(s"__s$i")).as(s"__s$i")): _*)
+    // per-language SEQUENTIAL sum in bucket order of the product m·w
+    // (unseen buckets take the collected constant) — same operands in
+    // the same order → identical product doubles → identical sums
+    val summed = TextOps.orderedDocSums(
+      docBuckets.join(broadcast(wide), Seq("bucket"), "left"), idCol,
+      Seq("bucket"), langs.zipWithIndex.map { case ((_, _, _, unseen), i) =>
+        col("__m").cast("double") * coalesce(col(s"__w$i"), lit(unseen))
+      })
     val lps = langs.zipWithIndex.map { case ((l, _, prior, _), i) =>
       (l, lit(prior) + col(s"__s$i"))
     }
@@ -238,14 +207,4 @@ object LangModel {
   def predictions(spark: org.apache.spark.sql.SparkSession,
                   snapshotDir: String): DataFrame =
     spark.read.parquet(s"$snapshotDir/predictions")
-
-  /** Train-and-score convenience (self-scoring). */
-  def langScore(labeled: DataFrame, langCol: String = "lang",
-                alpha: Double = 0.5,
-                idCol: String = "doc_id", textCol: String = "text",
-                ns: Seq[Int] = DefaultNs,
-                numBuckets: Int = DefaultBuckets): DataFrame =
-    langScoreAgainst(labeled,
-      langTrain(labeled, langCol, textCol, ns, numBuckets),
-      alpha, idCol, textCol, ns, numBuckets)
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * Scoring: per-doc logit = prior + (Σ_f m_f·w_f) / n_features —
   * fastText's mean-of-feature-vectors normalization, making the score
   * length-invariant — and quality = sigmoid(logit). The per-doc double
-  * sum folds SEQUENTIALLY in bucket order (`sort_array` + `aggregate`,
+  * sum folds SEQUENTIALLY in bucket order ([[TextOps.orderedDocSums]],
   * the q31/lmPerplexity contract) so scores are bit-identical across
   * runs and partitionings. Logs/exp route through StrictMath → scores
   * are platform-stable but NOT oracle-comparable across engines on a
@@ -42,31 +42,29 @@ import org.apache.spark.sql.functions._
   * model is O(numBuckets) rows — bounded, broadcastable); scoring
   * joins one row per DISTINCT doc-bucket against the model (an
   * equi-join on an int key, broadcast when the model is small) and
-  * groups bounded per-doc arrays. No corpus-sized driver state, no
-  * quadratic term anywhere.
+  * folds each doc's rows in one window. No corpus-sized driver state,
+  * no quadratic term anywhere.
   */
 object QualityModel {
 
   /** One row per feature OCCURRENCE: (extra..., bucket). Features are
-    * word unigrams plus (when `bigrams`) word bigrams, hashed with
-    * xxhash64 (Spark's fixed seed 42) into [0, numBuckets) — the
-    * fastText hashing trick. Narrow: explode only, no shuffle.
+    * the [[TextOps.tokens]] word unigrams plus (when `bigrams`) word
+    * bigrams, hashed with xxhash64 (Spark's fixed seed 42) into
+    * [0, numBuckets) — the fastText hashing trick. The n-gram strings
+    * never materialize: [[graft.functions.ArrayExprs.tokenWindowHashes]]
+    * hashes each 1- and 2-token window's byte slice in place, the same
+    * bits as xxhash64 of the space-joined words (FunctionsSpec pins
+    * it). NULL text yields no rows. Narrow: explode only, no shuffle.
     */
   private def featureStream(docs: DataFrame, textCol: String,
                             numBuckets: Int, bigrams: Boolean,
                             carry: Seq[String]): DataFrame = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    val base = docs.select(
-      carry.map(col) :+ TextOps.tokens(col(textCol)).as("__toks"): _*)
-    val toks = col("__toks")
-    val bi = when(size(toks) >= 2,
-      transform(sequence(lit(0), size(toks) - 2),
-        i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2))))
-      .otherwise(array().cast("array<string>"))
-    val feats = if (bigrams) concat(toks, bi) else toks
-    base.select(carry.map(col) :+ explode(feats).as("__f"): _*)
-      .withColumn("bucket", pmod(xxhash64(col("__f")), lit(numBuckets.toLong)))
-      .drop("__f")
+    def windows(n: Int) = graft.functions.ArrayExprs.tokenWindowHashes(col(textCol), n)
+    val hashes = if (bigrams) concat(windows(1), windows(2)) else windows(1)
+    docs.select(carry.map(col) :+ explode(hashes).as("__h"): _*)
+      .select(carry.map(col) :+
+        pmod(col("__h"), lit(numBuckets.toLong)).as("bucket"): _*)
   }
 
   /** Train the classifier ONCE and get a persistable model — one
@@ -141,30 +139,11 @@ object QualityModel {
           log(col("__post").cast("double") + aB)) -
           (log(coalesce(col("__neg"), lit(0L)).cast("double") + lit(alpha)) -
             log(col("__negt").cast("double") + aB))).as("__w"))
-    // sequential fold in bucket order: deterministic double sum — as a
-    // window sum over the per-doc partition ordered by bucket (unique
-    // per doc after the (id, bucket) pre-aggregation). Sum's update is
-    // coalesce(sum, 0.0) + x row-by-row in sort order, the IDENTICAL
-    // IEEE op sequence to the interpreted aggregate() fold over
-    // sort_array(collect_list(...)) it replaces (acc = 0.0; acc + __mw
-    // bucket-ascending) — scores stay bit-identical (the fixture spec
-    // and golden digests pin it) but the adds run compiled in
-    // WindowExec instead of a CodegenFallback lambda per element. The
-    // groupBy rides the window's hash partitioning (no new exchange);
-    // max() selects the one per-partition sum every row carries.
-    val byBucket = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("bucket"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val perDoc = contrib
-      .select(col(idCol), col("bucket"), col("__m"),
-        (col("__m").cast("double") * col("__w")).as("__mw"))
-      .withColumn("__wsum", sum(col("__mw")).over(byBucket))
-      .groupBy(col(idCol))
-      .agg(sum(col("__m")).as("n_features"), max(col("__wsum")).as("__sum"))
+    val perDoc = TextOps.orderedDocSums(contrib, idCol, Seq("bucket"),
+        Seq(col("__m").cast("double") * col("__w")))
       .crossJoin(broadcast(prior))
-      .select(col(idCol), col("n_features"),
-        (col("__prior") + col("__sum") / col("n_features").cast("double"))
+      .select(col(idCol), col("__n").as("n_features"),
+        (col("__prior") + col("__s0") / col("__n").cast("double"))
           .as("logit"))
       .withColumn("quality", lit(1.0) / (lit(1.0) + exp(negate(col("logit")))))
     docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")

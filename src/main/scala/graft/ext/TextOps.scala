@@ -1010,10 +1010,10 @@ object TextOps {
     *
     * Determinism: floating-point sums are order-dependent, so the
     * per-doc Σ log2 p folds SEQUENTIALLY over the doc's distinct
-    * bigrams in (prev, cur) sort order — `sort_array` + `aggregate` —
-    * making scores bit-identical across runs, partitionings, and
-    * cluster sizes (the q31/cosine sequential-fold contract; repeated
-    * bigrams fold once as multiplicity × log2 p). Spark's LOG/POWER
+    * bigrams in (prev, cur) sort order — [[orderedDocSums]] — making
+    * scores bit-identical across runs, partitionings, and cluster
+    * sizes (the q31/cosine sequential-fold contract; repeated bigrams
+    * fold once as multiplicity × log2 p). Spark's LOG/POWER
     * route through StrictMath (fdlibm), so the scores are also
     * platform-stable — but NOT oracle-comparable against engines on a
     * different libm, which is why the registry face of this operator
@@ -1022,8 +1022,8 @@ object TextOps {
     * Scale shape: counts are map-side-combinable hash aggs; the doc →
     * model joins are equi-joins on bigram/context keys carrying one row
     * per DISTINCT doc-bigram (never one per token); V and the model
-    * tables shuffle once. The per-doc fold groups bounded arrays
-    * (distinct bigrams per doc), never corpus-sized state.
+    * tables shuffle once. The per-doc fold is a window over the doc's
+    * distinct bigrams, never corpus-sized state.
     */
   def lmPerplexity(docs: DataFrame, addK: Double = 0.5,
                    idCol: String = "doc_id", textCol: String = "text",
@@ -1035,10 +1035,7 @@ object TextOps {
     // of twice, and the eager cut stops the scoring joins from
     // re-exploding it again (the r20-before q73 plan: 10 corpus scans,
     // 34 exchanges — the perLanguageSurprisal rollup lesson, SCALE_r18).
-    val docBg = docNgrams(docs, idCol, textCol, n)
-      .groupBy(col(idCol), col("prev"), col("cur"))
-      .agg(count(lit(1)).as("__m"))
-      .localCheckpoint(true)
+    val docBg = docBigramCounts(docs, idCol, textCol, n).localCheckpoint(true)
     val c2 = docBg.groupBy("prev", "cur").agg(sum(col("__m")).as("__c2"))
     val vocabRow = docs
       .select(explode(tokens(col(textCol))).as("token"))
@@ -1050,7 +1047,7 @@ object TextOps {
   }
 
   /** Per-row n-gram (context, token) pairs of a document table — the
-    * shared derivation of [[lmTrain]] and [[lmPerplexityAgainst]]
+    * shared derivation of [[lmTrain]] and [[docBigramCounts]]
     * (narrow, no shuffle). `prev` is the n−1-token context joined on
     * spaces (tokens contain no spaces by the tokenizer's definition,
     * so the join is unambiguous); n=2 keeps the original bigram
@@ -1066,6 +1063,62 @@ object TextOps {
         s"transform(sequence(0, size(__t) - $n), i -> struct($ctx AS prev, __t[i+${n - 1}] AS cur))"))
         .as("__bg"))
       .select(col(idCol), col("__bg.prev").as("prev"), col("__bg.cur").as("cur"))
+  }
+
+  /** Distinct (doc, prev, cur) n-grams with multiplicity `__m` — the
+    * join and fold unit of every LM scorer.
+    */
+  private def docBigramCounts(docs: DataFrame, idCol: String,
+                              textCol: String, n: Int): DataFrame =
+    docNgrams(docs, idCol, textCol, n)
+      .groupBy(col(idCol), col("prev"), col("cur"))
+      .agg(count(lit(1)).as("__m"))
+
+  /** The deterministic per-doc double sum every linear scorer folds
+    * (the LM and KN perplexities, [[QualityModel]], [[LangModel]]):
+    * one row per doc of `joined` — which carries one row per distinct
+    * (doc, `orderCols`) key with its multiplicity `__m` — holding
+    * `__n` = Σ `__m` and, per term i, `__s<i>` = Σ term_i folded in
+    * `orderCols` order.
+    *
+    * Each term sum is a window sum over the doc partition ordered by
+    * the key, unique per doc, so the order is total. Sum's update is
+    * coalesce(acc, 0.0) + x applied row by row in sort order: the same
+    * IEEE op sequence as the interpreted `aggregate()` fold over
+    * `sort_array(collect_list(...))` this replaced (acc = 0.0; acc + x
+    * per element, key-ascending), so scores are bit-identical across
+    * runs and partitionings (the StrictMath fixtures and golden
+    * digests pin it), with the adds compiled in WindowExec. Every row
+    * of a partition carries the same sums, so the `groupBy` max()
+    * selects exactly that value, and it rides the window's hash
+    * partitioning (no new exchange).
+    */
+  private[ext] def orderedDocSums(joined: DataFrame, idCol: String,
+                                  orderCols: Seq[String],
+                                  terms: Seq[Column]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byKey = Window.partitionBy(col(idCol)).orderBy(orderCols.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    joined
+      .select(col(idCol) +: col("__m") +: terms.zipWithIndex.map { case (t, i) =>
+        sum(t).over(byKey).as(s"__s$i") }: _*)
+      .groupBy(col(idCol))
+      .agg(sum(col("__m")).as("__n"), terms.indices.map(i =>
+        max(col(s"__s$i")).as(s"__s$i")): _*)
+  }
+
+  /** The LM scorers' shared tail: fold each doc's m·log2 p over its
+    * distinct bigrams, turn the sum into cross-entropy and perplexity,
+    * and left-join back so docs with no bigrams score NULL.
+    */
+  private def perplexityOf(docIds: DataFrame, scored: DataFrame,
+                           idCol: String): DataFrame = {
+    val perDoc = orderedDocSums(scored, idCol, Seq("prev", "cur"),
+        Seq(col("__m").cast("double") * col("__logp")))
+      .select(col(idCol), col("__n").as("n_bigrams"),
+        (negate(col("__s0")) / col("__n").cast("double")).as("cross_entropy"))
+      .withColumn("perplexity", pow(lit(2.0), col("cross_entropy")))
+    docIds.join(perDoc, Seq(idCol), "left")
   }
 
   /** Train the n-gram LM ONCE (default bigram; the model is bound to
@@ -1107,11 +1160,8 @@ object TextOps {
   def lmPerplexityAgainst(docs: DataFrame, model: DataFrame, addK: Double = 0.5,
                           idCol: String = "doc_id", textCol: String = "text",
                           n: Int = 2): DataFrame = {
-    // distinct doc-bigrams with multiplicity: the join + fold unit
-    val docBg = docNgrams(docs, idCol, textCol, n)
-      .groupBy(col(idCol), col("prev"), col("cur"))
-      .agg(count(lit(1)).as("__m"))
-    scoreDocBigrams(docs.select(col(idCol)), docBg, model, addK, idCol)
+    scoreDocBigrams(docs.select(col(idCol)),
+      docBigramCounts(docs, idCol, textCol, n), model, addK, idCol)
   }
 
   /** The scoring back half shared by [[lmPerplexity]] (which feeds it a
@@ -1136,30 +1186,7 @@ object TextOps {
         (log(2.0, coalesce(col("__c2"), lit(0L)).cast("double") + lit(addK)) -
           log(2.0, coalesce(col("__c1"), lit(0L)).cast("double") + lit(addK) * col("__v")))
           .as("__logp"))
-    // sequential fold in (prev, cur) order: deterministic double sum —
-    // as a window sum over the per-doc partition ordered by (prev,
-    // cur) (unique per doc after the docBg pre-aggregation). Sum's
-    // update is coalesce(sum, 0.0) + x row-by-row in sort order, the
-    // IDENTICAL IEEE op sequence to the interpreted aggregate() fold
-    // over sort_array(collect_list(...)) it replaces — bit-identical
-    // scores (the StrictMath fixtures and golden digests pin it), adds
-    // compiled in WindowExec instead of a CodegenFallback lambda. The
-    // groupBy rides the window's partitioning; max() selects the one
-    // per-partition sum every row carries.
-    val byBigram = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("prev"), col("cur"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val perDoc = scored
-      .select(col(idCol), col("prev"), col("cur"), col("__m"),
-        (col("__m").cast("double") * col("__logp")).as("__mlogp"))
-      .withColumn("__wsum", sum(col("__mlogp")).over(byBigram))
-      .groupBy(col(idCol))
-      .agg(sum(col("__m")).as("n_bigrams"), max(col("__wsum")).as("__sum"))
-      .select(col(idCol), col("n_bigrams"),
-        (negate(col("__sum")) / col("n_bigrams").cast("double")).as("cross_entropy"))
-      .withColumn("perplexity", pow(lit(2.0), col("cross_entropy")))
-    docIds.join(perDoc, Seq(idCol), "left")
+    perplexityOf(docIds, scored, idCol)
   }
 
   /** Interpolated KNESER-NEY scoring against the SAME persisted model
@@ -1201,9 +1228,6 @@ object TextOps {
     val totals = c2.agg(count(lit(1)).cast("double").as("__t"))
       .crossJoin(model.where(col("prev").isNull)
         .select(col("__c2").cast("double").as("__v")))
-    val docBg = docNgrams(docs, idCol, textCol, n)
-      .groupBy(col(idCol), col("prev"), col("cur"))
-      .agg(count(lit(1)).as("__m"))
     // the probability tree, in a FIXED associativity (the spec's
     // independent model mirrors it term for term)
     val pcont = (coalesce(col("__n1p_cur"), lit(0L)).cast("double") + lit(1.0)) /
@@ -1214,30 +1238,14 @@ object TextOps {
         lit(discount) * col("__n1p_prev").cast("double") /
           col("__c1").cast("double") * pcont
     val p = when(col("__c1").isNotNull, pSeen).otherwise(pcont)
-    val scored = docBg
+    val scored = docBigramCounts(docs, idCol, textCol, n)
       .join(c2, Seq("prev", "cur"), "left")
       .join(c1, Seq("prev"), "left")
       .join(contCur, Seq("cur"), "left")
       .crossJoin(broadcast(totals))
       .select(col(idCol), col("prev"), col("cur"), col("__m"),
         log(2.0, p).as("__logp"))
-    // same window-sum spelling as [[scoreDocBigrams]]'s fold — the
-    // identical IEEE op sequence to the sorted interpreted fold, run
-    // compiled (see the comment there)
-    val byBigram = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("prev"), col("cur"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val perDoc = scored
-      .select(col(idCol), col("prev"), col("cur"), col("__m"),
-        (col("__m").cast("double") * col("__logp")).as("__mlogp"))
-      .withColumn("__wsum", sum(col("__mlogp")).over(byBigram))
-      .groupBy(col(idCol))
-      .agg(sum(col("__m")).as("n_bigrams"), max(col("__wsum")).as("__sum"))
-      .select(col(idCol), col("n_bigrams"),
-        (negate(col("__sum")) / col("n_bigrams").cast("double")).as("cross_entropy"))
-      .withColumn("perplexity", pow(lit(2.0), col("cross_entropy")))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+    perplexityOf(docs.select(col(idCol)), scored, idCol)
   }
 
   /** Keep-rate rollup of any report frame carrying a boolean `keep`

@@ -440,7 +440,8 @@ case class CharNgramBuckets(child: Expression, ns: Seq[Int], numBuckets: Int)
   * entry point the xxhash64() SQL function uses
   * (`XXH64.hashUTF8String` over a zero-copy `UTF8String.fromAddress`
   * view). Fewer than n tokens → empty array (split("") = [""] — one
-  * empty segment, matching Spark's split semantics).
+  * empty segment, matching Spark's split semantics). NULL text → NULL
+  * (the Column pipeline gave an empty array; both explode to no rows).
   */
 case class TokenWindowHashes(child: Expression, n: Int)
   extends UnaryExpression with ExpectsInputTypes with CodegenFallback {

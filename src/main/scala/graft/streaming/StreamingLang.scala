@@ -32,8 +32,8 @@ import graft.ext.LangModel
   * Scale shape per micro-batch: the model is bounded (≤ K·2^16 count
   * rows) and broadcasts; scoring is the [[graft.ext.LangModel
   * .langScoreAgainst]] plan — feature explode, one broadcast join,
-  * one per-doc fold — all ∝ batch size. No corpus rescans, no state
-  * store.
+  * one per-doc window fold ([[graft.ext.TextOps.orderedDocSums]]) —
+  * all ∝ batch size. No corpus rescans, no state store.
   */
 object StreamingLang {
 

@@ -1962,8 +1962,14 @@ class ExtSpec extends AnyFunSuite {
       (3L, "bad awful", false), (4L, "bad fine", false))
       .toDF("doc_id", "text", "label")
     val model = QualityModel.qualityTrain(labeled)
-    val alien = docsDf(900L -> "zzq wwx vvy")
-    val out = QualityModel.qualityScoreAgainst(alien, model)
+    // a NULL-text doc yields no features: its row survives the left
+    // join back to the ids with every score NULL
+    val alien = docsDf(900L -> "zzq wwx vvy", 901L -> null)
+    val scored = QualityModel.qualityScoreAgainst(alien, model)
+    val nullRow = scored.where($"doc_id" === 901L).collect()
+    assert(nullRow.length === 1 && (1 to 3).forall(nullRow.head.isNullAt),
+      s"NULL text must score NULL, got ${nullRow.toSeq}")
+    val out = scored.where($"doc_id" === 900L)
       .as[(Long, Long, Double, Double)].collect()
     assert(out.length === 1)
     val (_, n, logit, q) = out.head
@@ -2047,11 +2053,29 @@ class ExtSpec extends AnyFunSuite {
     assert(got._1 === "xx")
     assert(got._2 === lpXx, "exact StrictMath likelihood, bit for bit")
     assert(got._3 === lpXx - lpYy, "margin = winner minus runner-up")
-    // a doc with no features predicts NULL, never a guess
+    // a doc with no features (empty or NULL text) predicts NULL,
+    // never a guess
     val empty = LangModel.langScoreAgainst(
-        Seq((11L, "")).toDF("doc_id", "text"), model, numBuckets = b)
-      .select("lang_pred").collect().head
-    assert(empty.isNullAt(0))
+        Seq[(Long, String)]((11L, ""), (12L, null)).toDF("doc_id", "text"),
+        model, numBuckets = b)
+      .select("lang_pred").collect()
+    assert(empty.length === 2 && empty.forall(_.isNullAt(0)))
+  }
+
+  test("LangModel: langScoreAgainst is bit-identical under repartition") {
+    import graft.ext.LangModel
+    // the K-column user of the per-doc ordered fold: every language's
+    // likelihood sum must be independent of how the docs are split
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val model = LangModel.langTrain(docs)
+    def scores(d: org.apache.spark.sql.DataFrame) =
+      LangModel.langScoreAgainst(d, model)
+        .select("doc_id", "lang_pred", "logprob", "margin")
+        .as[(Long, String, Double, Double)].collect().sortBy(_._1).toSeq
+    val base = scores(docs)
+    assert(base.nonEmpty && base.exists(_._2 != null))
+    assert(scores(docs.repartition(7)) === base,
+      "per-doc fold order leaked partitioning into the score")
   }
 
   test("LangModel: crafted-language separability + parquet round-trip bit-identity") {

@@ -87,7 +87,7 @@ class FunctionsSpec extends AnyFunSuite {
       " leading and trailing ", "tab\tinside and\nnewline tokens",
       "你好 世界 今天 好", "😀🎉 party 🎂 time", "áb̂c d é f",
       "single", "", " ", "  ", "mixed 中文 and english words here",
-      ("tok " * 100).trim)
+      ("tok " * 100).trim, null)
     val df = fixtures.toDF("t")
     for (n <- Seq(1, 2, 3, 8)) {
       val rows = df.select(col("t"),
@@ -96,7 +96,16 @@ class FunctionsSpec extends AnyFunSuite {
           graft.functions.ArrayExprs.charWindowHashes(col("t"), n).as("nwc"),
           oldCharWindows(col("t"), n).as("oldc"))
         .collect()
-      rows.foreach { r =>
+      rows.filter(_.isNullAt(0)).foreach { r =>
+        // NULL text: the native expressions return NULL (explode → no
+        // rows, the featurizers' NULL-text contract); the old Column
+        // pipelines fall to their empty-array branch, which explodes
+        // to the same nothing
+        assert(r.isNullAt(1) && r.isNullAt(3),
+          s"window hashes of NULL text must be NULL for n=$n")
+        assert(r.getSeq[Long](2).isEmpty && r.getSeq[Long](4).isEmpty)
+      }
+      rows.filter(!_.isNullAt(0)).foreach { r =>
         assert(r.getSeq[Long](1) === r.getSeq[Long](2),
           s"token window hashes diverged for n=$n text=${r.getString(0)}")
         assert(r.getSeq[Long](3) === r.getSeq[Long](4),
