@@ -237,8 +237,9 @@ object CrawlScale {
     // parameters keep all); a page with no parseable links and no
     // inbound edge is absent from the rank snapshot and would be
     // inner-join-dropped — assert the premise instead of assuming it
-    val gatedN = spark.read.parquet(s"$workDir/pass1/out/__batch=0").count()
-    val ungatedN = spark.read.parquet(s"$workDir/pass1/uout/__batch=0").count()
+    import graft.streaming.BatchRoot
+    val gatedN = spark.read.parquet(BatchRoot.dir(s"$workDir/pass1/out", 0L)).count()
+    val ungatedN = spark.read.parquet(BatchRoot.dir(s"$workDir/pass1/uout", 0L)).count()
     println(s"CRAWLSCALE stream landed $gatedN gated / " +
       s"$ungatedN ungated rows/batch")
     require(gatedN == ungatedN,

@@ -659,7 +659,7 @@ object Multimodal {
     * per-clip frame count), so an unmaterialized lineage would re-run
     * the payload-decoding `mapPartitions` once per plan branch — the
     * batch-side mirror of the streaming sink's hashed-ONCE cache
-    * (`streaming/StreamingDedup.scala`, `multimodalSinkBatch`). An
+    * ([[graft.streaming.StreamingDedup.chunkSigAgainstIndexSink]]). An
     * eager local checkpoint materializes the tiny signature rows
     * (id + 16 bytes; payloads are NOT carried) and truncates the
     * decode lineage. Executor-loss recovery is the documented

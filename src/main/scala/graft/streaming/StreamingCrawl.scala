@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
   * [[graft.io.Warc.read]] face streams records and is the right tool
   * for a one-shot backfill).
   *
-  * Per micro-batch, in the family's shared replay contract
-  * (strictly-earlier index probe, per-batch partition overwrites —
-  * redelivery is idempotent):
+  * Per micro-batch, under the [[BatchRoot]] replay contract:
   *  1. parse every shard's `response` AND `conversion` (WET) records
   *     ([[graft.io.Warc.parseBytes]] — per-record gzip, HTTP
   *     envelopes, charset);
@@ -225,32 +223,24 @@ object StreamingCrawl {
             .otherwise(col("url"))
         else col("url"))
       .select("doc_id", "url", "__durl", "ts", "html", "__ct")
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // guard on a COMMITTED batch partition, not bare existence: an
-    // operator-pre-created (or crashed-first-batch) empty root would
-    // make the parquet read throw 'Unable to infer schema' and wedge
-    // the stream until manual cleanup
-    val hasIndex = fs.exists(idxPath) && fs.listStatus(idxPath)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-    val kept = (if (hasIndex)
-      graft.ext.Dedup.urlDedupAgainstIndex(pages,
-        spark.read.parquet(indexRoot).where(col("__batch") < batchId),
-        urlCol = "__durl")
-    else graft.ext.Dedup.urlDedup(pages, urlCol = "__durl")).cache()
-    try {
+    // an empty or crashed-first-batch index root cold-starts ([[BatchRoot.prior]])
+    val kept = BatchRoot.prior(spark, indexRoot, batchId) match {
+      case Some(index) =>
+        graft.ext.Dedup.urlDedupAgainstIndex(pages, index, urlCol = "__durl")
+      case None => graft.ext.Dedup.urlDedup(pages, urlCol = "__durl")
+    }
+    BatchRoot.cached(kept) {
       val lang = graft.ext.Html.htmlLang(col("html"))
       use(kept.select(col("doc_id"), col("url"), col("ts"), col("url_key"),
         when(lang =!= "", lang).otherwise(lit("en")).as("lang"),
         graft.ext.Html.routedText(col("html"), col("__ct")).as("text")))
-      StreamingDedup.landBatchChecked(
-        graft.ext.Dedup.urlKeyIndex(kept, urlCol = "__durl"),
-        s"$indexRoot/__batch=$batchId")
+      BatchRoot.land(graft.ext.Dedup.urlKeyIndex(kept, urlCol = "__durl"),
+        indexRoot, batchId)
       // only after every landing of the batch committed: advance the
       // PSL snapshot (a crash above replays against the same earlier
       // snapshot; a crash below re-advances with identical content)
       advancePsl()
-    } finally kept.unpersist()
+    }
   }
 
   /** The per-batch PSL probe: the latest strictly-earlier landed
@@ -263,16 +253,8 @@ object StreamingCrawl {
                             batchId: Long): (DataFrame, () => Unit) = {
     val spark = df.sparkSession
     val digest = graft.ext.LinkGraph.pslRulesDigest(rules)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevDir: Option[String] =
-      if (!fs.exists(rootPath)) None
-      else fs.listStatus(rootPath).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-        .map(s => s.getPath.getName.stripPrefix("__batch=").toLong)
-        .filter(_ < batchId)
-        .sorted.lastOption
-        .map(id => s"$root/__batch=$id")
+    val prevDir = BatchRoot.batchIds(spark, root).filter(_ < batchId)
+      .lastOption.map(BatchRoot.dir(root, _))
     // the batch's distinct url hosts, cut once: the merge's anti-join
     // probe AND (bootstrap) the full fold both consume it, and its
     // lineage would otherwise re-parse the batch's WARC bytes
@@ -290,7 +272,7 @@ object StreamingCrawl {
     }
     (merged, () => {
       graft.ext.LinkGraph.writePslSnapshotTable(spark, merged, rules,
-        digest, s"$root/__batch=$batchId")
+        digest, BatchRoot.dir(root, batchId))
       ()
     })
   }
@@ -314,9 +296,9 @@ object StreamingCrawl {
       anchorSnapshotDir, blockKeywords, maxKeywordRate,
       pslRulesPath, pslSnapshotRoot)(batch, batchId) {
       extracted =>
-        StreamingDedup.landBatchChecked(
+        BatchRoot.land(
           extracted.drop("lang"), // the standalone sink's landed schema
-          s"$outRoot/__batch=$batchId")
+          outRoot, batchId)
     }
 
   /** THE FULL PIPELINE's streaming face (q132's batch composition):

@@ -37,90 +37,32 @@ object StreamingDedup {
     * against the persisted digest index ([[graft.ext.Dedup.exactIndex]]
     * layout). Per micro-batch: probe the index (drop texts any earlier
     * batch carried, keep the lowest id within the batch), land
-    * survivors under `outRoot/b<batchId>`, and roll the index forward
-    * by writing the batch's digests under `indexRoot/b<batchId>`.
+    * survivors under `outRoot/__batch=<id>`, and roll the index forward
+    * by writing the batch's digests under `indexRoot/__batch=<id>`.
     *
     * Complements [[exactWithinWatermark]] from the other end of the
     * state spectrum: watermark state is bounded but forgets; the
     * digest index REMEMBERS everything at 16 bytes per distinct text —
-    * unbounded but tiny, and durable across restarts.
-    *
-    * Replay-safe by construction: both writes land in the batch's own
-    * Hive-style partition directory (`__batch=<id>`, an idempotent
-    * overwrite that partition discovery folds into whole-root reads),
-    * and the probe sees STRICTLY EARLIER batches only
-    * (`__batch < batchId`) — exactly the index state the batch saw on
-    * its first delivery, so a replay reproduces its original output
-    * even if later partitions already exist on disk.
+    * unbounded but tiny, and durable across restarts. Replay contract:
+    * [[BatchRoot]].
     */
   def exactAgainstIndexSink(indexRoot: String, outRoot: String,
                             idCol: String = "doc_id", textCol: String = "text")
                            (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
+    val prior = BatchRoot.prior(batch.sparkSession, indexRoot, batchId)
     // the micro-batch frame feeds both the dedup and the index build —
     // cached so the source is read once per batch, not once per write
     // (Spark re-evaluates an uncached foreachBatch frame per action)
-    batch.cache()
-    try {
+    BatchRoot.cached(batch) {
       val kept = prior match {
         case Some(index) => graft.ext.Dedup.exactAgainst(batch, index, idCol, textCol)
         case None        => graft.ext.Dedup.exact(batch, idCol, textCol)
       }
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Dedup.exactIndex(batch, textCol)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally batch.unpersist()
+      BatchRoot.land(kept, outRoot, batchId)
+      BatchRoot.land(graft.ext.Dedup.exactIndex(batch, textCol), indexRoot, batchId)
+    }
   }
 
-  /** foreachBatch sink: NEAR-dup dedup across the whole stream history
-    * against the persisted MinHash-LSH index
-    * ([[graft.ext.Dedup.minHashIndex]] layout) — the ingest loop a
-    * production curation pipeline runs ("is this incoming doc a
-    * near-copy of anything we already hold?"). Per micro-batch:
-    *
-    *  1. probe the index with the asymmetric band join
-    *     ([[graft.ext.Dedup.nearDupMinHashAgainstIndex]]) and drop every
-    *     batch doc that near-dups the retained corpus — cost ∝
-    *     |batch|·bands + collisions, the corpus never re-hashes;
-    *  2. cluster near-dups WITHIN the survivors and keep each
-    *     cluster's lowest id ([[graft.ext.Dedup.dedupNearDups]]);
-    *  3. land the kept docs under `outRoot/__batch=<id>` and roll the
-    *     index forward with the KEPT docs' signatures (the index is the
-    *     retained corpus, so dropped near-dups never bloat it).
-    *
-    * Same replay contract as [[exactAgainstIndexSink]]: both writes are
-    * per-batch partition overwrites and the probe reads STRICTLY
-    * EARLIER batches, so re-delivering a batch id reproduces its
-    * original output byte-for-byte.
-    *
-    * The index is parameter-bound (shingleSize/numHashes/bands/seed
-    * must match across the stream's lifetime — keep them with the
-    * index path like any model artifact). Candidate recall is the
-    * banding's: pairs near the threshold may be missed with the usual
-    * LSH probability; every reported drop is exact-Jaccard-verified.
-    *
-    * GREEDY vs batch connected-components, documented divergence: the
-    * sink is an ONLINE greedy filter — a doc is kept iff it near-dups
-    * nothing in the RETAINED corpus at arrival time. For transitive
-    * chains A~B~C with A≁C split across batches (A kept, B dropped
-    * against A, then C arrives), C near-dups only the already-dropped
-    * B, so the sink KEEPS C — while batch [[graft.ext.Dedup
-    * .dedupNearDups]] (connected components over the all-pairs graph)
-    * puts A,B,C in one cluster and drops C. The greedy result is the
-    * intended curation semantics here: every retained doc is
-    * pairwise-distant from every other retained doc (C is genuinely
-    * not a near-copy of anything you kept), whereas CC transitivity
-    * can discard documents arbitrarily far from everything retained.
-    * Stream==batch equivalence therefore holds exactly for star-shaped
-    * dup clusters (all members near-dup the kept representative) and
-    * is pinned for chains as intentionally divergent in StreamingSpec.
-    */
   /** foreachBatch sink: SEMANTIC (embedding-space) dedup across the
     * whole stream history against the persisted hyperplane-LSH ANN
     * index ([[graft.ext.Similarity.annIndex]] layout) — the ingest
@@ -140,18 +82,13 @@ object StreamingDedup {
     *  3. land the kept vectors under `outRoot/__batch=<id>` and roll
     *     the index forward with the KEPT vectors' signatures.
     *
-    * Same replay contract as [[exactAgainstIndexSink]]: both writes
-    * are per-batch partition overwrites and the probe reads STRICTLY
-    * EARLIER batches, so re-delivering a batch id reproduces its
-    * original output byte-for-byte.
-    *
-    * The index is parameter-bound AND capacity-bound: (tables, bits,
-    * dims, seed) must stay fixed across the stream's lifetime — the
-    * defaults here are the EXPLICIT design floor (bits=6, tables=12),
-    * not the corpus-size derivation, because an index grown by
-    * incremental appends must never re-derive a different signature
-    * family per batch. Keep the parameters with the index path like
-    * any model artifact.
+    * Replay contract: [[BatchRoot]]. The index is parameter-bound AND
+    * capacity-bound: (tables, bits, dims, seed) must stay fixed across
+    * the stream's lifetime — the defaults here are the EXPLICIT design
+    * floor (bits=6, tables=12), not the corpus-size derivation,
+    * because an index grown by incremental appends must never
+    * re-derive a different signature family per batch. Keep the
+    * parameters with the index path like any model artifact.
     *
     * Greedy-vs-batch-CC divergence: identical to
     * [[nearDupAgainstIndexSink]]'s documented contract — transitive
@@ -167,30 +104,18 @@ object StreamingDedup {
                                tables: Int = 12, bits: Int = 6, dims: Int = 64,
                                seed: Long = 0x5EED, inBatchClusters: Int = 1)
                               (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    val afterIndex = prior match {
-      case Some(index) =>
-        val hits = graft.ext.Similarity.annPairsAgainstIndex(batch, index,
-            threshold, tables, bits, dims, idCol, vecCol, seed)
-          .select(col("a_id").as(idCol)).distinct()
-        batch.join(hits, Seq(idCol), "left_anti")
-      case None => batch
-    }
+    val afterIndex = dropIndexHits(batch, indexRoot, batchId, idCol)(
+      graft.ext.Similarity.annPairsAgainstIndex(batch, _, threshold, tables, bits,
+        dims, idCol, vecCol, seed))
     // two consumers (out write + index build) — cached so the index
     // probe + in-batch clustering run once per batch, not twice
     val kept = graft.ext.Similarity.semanticDedup(afterIndex, threshold,
-      inBatchClusters, idCol, vecCol).cache()
-    try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Similarity.annIndex(kept, tables, bits, dims, idCol, vecCol, seed)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally kept.unpersist()
+      inBatchClusters, idCol, vecCol)
+    BatchRoot.cached(kept) {
+      BatchRoot.land(kept, outRoot, batchId)
+      BatchRoot.land(graft.ext.Similarity.annIndex(kept, tables, bits, dims,
+        idCol, vecCol, seed), indexRoot, batchId)
+    }
   }
 
   /** foreachBatch sink: MULTIMODAL near-dup dedup across the whole
@@ -214,9 +139,8 @@ object StreamingDedup {
     *     `outRoot/__batch=<id>` and roll the index forward with the
     *     kept signatures only.
     *
-    * Same replay contract as the text sinks (per-batch partition
-    * overwrites, strictly-earlier probe) and the same documented
-    * greedy-vs-batch-CC divergence on transitive chains.
+    * Replay contract: [[BatchRoot]]. Same documented greedy-vs-batch-CC
+    * divergence on transitive chains as the text sinks.
     */
   def chunkSigAgainstIndexSink(indexRoot: String, outRoot: String,
                                maxHamming: Int = 3,
@@ -225,71 +149,94 @@ object StreamingDedup {
                               (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the signature frame feeds FOUR plan branches (index probe,
     // in-batch self-join — two lineage copies — and the survivors'
     // anti-join); without a cache the payload-decoding mapPartitions
     // would re-execute per branch, breaking the hashed-ONCE contract
     val sigs = sigOf(batch.select(col("asset_id"), col("kind"), col("payload"))
-      .as[graft.ext.Multimodal.Asset]).cache()
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    try {
-      val afterIndex = prior match {
-        case Some(index) =>
-          val hits = graft.ext.Dedup.nearDupChunkSigsAgainstIndex(sigs, index,
-              "asset_id", "phash", maxHamming)
-            .select(col("a_id").as("asset_id")).distinct()
-          sigs.join(hits, Seq("asset_id"), "left_anti")
-        case None => sigs
-      }
+      .as[graft.ext.Multimodal.Asset])
+    BatchRoot.cached(sigs) {
+      val afterIndex = dropIndexHits(sigs, indexRoot, batchId, "asset_id")(
+        graft.ext.Dedup.nearDupChunkSigsAgainstIndex(sigs, _, "asset_id", "phash", maxHamming))
       val keptSigs = graft.ext.Dedup.dedupNearDups(afterIndex,
         graft.ext.Dedup.nearDupChunkSigs(afterIndex, "asset_id", "phash", maxHamming),
         "asset_id")
-      batch.join(keptSigs.select("asset_id"), Seq("asset_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      keptSigs.select("asset_id", "phash")
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally sigs.unpersist()
+      BatchRoot.land(batch.join(keptSigs.select("asset_id"), Seq("asset_id"), "left_semi"),
+        outRoot, batchId)
+      BatchRoot.land(keptSigs.select("asset_id", "phash"), indexRoot, batchId)
+    }
   }
 
+  /** foreachBatch sink: NEAR-dup dedup across the whole stream history
+    * against the persisted MinHash-LSH index
+    * ([[graft.ext.Dedup.minHashIndex]] layout) — the ingest loop a
+    * production curation pipeline runs ("is this incoming doc a
+    * near-copy of anything we already hold?"). Per micro-batch:
+    *
+    *  1. probe the index with the asymmetric band join
+    *     ([[graft.ext.Dedup.nearDupMinHashAgainstIndex]]) and drop every
+    *     batch doc that near-dups the retained corpus — cost ∝
+    *     |batch|·bands + collisions, the corpus never re-hashes;
+    *  2. cluster near-dups WITHIN the survivors and keep each
+    *     cluster's lowest id ([[graft.ext.Dedup.dedupNearDups]]);
+    *  3. land the kept docs under `outRoot/__batch=<id>` and roll the
+    *     index forward with the KEPT docs' signatures (the index is the
+    *     retained corpus, so dropped near-dups never bloat it).
+    *
+    * Replay contract: [[BatchRoot]]. The index is parameter-bound
+    * (shingleSize/numHashes/bands/seed must match across the stream's
+    * lifetime — keep them with the index path like any model
+    * artifact). Candidate recall is the banding's: pairs near the
+    * threshold may be missed with the usual LSH probability; every
+    * reported drop is exact-Jaccard-verified.
+    *
+    * GREEDY vs batch connected-components, documented divergence: the
+    * sink is an ONLINE greedy filter — a doc is kept iff it near-dups
+    * nothing in the RETAINED corpus at arrival time. For transitive
+    * chains A~B~C with A≁C split across batches (A kept, B dropped
+    * against A, then C arrives), C near-dups only the already-dropped
+    * B, so the sink KEEPS C — while batch [[graft.ext.Dedup
+    * .dedupNearDups]] (connected components over the all-pairs graph)
+    * puts A,B,C in one cluster and drops C. The greedy result is the
+    * intended curation semantics here: every retained doc is
+    * pairwise-distant from every other retained doc (C is genuinely
+    * not a near-copy of anything you kept), whereas CC transitivity
+    * can discard documents arbitrarily far from everything retained.
+    * Stream==batch equivalence therefore holds exactly for star-shaped
+    * dup clusters (all members near-dup the kept representative) and
+    * is pinned for chains as intentionally divergent in StreamingSpec.
+    */
   def nearDupAgainstIndexSink(indexRoot: String, outRoot: String,
                               idCol: String = "doc_id", textCol: String = "text",
                               shingleSize: Int = 3, threshold: Double = 0.8,
                               numHashes: Int = 128, bands: Int = 32,
                               seed: Long = 0xC0FFEE)
                              (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    val afterIndex = prior match {
-      case Some(index) =>
-        val hits = graft.ext.Dedup.nearDupMinHashAgainstIndex(batch, index,
-            idCol, textCol, shingleSize, threshold, numHashes, bands, seed)
-          .select(col("a_id").as(idCol)).distinct()
-        batch.join(hits, Seq(idCol), "left_anti")
-      case None => batch
-    }
+    val afterIndex = dropIndexHits(batch, indexRoot, batchId, idCol)(
+      graft.ext.Dedup.nearDupMinHashAgainstIndex(batch, _, idCol, textCol,
+        shingleSize, threshold, numHashes, bands, seed))
     // two consumers (out write + MinHash index build) — cached so the
     // index probe + in-batch LSH dedup run once per batch, not twice
     val kept = graft.ext.Dedup.dedupNearDups(afterIndex,
       graft.ext.Dedup.nearDupMinHash(afterIndex, idCol, textCol, shingleSize,
         threshold, numHashes, bands, seed),
-      idCol).cache()
-    try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Dedup.minHashIndex(kept, idCol, textCol, shingleSize,
-          numHashes, bands, seed)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally kept.unpersist()
+      idCol)
+    BatchRoot.cached(kept) {
+      BatchRoot.land(kept, outRoot, batchId)
+      BatchRoot.land(graft.ext.Dedup.minHashIndex(kept, idCol, textCol, shingleSize,
+        numHashes, bands, seed), indexRoot, batchId)
+    }
   }
+
+  /** `frame` minus every row whose id the strictly-earlier index probe
+    * `hits` (an `a_id`-keyed pair frame) names — the near-dup sinks'
+    * step 1; the frame itself on a cold start.
+    */
+  private def dropIndexHits(frame: DataFrame, indexRoot: String, batchId: Long,
+                            idCol: String)(hits: DataFrame => DataFrame): DataFrame =
+    BatchRoot.prior(frame.sparkSession, indexRoot, batchId).fold(frame) { index =>
+      frame.join(hits(index).select(col("a_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
+    }
 
   /** foreachBatch sink: LINE-level dedup across the whole stream
     * history against the persisted line index
@@ -306,12 +253,10 @@ object StreamingDedup {
     *     forward with the SURVIVING lines only (the index is the
     *     retained corpus, so cut lines never bloat it).
     *
-    * Same replay contract as [[exactAgainstIndexSink]]: per-batch
-    * partition overwrites, strictly-earlier probe — re-delivering a
-    * batch id reproduces its original output byte-for-byte. The probe
-    * semi-joins the raw accreted partitions without re-aggregating
-    * (only hash EXISTENCE matters to a cut), so the fold/probe
-    * equivalence of [[compactIndex]] carries over verbatim.
+    * Replay contract: [[BatchRoot]]. The probe semi-joins the raw
+    * accreted partitions without re-aggregating (only hash EXISTENCE
+    * matters to a cut), so the fold/probe equivalence of
+    * [[compactIndex]] carries over verbatim.
     */
   def lineDedupAgainstIndexSink(indexRoot: String, outRoot: String,
                                 minChars: Int = 1,
@@ -321,17 +266,8 @@ object StreamingDedup {
     // already carries one would be silently renamed/overwritten and
     // corrupt the reported counts — reject loudly (the dsirSelect
     // reserved-column precedent)
-    Seq("n_cut_lines", "__cross_cut").foreach(c =>
-      require(!batch.columns.contains(c),
-        s"lineDedupAgainstIndexSink reserves the '$c' column; rename it on the incoming stream"))
-    val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    val crossCut = prior match {
+    BatchRoot.reserve(batch, "lineDedupAgainstIndexSink", "n_cut_lines", "__cross_cut")
+    val crossCut = BatchRoot.prior(batch.sparkSession, indexRoot, batchId) match {
       case Some(index) => graft.ext.Dedup.stripDuplicateLinesAgainstIndex(
         batch, index, minChars, idCol, textCol)
       case None => batch.withColumn("n_cut_lines", lit(0L))
@@ -344,12 +280,11 @@ object StreamingDedup {
         minChars, idCol, textCol)
       .withColumn("n_cut_lines", col("__cross_cut") + col("n_cut_lines"))
       .drop("__cross_cut")
-      .cache()
-    try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Dedup.lineIndex(kept, minChars, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally kept.unpersist()
+    BatchRoot.cached(kept) {
+      BatchRoot.land(kept, outRoot, batchId)
+      BatchRoot.land(graft.ext.Dedup.lineIndex(kept, minChars, idCol, textCol),
+        indexRoot, batchId)
+    }
   }
 
   /** foreachBatch sink: EXACT-SUBSTRING dedup across the whole stream
@@ -383,9 +318,8 @@ object StreamingDedup {
     * text, so the streamed output is byte-identical to the one-shot
     * batch cut over the concatenated history (when arrival order
     * matches (id, pos) order — the shared first-is-lowest-id caveat).
-    * Same replay contract as [[exactAgainstIndexSink]]: per-batch
-    * partition overwrites, strictly-earlier probe. The probe semi-joins
-    * the raw accreted partitions (hash EXISTENCE only), so
+    * Replay contract: [[BatchRoot]]. The probe semi-joins the raw
+    * accreted partitions (hash EXISTENCE only), so
     * [[compactIndex]]'s fold/probe equivalence carries over verbatim.
     * `minUnits`/`charGrain` are family parameters — keep them with the
     * index path like any model artifact.
@@ -396,39 +330,27 @@ object StreamingDedup {
                                      idCol: String = "doc_id",
                                      textCol: String = "text")
                                     (batch: DataFrame, batchId: Long): Unit = {
-    val cutCol = if (charGrain) "n_cut_chars" else "n_cut_tokens"
-    require(!batch.columns.contains(cutCol),
-      s"substringDedupAgainstIndexSink reserves the '$cutCol' column; rename it on the incoming stream")
-    val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
+    BatchRoot.reserve(batch, "substringDedupAgainstIndexSink",
+      if (charGrain) "n_cut_chars" else "n_cut_tokens")
+    val prior = BatchRoot.prior(batch.sparkSession, indexRoot, batchId)
     // the micro-batch frame feeds the combined cut AND the index build
     // — cached so the source is read once per batch, not per write
-    batch.cache()
-    try {
-      val kept =
-        if (charGrain) prior match {
-          case Some(index) => graft.ext.Dedup
-            .stripExactCharSubstringsWithIndex(batch, index, minUnits, idCol, textCol)
-          case None => graft.ext.Dedup
-            .stripExactCharSubstrings(batch, minUnits, idCol, textCol)
-        }
-        else prior match {
-          case Some(index) => graft.ext.Dedup
-            .stripExactSubstringsWithIndex(batch, index, minUnits, idCol, textCol)
-          case None => graft.ext.Dedup
-            .stripExactSubstrings(batch, minUnits, idCol, textCol)
-        }
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      val windows =
-        if (charGrain) graft.ext.Dedup.charSubstringIndex(batch, minUnits, idCol, textCol)
-        else graft.ext.Dedup.substringIndex(batch, minUnits, idCol, textCol)
-      windows.write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally batch.unpersist()
+    BatchRoot.cached(batch) {
+      import graft.ext.Dedup._
+      val kept = (prior, charGrain) match {
+        case (Some(index), true) =>
+          stripExactCharSubstringsWithIndex(batch, index, minUnits, idCol, textCol)
+        case (Some(index), false) =>
+          stripExactSubstringsWithIndex(batch, index, minUnits, idCol, textCol)
+        case (None, true)  => stripExactCharSubstrings(batch, minUnits, idCol, textCol)
+        case (None, false) => stripExactSubstrings(batch, minUnits, idCol, textCol)
+      }
+      BatchRoot.land(kept, outRoot, batchId)
+      BatchRoot.land(
+        if (charGrain) charSubstringIndex(batch, minUnits, idCol, textCol)
+        else substringIndex(batch, minUnits, idCol, textCol),
+        indexRoot, batchId)
+    }
   }
 
   /** foreachBatch sink: URL-level dedup across the whole stream history
@@ -447,35 +369,25 @@ object StreamingDedup {
     *
     * Stream ≡ batch EXACTLY (keys are per-document atomic — none of
     * the substring family's coverage subtleties), under the shared
-    * first-arrival-is-lowest-id caveat; same replay contract as
-    * [[exactAgainstIndexSink]] (per-batch partition overwrites,
-    * strictly-earlier probe), and [[compactIndex]] applies verbatim.
+    * first-arrival-is-lowest-id caveat; replay contract:
+    * [[BatchRoot]], and [[compactIndex]] applies verbatim.
     */
   def urlDedupAgainstIndexSink(indexRoot: String, outRoot: String,
                                urlCol: String = "url",
                                idCol: String = "doc_id")
                               (batch: DataFrame, batchId: Long): Unit = {
-    require(!batch.columns.contains("url_key"),
-      "urlDedupAgainstIndexSink reserves the 'url_key' column; rename it on the incoming stream")
-    val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
+    BatchRoot.reserve(batch, "urlDedupAgainstIndexSink", "url_key")
     // two consumers (out write + index roll-forward) — cached so the
     // winner election runs once per batch, not twice
-    val kept = (prior match {
+    val kept = BatchRoot.prior(batch.sparkSession, indexRoot, batchId) match {
       case Some(index) => graft.ext.Dedup.urlDedupAgainstIndex(batch, index, urlCol, idCol)
       case None        => graft.ext.Dedup.urlDedup(batch, urlCol, idCol)
-    }).cache()
-    try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      kept.where(col("url_key").isNotNull)
-        .select(xxhash64(col("url_key")).as("__uh")).distinct()
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
-    } finally kept.unpersist()
+    }
+    BatchRoot.cached(kept) {
+      BatchRoot.land(kept, outRoot, batchId)
+      BatchRoot.land(kept.where(col("url_key").isNotNull)
+        .select(xxhash64(col("url_key")).as("__uh")).distinct(), indexRoot, batchId)
+    }
   }
 
   /** foreachBatch sink: the COMPLETE incremental curation chain as one
@@ -485,12 +397,11 @@ object StreamingDedup {
     * TWO persisted index families (the normalized-digest index and the
     * MinHash-LSH index, [[graft.ext.CurationChain.corpusState]]'s
     * layout split into `__batch=` partition roots). Per micro-batch:
-    * probe both indexes strictly earlier (`__batch < batchId`), run the
-    * chain, land the curated rows under `outRoot/__batch=<id>`, and
-    * roll BOTH indexes forward with the kept rows — the streaming face
-    * of `runIncremental` + `rollForward`, with the family's shared
-    * replay contract (per-batch partition overwrites make redelivery
-    * idempotent; the first batch curates against empty state).
+    * probe both indexes strictly earlier, run the chain, land the
+    * curated rows under `outRoot/__batch=<id>`, and roll BOTH indexes
+    * forward with the kept rows — the streaming face of
+    * `runIncremental` + `rollForward`; replay contract: [[BatchRoot]]
+    * (the first batch curates against empty state).
     *
     * `benchmarkSource` is the chain's decontamination reference (the
     * eval set is defined on the ORIGINAL corpus, exactly as in batch) —
@@ -507,81 +418,33 @@ object StreamingDedup {
                         alsoLand: Seq[(DataFrame, Long) => Unit] = Nil)
                        (batch: DataFrame, batchId: Long): Unit = {
     import graft.ext.{CurationChain, Dedup, TextOps}
-    val spark = batch.sparkSession
-    def prior(root: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        Some(spark.read.parquet(root).where(col("__batch") < batchId))
-      else None
-    }
     // chain stages consume the batch several times (gate profile, two
     // dedup stages, index builds) — read the source once
-    batch.cache()
-    try {
+    BatchRoot.cached(batch) {
       // first batch ever: empty state frames in corpusState's exact
       // schema, built from the batch's own (empty) slice
       lazy val empty = CurationChain.corpusState(batch.limit(0))
-      val dig = prior(normIndexRoot).getOrElse(empty._1)
-      val mh = prior(minHashIndexRoot).getOrElse(empty._2)
+      val dig = BatchRoot.prior(batch.sparkSession, normIndexRoot, batchId).getOrElse(empty._1)
+      val mh = BatchRoot.prior(batch.sparkSession, minHashIndexRoot, batchId).getOrElse(empty._2)
       val kept = CurationChain.runIncremental(batch, dig, mh, benchmarkSource)
-      kept.cache()
-      try {
-        landBatchChecked(kept, s"$outRoot/__batch=$batchId")
+      BatchRoot.cached(kept) {
+        BatchRoot.land(kept, outRoot, batchId)
         // chained per-batch artifact sinks over the CACHED curated
         // frame (e.g. [[StreamingLang.scoreSink]] — one ingest pass
         // lands text + predictions without re-reading the landing);
-        // each must follow the family's replay contract (a pure
-        // function of (batch, its own frozen state) landed as a
-        // partition overwrite)
+        // each must be a pure function of (batch, its own frozen
+        // state) under the [[BatchRoot]] replay contract
         alsoLand.foreach(sink => sink(kept, batchId))
         // rollForward's two halves as partition appends: digests can't
         // repeat across batches (a repeat falls at the exact stage), and
         // the MinHash probe tolerates accreted rows like every sink here
-        landBatchChecked(Dedup.exactIndex(
+        BatchRoot.land(Dedup.exactIndex(
             kept.withColumn("__norm", TextOps.normalizeText(col("text"))), "__norm"),
-          s"$normIndexRoot/__batch=$batchId")
-        landBatchChecked(Dedup.minHashIndex(kept, shingleSize = CurationChain.ShingleSize),
-          s"$minHashIndexRoot/__batch=$batchId")
-      } finally kept.unpersist()
-    } finally batch.unpersist()
-  }
-
-  /** Land one `__batch=<id>` partition with a post-commit loss check —
-    * the roll-forward family's CONCURRENT-WRITER contract made loud.
-    *
-    * The contract (all `__batch=` sinks in this family): ONE live
-    * writer per index/output root. Redelivery of a batch overwrites
-    * its own directory (that's the replay idempotence), and two
-    * strictly-sequential writers racing the same batch id resolve
-    * last-writer-wins at directory grain — the overwrite replaces the
-    * whole partition, so the state stays internally consistent either
-    * way. What CANNOT be repaired is two writers INTERLEAVING inside
-    * one directory: Spark's overwrite is delete-then-commit, so a torn
-    * pair can land a mix of both jobs' files. This helper detects that
-    * tear by re-counting the directory right after the commit against
-    * the row count observed DURING the write (no second scan of the
-    * data) and fails loudly — detection, not repair; re-run quiesced.
-    * The check is itself check-then-act (a clean overwrite AFTER it
-    * still wins), which is exactly the stated last-writer-wins grain.
-    */
-  private[graft] def landBatchChecked(df: DataFrame, dir: String): Unit = {
-    val staged = graft.exec.RunLedger.countDuring(df)(
-      _.write.mode("overwrite").parquet(dir))
-    verifyBatchLanding(df.sparkSession, dir, staged)
-  }
-
-  /** The loss check alone — split out so recovery tooling (and the
-    * spec) can re-verify a landing after the fact.
-    */
-  private[graft] def verifyBatchLanding(spark: org.apache.spark.sql.SparkSession,
-                                        dir: String, staged: Long): Unit = {
-    val landed = spark.read.parquet(dir).count()
-    if (landed != staged)
-      throw new IllegalStateException(
-        s"batch landing at $dir holds $landed rows where $staged were staged — " +
-          "a concurrent writer tore this batch directory (the roll-forward " +
-          "contract is single-writer per root); re-run the stream quiesced")
+          normIndexRoot, batchId)
+        BatchRoot.land(Dedup.minHashIndex(kept, shingleSize = CurationChain.ShingleSize),
+          minHashIndexRoot, batchId)
+      }
+    }
   }
 
   /** Maintenance op for any roll-forward `__batch=<id>` index the sinks
@@ -615,35 +478,31 @@ object StreamingDedup {
                    targetBytes: Long = 128L << 20): Int = {
     import org.apache.hadoop.fs.Path
     require(targetBytes > 0, "targetBytes must be positive")
-    val root = new Path(indexRoot)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0
-    val partIds = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-      .map(_.getPath.getName.stripPrefix("__batch=").toLong)
-      .sorted
+    val partIds = BatchRoot.batchIds(spark, indexRoot)
     if (partIds.length <= 2) return 0 // one data + one live partition: nothing to fold
     val latest = partIds.last
     val mergeIds = partIds.dropRight(1)
-    val keepId = mergeIds.last
-    val mergeDirs = mergeIds.map(i => new Path(s"$indexRoot/__batch=$i"))
+    // the probe, verbatim — the fold IS the probe state
+    val merged = BatchRoot.prior(spark, indexRoot, latest) match {
+      case Some(probe) => probe.drop("__batch")
+      case None        => return 0 // no committed partition: nothing to fold
+    }
+    val fs = new Path(indexRoot).getFileSystem(spark.sessionState.newHadoopConf())
+    val mergeDirs = mergeIds.map(i => new Path(BatchRoot.dir(indexRoot, i)))
     val mergeBytes = mergeDirs.flatMap(fs.listStatus(_))
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(mergeBytes.toDouble / targetBytes).toInt)
-    // the probe spelling, verbatim — the fold IS the probe state
-    val merged = spark.read.parquet(indexRoot)
-      .where(col("__batch") < latest).drop("__batch")
     val tmp = new Path(s"$indexRoot/__compact_tmp")
     fs.delete(tmp, true) // stray staging from a crashed prior run
     merged.coalesce(nFiles).write.mode("overwrite").parquet(tmp.toString)
-    val trash = mergeDirs.map { d =>
-      val t = new Path(s"$indexRoot/__compact_old_${d.getName.stripPrefix("__batch=")}")
+    val trash = mergeIds.zip(mergeDirs).map { case (i, d) =>
+      val t = new Path(s"$indexRoot/__compact_old_$i")
       if (!fs.rename(d, t))
         throw new IllegalStateException(s"compaction swap failed moving $d (index readable, staging left)")
       t
     }
-    if (!fs.rename(tmp, new Path(s"$indexRoot/__batch=$keepId"))) {
+    if (!fs.rename(tmp, new Path(BatchRoot.dir(indexRoot, mergeIds.last)))) {
       trash.zip(mergeDirs).foreach { case (t, d) => fs.rename(t, d) } // restore
       throw new IllegalStateException(s"compaction swap failed for $indexRoot (original restored)")
     }

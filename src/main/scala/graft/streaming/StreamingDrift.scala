@@ -12,8 +12,8 @@ import graft.ext.Diff
   * shifting the corpus mixture?" answered continuously, without ever
   * re-scanning either corpus. The drift sibling of
   * [[StreamingSketches]]: same append-only `__batch=<id>` layout, same
-  * idempotent-overwrite replay contract (counts are deterministic per
-  * batch), same [[StreamingDedup.compactIndex]] small-files cure.
+  * [[BatchRoot]] replay contract (counts are deterministic per batch),
+  * same [[StreamingDedup.compactIndex]] small-files cure.
   *
   * Scale shape: per batch one map-side-combined count aggregate (band
   * cardinality rows land, never documents); merge-on-read folds
@@ -29,8 +29,7 @@ object StreamingDrift {
     */
   def bandCountsSink(indexRoot: String, bandCol: String)
                     (batch: DataFrame, batchId: Long): Unit =
-    Diff.bandCounts(batch, bandCol)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    BatchRoot.land(Diff.bandCounts(batch, bandCol), indexRoot, batchId)
 
   /** Current per-band counts of the whole stream history: sum every
     * batch partition (exact — counts are sum-mergeable).

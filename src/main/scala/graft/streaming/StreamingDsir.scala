@@ -19,11 +19,8 @@ import graft.ext.Dsir
   * cold; cold-start is well-defined too — an empty raw model smooths
   * every count to 1, scores stay integer-exact.
   *
-  * Same replay contract as the [[StreamingDedup]] index sinks: both
-  * writes are per-batch partition overwrites (`__batch=<id>`), and the
-  * probe reads STRICTLY EARLIER partitions only — re-delivering a
-  * batch id after a failure reproduces its original scores exactly,
-  * even if later partitions already exist on disk.
+  * Replay contract: [[BatchRoot]] — a re-delivered batch id
+  * reproduces its original scores exactly.
   *
   * Scale shape per micro-batch: merging the rolled model partitions is
   * a ≤65536-row-per-partition aggregation (model-scale, not
@@ -56,25 +53,19 @@ object StreamingDsir {
                 salt: String = "graft")
                (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val rawPath = new org.apache.hadoop.fs.Path(rawModelRoot)
-    val fs = rawPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rawModel =
-      if (fs.exists(rawPath))
-        spark.read.parquet(rawModelRoot).where(col("__batch") < batchId)
-          .groupBy("__bucket").agg(sum(col("__cf")).as("__cf"))
-      else // cold start: every count smooths to 1, still exact
+    val rawModel = BatchRoot.prior(spark, rawModelRoot, batchId) match {
+      case Some(raw) => raw.groupBy("__bucket").agg(sum(col("__cf")).as("__cf"))
+      case None => // cold start: every count smooths to 1, still exact
         spark.range(0).select(lit("").as("__bucket"), lit(0L).as("__cf"))
+    }
     val tgtModel = spark.read.parquet(tgtModelPath)
     // the micro-batch frame is tokenized twice (scoring + model roll) —
     // cached so the source is read once per batch, not once per write
-    batch.cache()
-    try {
-      Dsir.dsirScoreAgainstModels(batch, rawModel, tgtModel,
-          idCol, textCol, salt)
-        .write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      Dsir.dsirModel(batch, textCol, salt)
-        .write.mode("overwrite").parquet(s"$rawModelRoot/__batch=$batchId")
-    } finally batch.unpersist()
+    BatchRoot.cached(batch) {
+      BatchRoot.land(Dsir.dsirScoreAgainstModels(batch, rawModel, tgtModel,
+        idCol, textCol, salt), outRoot, batchId)
+      BatchRoot.land(Dsir.dsirModel(batch, textCol, salt), rawModelRoot, batchId)
+    }
   }
 
   /** The whole scored history, merged on read. */

@@ -10,12 +10,11 @@ import graft.ext.LinkGraph
   * need it — the shape under a continuously-refreshed crawl where
   * "recompute the webgraph from the whole corpus" is never an option.
   *
-  * Layout contract (the family's shared `__batch=` discipline):
-  * each micro-batch lands its own [[LinkGraph.hostEdges]] frame under
-  * `edgeRoot/__batch=<id>` as a per-batch partition OVERWRITE, so
-  * redelivery is idempotent and [[StreamingDedup.compactIndex]]
-  * maintains the root at the usual cadence (the fold below
-  * re-aggregates, so compaction's row-level merge never changes it).
+  * Layout contract ([[BatchRoot]]): each micro-batch lands its own
+  * [[LinkGraph.hostEdges]] frame under `edgeRoot/__batch=<id>`, and
+  * [[StreamingDedup.compactIndex]] maintains the root at the usual
+  * cadence (the fold below re-aggregates, so compaction's row-level
+  * merge never changes it).
   *
   * Additivity: `n_links`/`n_pages` are per-batch counts over DISJOINT
   * page sets (each page lands in exactly one batch), so the accreted
@@ -36,9 +35,8 @@ object StreamingGraph {
   def linkGraphSink(edgeRoot: String, urlCol: String = "url",
                     htmlCol: String = "html", idCol: String = "doc_id")
                    (batch: DataFrame, batchId: Long): Unit =
-    StreamingDedup.landBatchChecked(
-      LinkGraph.hostEdges(batch, urlCol, htmlCol, idCol),
-      s"$edgeRoot/__batch=$batchId")
+    BatchRoot.land(LinkGraph.hostEdges(batch, urlCol, htmlCol, idCol),
+      edgeRoot, batchId)
 
   /** The accreted graph: per-pair sums over every landed batch — the
     * same schema [[LinkGraph.hostEdges]] produces, so

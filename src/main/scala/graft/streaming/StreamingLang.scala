@@ -15,11 +15,10 @@ import graft.ext.LangModel
   * The MODEL is FROZEN (read per batch from its fixed path — the
   * [[StreamingDsir]] target-model posture): language identity is the
   * fixed thing being predicted, and scoring depends only on (batch,
-  * model), never on other batches. That makes the replay contract
-  * trivial and exact: each batch lands under `outRoot/__batch=<id>`
-  * as a partition overwrite, so re-delivering a batch id after a
-  * failure rewrites byte-identical rows whatever else exists on disk
-  * — no strictly-earlier read is even needed.
+  * model), never on other batches. That makes the [[BatchRoot]] replay
+  * contract trivial and exact: no strictly-earlier read is even
+  * needed, so a re-delivered batch id rewrites byte-identical rows
+  * whatever else exists on disk.
   *
   * The landed history, merged on read ([[predictions]]), equals the
   * batch [[graft.ext.LangModel.writePredictions]] over the union of
@@ -49,11 +48,9 @@ object StreamingLang {
                 ns: Seq[Int] = LangModel.DefaultNs,
                 numBuckets: Int = LangModel.DefaultBuckets)
                (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val model = spark.read.parquet(modelPath)
-    LangModel.langScoreAgainst(batch, model, alpha, idCol, textCol, ns,
-        numBuckets)
-      .write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
+    val model = batch.sparkSession.read.parquet(modelPath)
+    BatchRoot.land(LangModel.langScoreAgainst(batch, model, alpha, idCol,
+      textCol, ns, numBuckets), outRoot, batchId)
   }
 
   /** The whole scored history, merged on read — drop-in for

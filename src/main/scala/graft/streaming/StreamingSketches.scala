@@ -13,13 +13,11 @@ import graft.ext.Sketches
   * any re-scan, and two indexes (e.g. live corpus vs benchmark set)
   * compose through [[graft.ext.Sketches.overlap]].
   *
-  * Replay-safe the same way as every index sink here: the write is an
-  * idempotent overwrite of `__batch=<id>`, so a redelivered batch
-  * reproduces its original partition byte-for-byte (theta sketches
-  * are deterministic per value set). Unlike the dedup sinks there is
-  * no read-before-write at all — batches only APPEND state, so no
-  * `__batch < batchId` probe discipline is needed and micro-batches
-  * never contend.
+  * Replay contract: [[BatchRoot]] — a redelivered batch reproduces its
+  * original partition byte-for-byte (theta sketches are deterministic
+  * per value set). Unlike the dedup sinks there is no read-before-write
+  * at all — batches only APPEND state, so no `__batch < batchId` probe
+  * discipline is needed and micro-batches never contend.
   *
   * Scale shape: per batch, one map-side-combinable sketch aggregation
   * (only ~8·2^lgK-byte sketches land); the merge-on-read folds
@@ -37,8 +35,7 @@ object StreamingSketches {
   def thetaStatsSink(indexRoot: String, groupCols: Seq[String],
                      valueCol: String, lgK: Int = 12)
                     (batch: DataFrame, batchId: Long): Unit =
-    Sketches.thetaBuild(batch, groupCols, valueCol, lgK)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    BatchRoot.land(Sketches.thetaBuild(batch, groupCols, valueCol, lgK), indexRoot, batchId)
 
   /** Current per-facet sketch table of the whole stream history: merge
     * every batch partition down to one sketch per facet.
@@ -66,8 +63,7 @@ object StreamingSketches {
   def freqStatsSink(indexRoot: String, groupCols: Seq[String],
                     valueCol: String, maxMapSize: Int = 256)
                    (batch: DataFrame, batchId: Long): Unit =
-    Sketches.freqBuild(batch, groupCols, valueCol, maxMapSize)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    BatchRoot.land(Sketches.freqBuild(batch, groupCols, valueCol, maxMapSize), indexRoot, batchId)
 
   /** Current per-facet top-k heavy hitters of the whole stream history. */
   def currentTopK(spark: SparkSession, indexRoot: String,
@@ -86,8 +82,7 @@ object StreamingSketches {
   def quantStatsSink(indexRoot: String, groupCols: Seq[String],
                      valueCol: String, k: Int = 256)
                     (batch: DataFrame, batchId: Long): Unit =
-    Sketches.quantBuild(batch, groupCols, valueCol, k)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    BatchRoot.land(Sketches.quantBuild(batch, groupCols, valueCol, k), indexRoot, batchId)
 
   /** Current per-facet quantile estimates of the whole stream history. */
   def currentQuantiles(spark: SparkSession, indexRoot: String,

@@ -1046,13 +1046,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("__batch= roll-forward concurrent-writer contract: last-writer-wins sequentially, torn landings fail loudly") {
-    import graft.streaming.StreamingDedup
+    import graft.streaming.BatchRoot
     val work = SparkTestBase.tmpDir("graft_batch_landing")
     val dir = s"$work/idx/__batch=0"
     // sequential same-batch writers: the overwrite replaces the WHOLE
     // partition — last writer wins at directory grain, state consistent
-    StreamingDedup.landBatchChecked(Seq(1L, 2L, 3L).toDF("k"), dir)
-    StreamingDedup.landBatchChecked(Seq(7L, 8L).toDF("k"), dir)
+    BatchRoot.land(Seq(1L, 2L, 3L).toDF("k"), s"$work/idx", 0L)
+    BatchRoot.land(Seq(7L, 8L).toDF("k"), s"$work/idx", 0L)
     assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq === Seq(7L, 8L),
       "a clean second overwrite stands in full — the stated last-writer-wins grain")
     // a TORN landing (another writer's delete interleaved inside ours)
@@ -1062,9 +1062,59 @@ class StreamingSpec extends AnyFunSuite {
       .filter(f => f.getName.endsWith(".parquet")).head
     assert(part.delete())
     val e = intercept[IllegalStateException] {
-      StreamingDedup.verifyBatchLanding(spark, dir, 2L)
+      BatchRoot.verify(spark, dir, 2L)
     }
     assert(e.getMessage.contains("concurrent writer") && e.getMessage.contains(dir))
+  }
+
+  test("a cold index root holding no committed partition cold-starts") {
+    import graft.streaming.{StreamingDedup, StreamingDsir}
+    import graft.ext.Dsir
+    val tgt = SparkTestBase.tmpDir("graft_stream_cold_tgt") + "/tgt"
+    Dsir.dsirModel(Seq((100L, "the quick brown fox")).toDF("doc_id", "text"))
+      .write.parquet(tgt)
+    def docs(rows: (Long, String)*) =
+      rows.map { case (id, t) => (id, t, "en", "srcS") }
+        .toDF("doc_id", "text", "lang", "source")
+    val texts = docs(1L -> "alpha beta gamma delta", 2L -> "alpha beta gamma delta",
+      3L -> "one two three four five six seven eight nine ten")
+    val urls = Seq(1L -> "https://a.example.com/p/1",
+      2L -> "https://a.example.com/p/1?utm_source=x").toDF("doc_id", "url")
+    // (sink, the state roots it probes, built against a work dir)
+    val cases: Seq[(String, Seq[String], String => (org.apache.spark.sql.DataFrame, Long) => Unit,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("exactAgainstIndexSink", Seq("index"),
+        w => StreamingDedup.exactAgainstIndexSink(s"$w/index", s"$w/out"), texts),
+      ("urlDedupAgainstIndexSink", Seq("index"),
+        w => StreamingDedup.urlDedupAgainstIndexSink(s"$w/index", s"$w/out"), urls),
+      ("StreamingDsir.scoreSink", Seq("raw"),
+        w => StreamingDsir.scoreSink(s"$w/raw", tgt, s"$w/out"), texts),
+      ("curationChainSink", Seq("dig", "mh"),
+        w => StreamingDedup.curationChainSink(s"$w/dig", s"$w/mh", s"$w/out", texts),
+        texts))
+    // an operator-pre-created empty root, and the root a crash inside
+    // the first batch's index write leaves behind
+    val shapes: Seq[(String, String => Unit)] = Seq(
+      ("empty", r => new java.io.File(r).mkdirs()),
+      ("crashed first batch", { r =>
+        val t = new java.io.File(s"$r/__batch=0/_temporary/0")
+        t.mkdirs()
+        java.nio.file.Files.write(new java.io.File(t, "part-00000.parquet").toPath,
+          Array[Byte](1, 2, 3))
+      }))
+    def landed(w: String) = spark.read.parquet(s"$w/out").collect().map(_.toString).sorted.toSeq
+    for ((sink, roots, build, batch) <- cases) {
+      val fresh = SparkTestBase.tmpDir("graft_stream_cold_ref")
+      build(fresh)(batch, 0L)
+      val want = landed(fresh)
+      assert(want.nonEmpty, s"$sink landed nothing from a fresh root")
+      for ((shape, make) <- shapes) {
+        val w = SparkTestBase.tmpDir("graft_stream_cold")
+        roots.foreach(r => make(s"$w/$r"))
+        build(w)(batch, 0L)
+        assert(landed(w) === want, s"$sink over a $shape root drifted from a fresh root")
+      }
+    }
   }
 
   test("index-backed streaming LINE dedup rejects its reserved accounting columns") {
