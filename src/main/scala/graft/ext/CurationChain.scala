@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.exec.EtlContext
 
@@ -117,9 +118,21 @@ object CurationChain {
     * on construction). The right trade single-host and for tests; a
     * 100 TB / dynamic-allocation deployment should pass
     * [[DurableMaterializer]] instead.
+    *
+    * A frame that already IS a materialized local checkpoint (its
+    * analyzed plan a `LogicalRDD` over an already-checkpointed RDD) is
+    * returned unchanged: cutting a cut would only copy its blocks. A
+    * `createDataFrame(rdd)` frame is a `LogicalRDD` too, but its RDD
+    * is not checkpointed, so it is still cut.
     */
   object LocalCheckpointMaterializer extends StageMaterializer {
-    def apply(stage: String)(d: => DataFrame): DataFrame = d.localCheckpoint(true)
+    def apply(stage: String)(d: => DataFrame): DataFrame = {
+      val f = d
+      f.queryExecution.analyzed match {
+        case r: LogicalRDD if r.rdd.isCheckpointed => f
+        case _ => f.localCheckpoint(true)
+      }
+    }
   }
 
   /** Durable stage landing — the F13 step-cache trade

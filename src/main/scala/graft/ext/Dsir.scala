@@ -102,41 +102,24 @@ object Dsir {
     *
     * The raw model is built from `candidates` itself (the paper's
     * setting: importance against the distribution you are sampling
-    * FROM), which makes the candidate lineage a MULTI-CONSUMER input
-    * (model build + feature explode) — so it is materialized
-    * (LAZY `localCheckpoint`, the q117/CurationChain stage-boundary
-    * trade: nothing runs until the returned frame's first action, then
-    * the corpus lineage runs ONCE, not once per consumer, and every
-    * later consumer reads the checkpointed blocks). The blocks live
-    * until the driver GCs the checkpointed frame (Spark's
-    * ContextCleaner unpersists on collection) — a long-lived session
-    * scoring many corpora should prefer [[dsirScoreAgainstModels]] or
-    * scope its frames. Callers that already persisted `candidates` pay
-    * one cheap extra copy; callers on preemptible executors who need
-    * durable restarts should land `candidates` as parquet first and
-    * pass the re-read (localCheckpoint blocks are lost with their
-    * executor). To score against models built elsewhere — with no
-    * materialization at all — use [[dsirScoreAgainstModels]] directly.
+    * FROM), which makes the candidate lineage a multi-consumer input
+    * (model build + feature explode), so it is cut once through
+    * [[CurationChain.StageMaterializer]] (`dsir_candidates`) and every
+    * consumer reads the same blocks; the call is eager. A candidate
+    * frame that is already such a cut is not copied again. To score
+    * against models built elsewhere, with no cut at all, use
+    * [[dsirScoreAgainstModels]] directly.
     *
     * Features absent from the target model take the smoothed count 1
     * via a left join + coalesce — integer-exact, no special cases.
     */
   def dsirScore(candidates: DataFrame, target: DataFrame,
                 idCol: String = "doc_id", textCol: String = "text",
-                salt: String = "graft"): DataFrame =
-    scoreMaterialized(candidates.localCheckpoint(false), target,
-      idCol, textCol, salt)
-
-  /** [[dsirScore]] over an ALREADY-materialized candidate frame — the
-    * shared tail that never re-materializes ([[dsirSelect]] checkpoints
-    * once and reuses the same block for its join-back).
-    */
-  private def scoreMaterialized(c: DataFrame, target: DataFrame,
-                                idCol: String, textCol: String,
-                                salt: String): DataFrame =
-    dsirScoreAgainstModels(c,
-      dsirModel(c, textCol, salt),
+                salt: String = "graft"): DataFrame = {
+    val c = CurationChain.LocalCheckpointMaterializer("dsir_candidates")(candidates)
+    dsirScoreAgainstModels(c, dsirModel(c, textCol, salt),
       dsirModel(target, textCol, salt), idCol, textCol, salt)
+  }
 
   /** Score a batch against PERSISTED models — the incremental face:
     * the raw/target models were built once ([[dsirModel]], typically
@@ -182,9 +165,9 @@ object Dsir {
     * a full sort.
     *
     * `candidates` is consumed three ways (raw model, feature explode,
-    * final join-back), so it is materialized ONCE (lazy
-    * `localCheckpoint` — same contract and caveats as [[dsirScore]])
-    * and every consumer reads the same block: a direct call over a
+    * final join-back), so it is cut ONCE, eagerly, as in [[dsirScore]]
+    * (`dsir_candidates`; the scoring call gets the cut back unchanged)
+    * and every consumer reads the same blocks: a direct call over a
     * parquet corpus scans it exactly once, never ~4×.
     *
     * `weight_bits` is a RESERVED output column (it carries the score):
@@ -201,8 +184,8 @@ object Dsir {
     require(!candidates.columns.contains("weight_bits"),
       "dsirSelect: 'weight_bits' is a reserved output column — rename it on " +
         "the candidate frame (or score with dsirScoreAgainstModels and join yourself)")
-    val c = candidates.localCheckpoint(false)
-    c.join(scoreMaterialized(c, target, idCol, textCol, salt)
+    val c = CurationChain.LocalCheckpointMaterializer("dsir_candidates")(candidates)
+    c.join(dsirScore(c, target, idCol, textCol, salt)
         .select(col(idCol), col("weight_bits")), Seq(idCol))
       .orderBy(col("weight_bits").desc, col(idCol).asc)
       .limit(k)

@@ -2372,16 +2372,14 @@ object ExtQueries {
     */
   def q117(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
-    // stage boundaries MATERIALIZE (the CurationChain.mat trade): the
-    // dedup consumes its input twice and dsirSelect consumes ITS input
-    // four ways (raw model, target model, feature explode, final
-    // join) — unmaterialized, the gopher+dedup lineage re-runs per
-    // branch (~10 corpus rescans; the q88 trap exactly)
-    val kept = d.join(
-        TextOps.gopherRules(d).where(col("keep")).select(col("doc_id")),
-        Seq("doc_id"))
-      .localCheckpoint(true)
-    val deduped = Dedup.exact(kept).localCheckpoint(true)
+    // [[CurationChain.StageMaterializer]] cuts: the dedup reads its
+    // input twice and dsirSelect reads ITS input four ways, so uncut
+    // the gopher+dedup lineage re-runs per branch (~10 corpus rescans)
+    val cut = CurationChain.LocalCheckpointMaterializer
+    val kept = cut("q117_gopher_keep")(d.join(
+      TextOps.gopherRules(d).where(col("keep")).select(col("doc_id")),
+      Seq("doc_id")))
+    val deduped = cut("q117_exact_dedup")(Dedup.exact(kept))
     Dsir.dsirSelect(deduped, deduped.where(col("lang") === "en"), k = 100)
       .select(col("doc_id"), col("lang"), col("source"), col("weight_bits"))
       .orderBy("doc_id")

@@ -651,24 +651,10 @@ object Multimodal {
     * brute-force pixel distance.
     */
   def nearDupImages(assets: Dataset[Asset], maxHamming: Int = 3): DataFrame =
-    Dedup.nearDupChunkSigs(materializedSigs(dHash(assets)),
-      "asset_id", "phash", maxHamming)
-
-  /** Decode ONCE, join many: the chunked Hamming self-join consumes its
-    * signature frame on both join sides (and [[nearDupVideos]] adds a
-    * per-clip frame count), so an unmaterialized lineage would re-run
-    * the payload-decoding `mapPartitions` once per plan branch — the
-    * batch-side mirror of the streaming sink's hashed-ONCE cache
-    * ([[graft.streaming.StreamingDedup.chunkSigAgainstIndexSink]]). An
-    * eager local checkpoint materializes the tiny signature rows
-    * (id + 16 bytes; payloads are NOT carried) and truncates the
-    * decode lineage. Executor-loss recovery is the documented
-    * [[Dedup.connectedComponents]] trade; the durable 100 TB path is
-    * the persisted parquet signature index (q83's shape), where the
-    * decode runs exactly once by construction.
-    */
-  private def materializedSigs(sigs: DataFrame): DataFrame =
-    sigs.localCheckpoint(true)
+    // the Hamming self-join reads the signatures on both sides: a
+    // [[CurationChain.StageMaterializer]] cut decodes the payloads once
+    Dedup.nearDupChunkSigs(CurationChain.LocalCheckpointMaterializer("chunk_sigs")(
+      dHash(assets)), "asset_id", "phash", maxHamming)
 
   /** One 64-bit signature per SAMPLED FRAME of a video asset — the
     * frame-level fingerprint family that closes the modality matrix
@@ -739,8 +725,9 @@ object Multimodal {
     require(minMatchFrac > 0 && minMatchFrac <= 1,
       s"minMatchFrac must be in (0, 1], got $minMatchFrac")
     // three consumers (both chunk-join sides + the per-clip frame
-    // count) — decode once, see materializedSigs
-    val sigs = materializedSigs(videoFrameSigs(assets, stride))
+    // count): a [[CurationChain.StageMaterializer]] cut decodes once
+    val sigs = CurationChain.LocalCheckpointMaterializer("chunk_sigs")(
+      videoFrameSigs(assets, stride))
     val chunks = sigs.select(col("asset_id"), col("frame_idx"), col("phash"),
       posexplode(col("phash")).as(Seq("chunk_idx", "chunk_value")))
     val a = chunks.select(col("chunk_idx"), col("chunk_value"),
@@ -850,8 +837,10 @@ object Multimodal {
     * different material stays apart).
     */
   def nearDupAudio(assets: Dataset[Asset], maxHamming: Int = 3): DataFrame =
-    Dedup.nearDupChunkSigs(materializedSigs(audioHash(assets)),
-      "asset_id", "phash", maxHamming)
+    // the Hamming self-join reads the signatures on both sides: a
+    // [[CurationChain.StageMaterializer]] cut decodes the payloads once
+    Dedup.nearDupChunkSigs(CurationChain.LocalCheckpointMaterializer("chunk_sigs")(
+      audioHash(assets)), "asset_id", "phash", maxHamming)
 
   /** Deterministic text → real-PNG rendering: the document's UTF-8
     * bytes laid out as the 9×8 grayscale pixel grid, PNG-encoded via

@@ -316,8 +316,9 @@ object Similarity {
     //  - the sample is content-hash based (keep iff xxhash64(vector)
     //    mod 1e6 < fraction·1e6) — layout-independent, unlike
     //    df.sample's per-partition Bernoulli stream;
-    //  - the sample (vector column only) is materialized once, so the
-    //    fit does not rescan the corpus, and its row count is free;
+    //  - the sample (vector column only) is cut once through
+    //    [[CurationChain.StageMaterializer]], so the fit does not rescan
+    //    the corpus, and its row count is free;
     //  - small samples (≤ DeterministicFitMaxRows — every pinned test
     //    scale) collapse to ONE sorted partition: the fit's fold order
     //    is exactly the sorted row order, so centroids are bit-
@@ -332,9 +333,8 @@ object Similarity {
         emb.where(pmod(xxhash64(col(vecCol)), lit(1000000L)) <
           lit(math.floor(trainFraction * 1e6).toLong))
       else emb
-    val pinned = sampled.select(col(vecCol))
-      .repartition(TrainLayoutPartitions, col(vecCol))
-      .localCheckpoint(true)
+    val pinned = CurationChain.LocalCheckpointMaterializer("ivf_train_sample")(
+      sampled.select(col(vecCol)).repartition(TrainLayoutPartitions, col(vecCol)))
     val sampleRows = pinned.count()
     val layout =
       if (sampleRows <= DeterministicFitMaxRows) pinned.repartition(1) else pinned

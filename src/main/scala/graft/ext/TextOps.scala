@@ -1032,10 +1032,11 @@ object TextOps {
     // the model's bigram counts are a ROLLUP of the per-doc
     // multiplicities (sums of counts — identical integers to counting
     // the raw pairs), so the corpus n-gram explosion runs once instead
-    // of twice, and the eager cut stops the scoring joins from
-    // re-exploding it again (the r20-before q73 plan: 10 corpus scans,
-    // 34 exchanges — the perLanguageSurprisal rollup lesson, SCALE_r18).
-    val docBg = docBigramCounts(docs, idCol, textCol, n).localCheckpoint(true)
+    // of twice, and the [[CurationChain.StageMaterializer]] cut stops the
+    // scoring joins from re-exploding it (the r20-before q73 plan: 10
+    // corpus scans, 34 exchanges — SCALE_r18).
+    val docBg = CurationChain.LocalCheckpointMaterializer("lm_doc_bigrams")(
+      docBigramCounts(docs, idCol, textCol, n))
     val c2 = docBg.groupBy("prev", "cur").agg(sum(col("__m")).as("__c2"))
     val vocabRow = docs
       .select(explode(tokens(col(textCol))).as("token"))

@@ -34,33 +34,39 @@ private[graft] object BatchRoot {
   /** The batch's own partition directory under `root`. */
   def dir(root: String, id: Long): String = s"$root/__batch=$id"
 
-  /** Every `__batch=` partition id under `root`, ascending. */
-  def batchIds(spark: SparkSession, root: String): Seq[Long] = {
+  /** The `<partCol>=` partition directories directly under `root`. */
+  private def partitions(spark: SparkSession, root: String, partCol: String): Seq[Path] = {
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-      .map(_.getPath.getName.stripPrefix("__batch=").toLong)
-      .sorted
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .map(_.getPath)
+  }
+
+  /** Every `__batch=` partition id under `root`, ascending. */
+  def batchIds(spark: SparkSession, root: String): Seq[Long] =
+    partitions(spark, root, "__batch").map(_.getName.stripPrefix("__batch=").toLong).sorted
+
+  /** Whether some `<partCol>=` partition under `root` holds a visible
+    * data file — the exact condition under which Spark can infer the
+    * root's schema. Bare existence is not enough: an empty root, or one
+    * holding only a crashed write's hidden `_temporary`, makes the read
+    * throw on every redelivery and wedges the stream, so such a root
+    * is a cold start.
+    */
+  def committed(spark: SparkSession, root: String, partCol: String): Boolean = {
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    partitions(spark, root, partCol).exists(fs.listStatus(_).exists(f =>
+      f.isFile && !Seq("_", ".").exists(f.getPath.getName.startsWith)))
   }
 
   /** The strictly-earlier state of `root` as seen by batch `batchId`,
-    * or `None` (cold start) until some `__batch=` partition holds a
-    * visible data file — the exact condition under which Spark can
-    * infer the root's schema. Bare existence is not enough: an empty
-    * root, or one holding only a crashed write's hidden `_temporary`,
-    * makes the read throw on every redelivery and wedges the stream.
+    * or `None` (cold start) until the root is [[committed]].
     */
-  def prior(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val committed = batchIds(spark, root).exists { id =>
-      fs.listStatus(new Path(dir(root, id))).exists(f =>
-        f.isFile && !Seq("_", ".").exists(f.getPath.getName.startsWith))
-    }
-    if (committed) Some(spark.read.parquet(root).where(col("__batch") < batchId))
-    else None
-  }
+  def prior(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] =
+    Option.when(committed(spark, root, "__batch"))(
+      spark.read.parquet(root).where(col("__batch") < batchId))
 
   /** `df` cached for the duration of `body`. A lost executor
     * recomputes the cut from the replayable micro-batch.

@@ -51,13 +51,14 @@ object StreamingScd2 {
     val spark = batch.sparkSession
     val touched = batch.select(bucketOf(pks, nBuckets).as(BucketCol))
       .distinct().collect().map(_.getLong(0)).toSeq // ≤ nBuckets rows
-    val existingVersions = scala.util.Try(spark.read.parquet(historyRoot)).toOption
-      .map(_.where(col(BucketCol).isin(touched: _*))
-        .drop(Scd2.ValidFrom, Scd2.ValidTo, Scd2.IsCurrent, BucketCol))
-    val journal = existingVersions match {
-      case Some(e) => e.unionByName(batch).distinct()
-      case None => batch.distinct()
-    }
+    // cold start only while no bucket holds a data file; a committed
+    // root is read, and a failed read throws before any bucket is
+    // rewritten (treating it as empty would drop the older versions)
+    val journal =
+      if (!BatchRoot.committed(spark, historyRoot, BucketCol)) batch.distinct()
+      else spark.read.parquet(historyRoot).where(col(BucketCol).isin(touched: _*))
+        .drop(Scd2.ValidFrom, Scd2.ValidTo, Scd2.IsCurrent, BucketCol)
+        .unionByName(batch).distinct()
     Scd2.history(journal, pks, trackCols)
       .withColumn(BucketCol, bucketOf(pks, nBuckets))
       .write.mode("overwrite")

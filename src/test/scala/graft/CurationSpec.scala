@@ -132,6 +132,31 @@ class CurationSpec extends AnyFunSuite {
     assert(new java.io.File(s"${rankMat.dir}/rank_pairs/_SUCCESS").isFile)
   }
 
+  private def isLocalCut(d: DataFrame): Boolean = d.queryExecution.analyzed match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+    case _ => false
+  }
+
+  test("default materializer: an already-materialized cut comes back as is, with no Spark job") {
+    import graft.ext.CurationChain.LocalCheckpointMaterializer
+    val cut = LocalCheckpointMaterializer("first")(docs.limit(50))
+    assert(isLocalCut(cut))
+    var again: DataFrame = null
+    assert(SparkTestBase.jobsDuring { again = LocalCheckpointMaterializer("second")(cut) } === 0)
+    assert(again eq cut)
+  }
+
+  test("default materializer: a createDataFrame(rdd) frame is still cut") {
+    import graft.ext.CurationChain.LocalCheckpointMaterializer
+    val fromRdd = spark.createDataFrame(docs.limit(50).rdd, docs.schema)
+    assert(!isLocalCut(fromRdd))
+    var cut: DataFrame = null
+    assert(SparkTestBase.jobsDuring { cut = LocalCheckpointMaterializer("from_rdd")(fromRdd) } >= 1)
+    assert(!(cut eq fromRdd))
+    assert(isLocalCut(cut))
+    assert(cut.count() === 50L)
+  }
+
   test("curation chain: monotone shrink, splits partition, packing bounded, deterministic") {
     val out = curate().cache()
     val nRaw = raw.count()

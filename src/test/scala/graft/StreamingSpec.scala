@@ -1443,17 +1443,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(drift() === batchDrift, "compaction changed the folded counts")
   }
 
+  /** An SCD2 journal batch of (id, v, load time, seqno) rows. */
+  private def jdf(rows: (Int, String, String, Long)*) = {
+    import org.apache.spark.sql.functions.{col, lit, to_timestamp}
+    rows.toDF("id", "v", "__t", "__seqno")
+      .withColumn("__transform_dt", to_timestamp(col("__t")))
+      .withColumn("__load_dt", to_timestamp(col("__t")))
+      .withColumn("__record_state", lit("A"))
+      .drop("__t")
+  }
+
   test("streaming SCD2 sink: stream == batch history, touched-buckets-only rewrite, replay-idempotent") {
     import graft.merge.Scd2
     import graft.streaming.StreamingScd2
-    import org.apache.spark.sql.functions.{col, lit, to_timestamp}
     val root = SparkTestBase.tmpDir("graft_stream_scd2") + "/history"
-    def jdf(rows: (Int, String, String, Long)*) =
-      rows.toDF("id", "v", "__t", "__seqno")
-        .withColumn("__transform_dt", to_timestamp(col("__t")))
-        .withColumn("__load_dt", to_timestamp(col("__t")))
-        .withColumn("__record_state", lit("A"))
-        .drop("__t")
     val nB = 8
     val sink = StreamingScd2.scd2Sink(root, Seq("id"), trackCols = Seq("v"), nBuckets = nB) _
     val b0 = jdf((1, "A", "2024-01-01 00:00:00", 1L), (2, "X", "2024-01-01 00:00:00", 2L))
@@ -1502,6 +1505,35 @@ class StreamingSpec extends AnyFunSuite {
     // replay of a delivered batch reproduces identical state
     sink(b1, 1L)
     assert(hist() === full, "replay of a delivered batch changed the history")
+  }
+
+  test("streaming SCD2 sink: a committed history that fails to read throws and keeps every older version") {
+    import graft.merge.Scd2
+    import graft.streaming.StreamingScd2
+    val root = SparkTestBase.tmpDir("graft_stream_scd2_unreadable") + "/history"
+    val nB = 4
+    val sink = StreamingScd2.scd2Sink(root, Seq("id"), trackCols = Seq("v"), nBuckets = nB) _
+    val ids = 1 to 8
+    sink(jdf(ids.map(i => (i, "A", "2024-01-01 00:00:00", i.toLong)): _*), 0L)
+    def hist(): Seq[(Int, String, Boolean)] =
+      StreamingScd2.readHistory(spark, root).orderBy("id", Scd2.ValidFrom)
+        .select("id", "v", Scd2.IsCurrent).as[(Int, String, Boolean)].collect().toSeq
+    val before = hist()
+    assert(before.map(_._1).toSet === ids.toSet)
+    // a stray non-partition directory holding a data file: the root is
+    // committed, but partition discovery rejects it
+    val stray = new java.io.File(s"$root/stray")
+    val part = new java.io.File(s"$root/${StreamingScd2.BucketCol}=" +
+      jdf((1, "?", "2024-01-01 00:00:00", 0L))
+        .select(StreamingScd2.bucketOf(Seq("id"), nB)).head().getLong(0))
+      .listFiles().find(_.getName.endsWith(".parquet")).get
+    stray.mkdirs()
+    java.nio.file.Files.copy(part.toPath, new java.io.File(stray, part.getName).toPath)
+    intercept[Exception] {
+      sink(jdf(ids.map(i => (i, "B", "2024-01-03 00:00:00", 100L + i)): _*), 1L)
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(stray)
+    assert(hist() === before, "a failed history read dropped older versions")
   }
 
   test("streaming DSIR scoring: rolled raw model == batch-built prior models, replay-idempotent") {

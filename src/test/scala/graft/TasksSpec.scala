@@ -654,31 +654,11 @@ class TasksSpec extends AnyFunSuite {
 
   test("ledger: an append runs no Spark job") {
     import graft.exec.RunLedger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = SparkTestBase.tmpDir("graft_ledger_nojob") + "/led"
-    val group = s"ledger-nojob-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "ledger")
+    assert(SparkTestBase.jobsDuring {
       RunLedger.append(spark, dir, ledgerEntry("t", 1))
       RunLedger.appendDagRun(spark, s"$dir-dag", Seq(dagEntry("t", 1), dagEntry("u", 2)))
-      // listener events arrive in order: once this marker job is seen,
-      // every job the appends started has been seen too
-      spark.sparkContext.setJobGroup(group, "marker")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.toArray.toSeq === Seq("marker"), "the appends must launch no job")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } === 0, "the appends must launch no job")
     assert(RunLedger.read(spark, dir).count() === 1)
     assert(RunLedger.readDagRuns(spark, s"$dir-dag").count() === 2)
   }
