@@ -260,30 +260,28 @@ object PipelineRunner {
   }
 
   /** Already-landed rows at exactly the mark value, or None when the
-    * landing doesn't exist yet, its schema drifted (a column added or
-    * retyped since the last run makes the all-columns anti-join
-    * unsound), or it is unreadable (e.g. only a `_temporary` directory
-    * left by a crashed first write — schema inference throws). In every
-    * None case the caller falls back to landing the whole boundary
-    * slice: at-least-once is preserved, the dedup is best-effort.
+    * landing holds no visible data file yet (absent, empty, or only a
+    * `_temporary` directory left by a crashed first write — the
+    * [[graft.streaming.BatchRoot.committed]] rule) or its schema
+    * drifted (a column added or retyped since the last run makes the
+    * all-columns anti-join unsound). In either None case the caller
+    * lands the whole boundary slice: at-least-once is preserved, the
+    * dedup is best-effort. A landing that holds data but fails to read
+    * throws, rather than being taken for an empty one.
     */
   private def landedBoundary(ctx: EtlContext, path: String, column: String,
                              mark: org.apache.spark.sql.Column,
                              incoming: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    scala.util.Try {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp)) None
-      else {
-        val landed = ctx.spark.read.parquet(path)
-        val comparable = incoming.fields.forall(f =>
-          landed.schema.fields.exists(g => g.name == f.name && g.dataType == f.dataType))
-        if (!comparable) None
-        else Some(landed.where(col(column) === mark)
-          .select(incoming.fieldNames.toSeq.map(col): _*))
-      }
-    }.getOrElse(None)
+    if (!graft.streaming.BatchRoot.holdsDataFile(ctx.spark, path)) None
+    else {
+      val landed = ctx.spark.read.parquet(path)
+      val comparable = incoming.fields.forall(f =>
+        landed.schema.fields.exists(g => g.name == f.name && g.dataType == f.dataType))
+      if (!comparable) None
+      else Some(landed.where(col(column) === mark)
+        .select(incoming.fieldNames.toSeq.map(col): _*))
+    }
   }
 
   /** F24 with a JDBC source: resolve the connection from variables

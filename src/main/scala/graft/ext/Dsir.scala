@@ -34,12 +34,12 @@ import org.apache.spark.sql.functions._
   * Scale shape (the part that must survive 100 TB): both models are
   * AT MOST [[NumBuckets]] = 65536 rows regardless of corpus size —
   * they build with one map-side-combinable bucket-count aggregation
-  * each and then BROADCAST; scoring is explode → two broadcast hash
-  * joins → one per-doc sum (map-side partial). No sort-merge join, no
-  * per-feature shuffle wider than the 65536-row model build, nothing
-  * grows with corpus size except the one per-doc aggregation every
-  * scoring operator here shares. Selection is a global top-k
-  * (TakeOrdered — no full sort).
+  * each, are collected together into one dense per-bucket weight
+  * table and ship once per executor as a BROADCAST. Scoring is then
+  * one row-local expression per document
+  * ([[graft.functions.DsirWeightSum]]): no explode, no join, no
+  * shuffle, nothing that grows with corpus size beyond the scan
+  * itself. Selection is a global top-k (TakeOrdered — no full sort).
   */
 object Dsir {
 
@@ -49,19 +49,14 @@ object Dsir {
     */
   val NumBuckets: Int = 65536
 
-  /** Hashed feature buckets of one text: unigrams ++ adjacent bigrams,
-    * each `substr(md5(feature || salt), 1, 4)`. Row-local (an array
-    * expression, no join, no shuffle): bigrams come from zipping the
-    * token array against itself shifted by one.
+  /** Hashed feature buckets of one text: unigrams ++ adjacent bigrams
+    * of the single-space split, each `substr(md5(feature || salt), 1,
+    * 4)`. One native row-local expression
+    * ([[graft.functions.DsirFeatureBuckets]]) that builds no token or
+    * bigram string.
     */
-  def featureBuckets(text: Column, salt: String = "graft"): Column = {
-    val toks = TextOps.tokens(text)
-    val m = greatest(size(toks) - 1, lit(0))
-    val bigrams = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => concat(a, lit(" "), b))
-    transform(concat(toks, bigrams),
-      f => substring(md5(concat(f, lit(salt))), 1, 4))
-  }
+  def featureBuckets(text: Column, salt: String = "graft"): Column =
+    graft.functions.DsirExprs.featureBuckets(text, salt)
 
   /** One corpus's hashed-feature model: (__bucket, __cf) with ≤
     * [[NumBuckets]] rows — broadcast-sized by construction, and the
@@ -70,7 +65,7 @@ object Dsir {
     * arriving batches with [[dsirScoreAgainstModels]] without ever
     * rescanning the corpus, and fold curated batches back in with
     * [[dsirModelRollForward]]. The total feature count N is
-    * `sum(__cf)` — derived at probe time (one ≤65536-row aggregate),
+    * `sum(__cf)` — summed as the model is collected at probe time,
     * so the model needs no side-channel metadata.
     */
   def dsirModel(corpus: DataFrame, textCol: String = "text",
@@ -88,30 +83,63 @@ object Dsir {
     model.unionByName(dsirModel(batch, textCol, salt))
       .groupBy("__bucket").agg(sum(col("__cf")).as("__cf"))
 
-  /** Bit-length of (n + add): `length(bin(n + add))` — the integer
-    * `⌊log2⌋ + 1` both engines agree on exactly.
+  /** Per-bucket weight table of a (raw, target) model pair:
+    * `w(b) = s_raw(b) − s_target(b)` with `s(b) = bitlen(N + NumBuckets)
+    * − bitlen(cf(b) + 1)` (a bucket a model lacks has cf 0), `bitlen`
+    * being `Long.toBinaryString(x).length` — the function Spark's
+    * `length(bin(x))` computes, so the integers are the SQL replay's.
+    * Both models are collected in ONE job (each is ≤
+    * [[NumBuckets]] rows, the size they were already broadcast at) and
+    * the table ships once per executor as a broadcast. A model is
+    * validated as it lands: a bucket that is not 4 lowercase hex chars
+    * or that appears twice (an un-merged roll-forward) would silently
+    * score wrong, so it is rejected here.
     */
-  private def bitlen(n: Column, add: Long): Column =
-    length(bin(n + lit(add))).cast("long")
+  private def weightTable(rawModel: DataFrame, tgtModel: DataFrame)
+      : org.apache.spark.broadcast.Broadcast[Array[Long]] = {
+    def side(m: DataFrame, s: Int) =
+      m.select(lit(s).as("__side"), col("__bucket"), col("__cf").cast("long"))
+    val names = Array("raw", "target")
+    val hex4 = "[0-9a-f]{4}".r
+    val cf = Array.fill(2)(new Array[Long](NumBuckets))
+    val seen = Array.fill(2)(new java.util.BitSet(NumBuckets))
+    val total = new Array[Long](2)
+    side(rawModel, 0).unionByName(side(tgtModel, 1)).collect().foreach { r =>
+      val s = r.getInt(0)
+      val b = r.getString(1)
+      require(b != null && hex4.matches(b),
+        s"DSIR ${names(s)} model bucket '$b' is not 4 lowercase hex chars " +
+          "— a model must come from dsirModel")
+      val i = Integer.parseInt(b, 16)
+      require(!seen(s).get(i),
+        s"DSIR ${names(s)} model holds bucket $b twice — aggregate it " +
+          "per __bucket (dsirModelRollForward) before scoring")
+      seen(s).set(i)
+      val c = if (r.isNullAt(2)) 0L else r.getLong(2)
+      cf(s)(i) = c
+      total(s) += c
+    }
+    def bitlen(x: Long): Long = java.lang.Long.toBinaryString(x).length.toLong
+    def surprisal(s: Int, b: Int): Long =
+      bitlen(total(s) + NumBuckets) - bitlen(cf(s)(b) + 1L)
+    rawModel.sparkSession.sparkContext.broadcast(
+      Array.tabulate(NumBuckets)(b => surprisal(0, b) - surprisal(1, b)))
+  }
 
   /** Per-document DSIR importance score of `candidates` against
     * `target`: (idCol, n_features, weight_bits, avg_bits), one row per
-    * candidate document (docs whose text yields zero features cannot
-    * exist under whitespace tokenization — split("") = [""] — so the
-    * output covers every input row).
+    * candidate row with non-NULL text (whitespace tokenization never
+    * yields zero features — split("") = [""]).
     *
     * The raw model is built from `candidates` itself (the paper's
     * setting: importance against the distribution you are sampling
     * FROM), which makes the candidate lineage a multi-consumer input
-    * (model build + feature explode), so it is cut once through
+    * (model build + scoring), so it is cut once through
     * [[CurationChain.StageMaterializer]] (`dsir_candidates`) and every
     * consumer reads the same blocks; the call is eager. A candidate
     * frame that is already such a cut is not copied again. To score
     * against models built elsewhere, with no cut at all, use
     * [[dsirScoreAgainstModels]] directly.
-    *
-    * Features absent from the target model take the smoothed count 1
-    * via a left join + coalesce — integer-exact, no special cases.
     */
   def dsirScore(candidates: DataFrame, target: DataFrame,
                 idCol: String = "doc_id", textCol: String = "text",
@@ -124,35 +152,22 @@ object Dsir {
   /** Score a batch against PERSISTED models — the incremental face:
     * the raw/target models were built once ([[dsirModel]], typically
     * landed as parquet) and only the batch tokenizes here; probe cost
-    * ∝ ǀbatchǀ plus two ≤65536-row broadcasts, never ∝ corpus.
-    * Features unseen by a model take the smoothed count 1 (left join +
-    * coalesce 0, then the uniform +1) — so a batch with brand-new
-    * vocabulary still scores, integer-exactly.
+    * ∝ ǀbatchǀ plus one ≤2·65536-row model collect, never ∝ corpus.
+    * Scoring is row-local ([[graft.functions.DsirWeightSum]] against
+    * the broadcast weight table): no explode, join or shuffle. Features
+    * unseen by a model take the smoothed count 1 — so a batch with
+    * brand-new vocabulary still scores, integer-exactly. Rows with
+    * NULL text get no score row.
     */
   def dsirScoreAgainstModels(batch: DataFrame, rawModel: DataFrame,
                              tgtModel: DataFrame, idCol: String = "doc_id",
                              textCol: String = "text",
                              salt: String = "graft"): DataFrame = {
-    val rawCf = rawModel.select(col("__bucket"), col("__cf"))
-    val tgtCf = tgtModel.select(col("__bucket"), col("__cf").as("__tcf"))
-    val rawN = rawCf.agg(coalesce(sum(col("__cf")), lit(0L)).as("__rn"))
-    val tgtN = tgtCf.agg(coalesce(sum(col("__tcf")), lit(0L)).as("__tn"))
-    val feats = batch.select(col(idCol),
-      explode(featureBuckets(col(textCol), salt)).as("__bucket"))
-    // s_raw − s_target per feature OCCURRENCE (the weight is linear in
-    // occurrences, so no per-(doc,bucket) pre-count is needed — one
-    // per-doc sum does it all)
-    feats
-      .join(broadcast(rawCf), Seq("__bucket"), "left")
-      .join(broadcast(tgtCf), Seq("__bucket"), "left")
-      .crossJoin(broadcast(rawN)).crossJoin(broadcast(tgtN))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_features"),
-        sum((bitlen(col("__rn"), NumBuckets.toLong) -
-             bitlen(coalesce(col("__cf"), lit(0L)), 1L)) -
-            (bitlen(col("__tn"), NumBuckets.toLong) -
-             bitlen(coalesce(col("__tcf"), lit(0L)), 1L)))
-          .as("weight_bits"))
+    val w = graft.functions.DsirExprs.weightSum(col(textCol), salt,
+      weightTable(rawModel, tgtModel))
+    batch.where(col(textCol).isNotNull)
+      .select(col(idCol), w.as("__w"))
+      .select(col(idCol), col("__w.n_features"), col("__w.weight_bits"))
       .withColumn("avg_bits",
         col("weight_bits").cast("double") / col("n_features").cast("double"))
   }
@@ -164,18 +179,18 @@ object Dsir {
     * two engines select the identical set). Plans as TakeOrdered, not
     * a full sort.
     *
-    * `candidates` is consumed three ways (raw model, feature explode,
-    * final join-back), so it is cut ONCE, eagerly, as in [[dsirScore]]
-    * (`dsir_candidates`; the scoring call gets the cut back unchanged)
-    * and every consumer reads the same blocks: a direct call over a
-    * parquet corpus scans it exactly once, never ~4×.
+    * The score is appended in-row ([[dsirScoreAgainstModels]]'s
+    * expression), so no id joins back. `candidates` is still consumed
+    * twice (raw model build, scoring), so it is cut ONCE, eagerly, as
+    * in [[dsirScore]] (`dsir_candidates`) and both consumers read the
+    * same blocks: a direct call over a parquet corpus scans it exactly
+    * once. Candidates with a NULL id or NULL text are not selected.
     *
     * `weight_bits` is a RESERVED output column (it carries the score):
     * a candidate frame that already has one is rejected at analysis
     * time with a clear message rather than failing ambiguous-column
-    * deep in the join ([[dsirScoreAgainstModels]]'s n_features /
-    * avg_bits are not selected here and stay caller-visible only
-    * through that API).
+    * later ([[dsirScoreAgainstModels]]'s n_features / avg_bits are not
+    * selected here and stay caller-visible only through that API).
     */
   def dsirSelect(candidates: DataFrame, target: DataFrame, k: Int,
                  idCol: String = "doc_id", textCol: String = "text",
@@ -185,8 +200,11 @@ object Dsir {
       "dsirSelect: 'weight_bits' is a reserved output column — rename it on " +
         "the candidate frame (or score with dsirScoreAgainstModels and join yourself)")
     val c = CurationChain.LocalCheckpointMaterializer("dsir_candidates")(candidates)
-    c.join(dsirScore(c, target, idCol, textCol, salt)
-        .select(col(idCol), col("weight_bits")), Seq(idCol))
+    val w = graft.functions.DsirExprs.weightSum(col(textCol), salt,
+      weightTable(dsirModel(c, textCol, salt), dsirModel(target, textCol, salt)))
+    c.where(col(idCol).isNotNull && col(textCol).isNotNull)
+      .select(col(idCol) +: c.columns.toSeq.filter(_ != idCol).map(col) :+
+        w.getField("weight_bits").as("weight_bits"): _*)
       .orderBy(col("weight_bits").desc, col(idCol).asc)
       .limit(k)
   }

@@ -2373,12 +2373,10 @@ object ExtQueries {
   def q117(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     // [[CurationChain.StageMaterializer]] cuts: the dedup reads its
-    // input twice and dsirSelect reads ITS input four ways, so uncut
-    // the gopher+dedup lineage re-runs per branch (~10 corpus rescans)
+    // input twice and dsirSelect reads ITS input twice, so uncut the
+    // gopher+dedup lineage re-runs per branch
     val cut = CurationChain.LocalCheckpointMaterializer
-    val kept = cut("q117_gopher_keep")(d.join(
-      TextOps.gopherRules(d).where(col("keep")).select(col("doc_id")),
-      Seq("doc_id")))
+    val kept = cut("q117_gopher_keep")(TextOps.gopherKeep(d))
     val deduped = cut("q117_exact_dedup")(Dedup.exact(kept))
     Dsir.dsirSelect(deduped, deduped.where(col("lang") === "en"), k = 100)
       .select(col("doc_id"), col("lang"), col("source"), col("weight_bits"))

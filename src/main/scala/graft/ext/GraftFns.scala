@@ -159,12 +159,8 @@ object GraftFns {
       Dedup.urlDedup(d,
         urlCol = ctx.variables.getOrElse("GRAFT_URL_COL", "url"),
         idCol = idCol(ctx))),
-    step("graft_gopher_filter")((ctx, d) => {
-      val report = TextOps.gopherRules(d, idCol = idCol(ctx),
-        textCol = textCol(ctx))
-      d.join(report.where(org.apache.spark.sql.functions.col("keep"))
-        .select(org.apache.spark.sql.functions.col(idCol(ctx))), Seq(idCol(ctx)))
-    }),
+    step("graft_gopher_filter")((ctx, d) =>
+      TextOps.gopherKeep(d, idCol = idCol(ctx), textCol = textCol(ctx))),
     step("graft_dsir_select")((ctx, d) =>
       Dsir.dsirSelect(d,
         d.sparkSession.table(ctx.variables.getOrElse("GRAFT_TARGET_VIEW",

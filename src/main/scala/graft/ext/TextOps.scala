@@ -691,12 +691,13 @@ object TextOps {
     * keep the numerator integral ('...' occurrences = dotChars/3;
     * each '…' counts as one occurrence).
     *
-    * Scale shape: one row-local projection computes everything except
-    * the stop-hit count (array expressions, no explode, no shuffle);
-    * stop hits add one exploded-distinct-token pass joined against the
-    * BROADCAST ≤stopTopK-row stop list and one per-doc count — the
-    * same two-pass shape as [[stopwordFraction]]. Nothing else
-    * shuffles; the report joins back on the 8-byte id.
+    * Scale shape: the stop list is one small aggregation
+    * ([[topTokens]]: partial agg + TakeOrdered) folded into a ONE-row
+    * array and BROADCAST against the corpus; everything else, the
+    * stop-hit count included (`size(array_intersect(tokens, stops))`,
+    * the distinct stop words present), is one row-local projection —
+    * no explode, no shuffle of the corpus, no join back on the id.
+    * [[gopherKeep]] is the filtering act at the paper's thresholds.
     */
   def gopherRules(docs: DataFrame,
                   minWords: Int = 50, maxWords: Int = 100000,
@@ -715,7 +716,7 @@ object TextOps {
     // only fail later with a confusing analysis error
     val generated = Seq("n_words", "mean_word_len", "hash_ratio",
       "ellipsis_ratio", "alpha_word_frac", "bullet_line_frac",
-      "ellipsis_line_frac", "n_stop_hits", "__stop_hits", "ok_words",
+      "ellipsis_line_frac", "n_stop_hits", "ok_words",
       "ok_word_len", "ok_symbols", "ok_alpha", "ok_stops", "ok_lines",
       "keep", idCol)
     val clash = carryCols.filter(generated.contains)
@@ -729,12 +730,8 @@ object TextOps {
     // attribute back on by id — at scale that join exchanges BOTH the
     // verdict frame and the attribute frame by id (guide §3.3: carry
     // the column once instead of re-attaching it).
-    val stops = topTokens(docs, stopTopK, idCol, textCol).select(col("token"))
-    val stopHits = docs
-      .select(col(idCol), explode(tokens(col(textCol))).as("token"))
-      .distinct()
-      .join(broadcast(stops), Seq("token"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("__stop_hits"))
+    val stops = topTokens(docs, stopTopK, idCol, textCol)
+      .agg(collect_list(col("token")).as("__gopher_stops"))
     val toks = tokens(col(textCol))
     val lines = split(col(textCol), "\n")
     val nWords = size(toks).cast("long")
@@ -752,7 +749,7 @@ object TextOps {
       .cast("long")
     val nEllEnd = size(filter(lines, x =>
       x.endsWith("...") || x.endsWith("…"))).cast("long")
-    val stats = docs.select((col(idCol) +: carryCols.map(col)) ++ Seq(
+    val stats = docs.crossJoin(broadcast(stops)).select((col(idCol) +: carryCols.map(col)) ++ Seq(
         nWords.as("n_words"),
         (sumLen.cast("double") / nWords.cast("double")).as("mean_word_len"),
         (nHash.cast("double") / nWords.cast("double")).as("hash_ratio"),
@@ -760,10 +757,10 @@ object TextOps {
           (lit(3L) * nWords).cast("double")).as("ellipsis_ratio"),
         (nAlpha.cast("double") / nWords.cast("double")).as("alpha_word_frac"),
         (nBullet.cast("double") / nLines.cast("double")).as("bullet_line_frac"),
-        (nEllEnd.cast("double") / nLines.cast("double")).as("ellipsis_line_frac")): _*)
-      .join(stopHits, Seq(idCol), "left")
-      .withColumn("n_stop_hits", coalesce(col("__stop_hits"), lit(0L)))
-      .drop("__stop_hits")
+        (nEllEnd.cast("double") / nLines.cast("double")).as("ellipsis_line_frac"),
+        when(toks.isNull, lit(0L))
+          .otherwise(size(array_intersect(toks, stops("__gopher_stops"))).cast("long"))
+          .as("n_stop_hits")): _*)
     stats
       .withColumn("ok_words",
         col("n_words") >= minWords && col("n_words") <= maxWords)
@@ -781,6 +778,21 @@ object TextOps {
       .withColumn("keep",
         col("ok_words") && col("ok_word_len") && col("ok_symbols") &&
           col("ok_alpha") && col("ok_stops") && col("ok_lines"))
+  }
+
+  /** The rows of `docs` that pass [[gopherRules]] at the paper's
+    * thresholds, every column unchanged — the rule set's act, with no
+    * id joined back. The row rides the report as one struct column, so
+    * a frame may carry columns named like the report's own (`keep`,
+    * `n_words`, …).
+    */
+  def gopherKeep(docs: DataFrame, idCol: String = "doc_id",
+                 textCol: String = "text"): DataFrame = {
+    val row = "__gopher_row"
+    gopherRules(docs.select(col(idCol), col(textCol),
+        struct(docs.columns.toSeq.map(c => col(s"`$c`")): _*).as(row)),
+        idCol = idCol, textCol = textCol, carryCols = Seq(row))
+      .where(col("keep")).select(col(s"$row.*"))
   }
 
   /** Corpus-derived stopword fraction: share of each document's tokens

@@ -55,10 +55,25 @@ private[graft] object BatchRoot {
     * throw on every redelivery and wedges the stream, so such a root
     * is a cold start.
     */
-  def committed(spark: SparkSession, root: String, partCol: String): Boolean = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    partitions(spark, root, partCol).exists(fs.listStatus(_).exists(f =>
-      f.isFile && !Seq("_", ".").exists(f.getPath.getName.startsWith)))
+  def committed(spark: SparkSession, root: String, partCol: String): Boolean =
+    partitions(spark, root, partCol).exists(p => holdsDataFile(spark, p.toString))
+
+  /** Whether the flat directory `dir` exists and directly holds a
+    * visible (not `_`- or `.`-prefixed) file; the listing stops at the
+    * first one.
+    */
+  def holdsDataFile(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(p) && {
+      val it = fs.listStatusIterator(p)
+      var found = false
+      while (!found && it.hasNext) {
+        val f = it.next()
+        found = f.isFile && !Seq("_", ".").exists(f.getPath.getName.startsWith)
+      }
+      found
+    }
   }
 
   /** The strictly-earlier state of `root` as seen by batch `batchId`,

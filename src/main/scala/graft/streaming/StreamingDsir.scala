@@ -24,8 +24,9 @@ import graft.ext.Dsir
   *
   * Scale shape per micro-batch: merging the rolled model partitions is
   * a ≤65536-row-per-partition aggregation (model-scale, not
-  * corpus-scale); scoring is [[Dsir.dsirScoreAgainstModels]]'s
-  * explode → two broadcast joins → one per-batch-doc sum. A
+  * corpus-scale); scoring is [[Dsir.dsirScoreAgainstModels]]'s one
+  * row-local expression per batch doc against the broadcast weight
+  * table of the two models (no explode, join or shuffle). A
   * long-lived stream accretes one small partition per batch under the
   * model root; [[StreamingDedup.compactIndex]] folds them verbatim
   * (it rewrites rows without aggregating, and the probe re-aggregates

@@ -51,4 +51,21 @@ class ErrorLogSpec extends AnyFunSuite {
     }
     assert(errors.size === 0, s"ERROR lines:\n${errors.take(5).mkString("\n")}")
   }
+
+  test("a delta extract onto a crash-left landing logs no ERROR") {
+    val work = SparkTestBase.tmpDir("graft_crashed_landing")
+    val ctx = graft.exec.EtlContext(spark, graft.io.Lake(work),
+      new graft.io.FileWarehouse(spark, s"$work/wh"))
+    // a crashed first write leaves only its hidden _temporary directory
+    val p = ctx.lake.tablePath("datalake", "sys", "main", "sch", "crashed")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p, "_temporary"))
+    val df = spark.range(10).toDF("k").withColumn("ts", col("k").cast("string"))
+    val errors = errorsDuring {
+      graft.exec.PipelineRunner.extractDf(ctx, df, "sys", "main", "sch", "crashed",
+        readMode = graft.config.ReadMode.Delta,
+        delta = Some(graft.exec.PipelineRunner.DeltaSpec("ts", "7")))
+    }
+    assert(errors.size === 0, s"ERROR lines:\n${errors.take(5).mkString("\n")}")
+    assert(spark.read.parquet(p).count() === 3L)
+  }
 }

@@ -3337,6 +3337,59 @@ class ExtSpec extends AnyFunSuite {
     assert(!d6.getAs[Boolean]("ok_symbols") && !d6.getAs[Boolean]("keep"))
   }
 
+  test("gopherRules: n_stop_hits == the explode/distinct/semi-join count, NULL text and empty corpus included") {
+    // the spelling the one-row stop-list broadcast replaced
+    def refStopHits(df: org.apache.spark.sql.DataFrame, k: Int) = {
+      val stops = TextOps.topTokens(df, k).select(col("token"))
+      val hits = df.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .distinct()
+        .join(broadcast(stops), Seq("token"), "left_semi")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("__h"))
+      df.select("doc_id").join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("__h"), lit(0L)))
+        .as[(Long, Long)].collect().sortBy(_._1).toSeq
+    }
+    def got(df: org.apache.spark.sql.DataFrame, k: Int) =
+      TextOps.gopherRules(df, stopTopK = k).select("doc_id", "n_stop_hits")
+        .as[(Long, Long)].collect().sortBy(_._1).toSeq
+    val crafted = docsDf(
+      1L -> "aa bb aa bb aa cc",
+      2L -> "xx yy",
+      3L -> "aa # ... zz",
+      4L -> "- one aa\n- two bb\nplain zz...",
+      5L -> "aa bb # ... aa bb aa bb aa bb",
+      6L -> "aa … bb",
+      7L -> null,
+      8L -> "aa  bb  ")
+    for (k <- Seq(1, 2, 3, 20)) {
+      val want = refStopHits(crafted, k)
+      assert(got(crafted, k) === want, s"stopTopK=$k")
+      assert(want.exists(_._2 > 0) && want.contains(7L -> 0L))
+    }
+    val empty = docsDf()
+    assert(got(empty, 20).isEmpty && refStopHits(empty, 20).isEmpty)
+  }
+
+  test("gopherKeep == the report's keep ids joined back, on a frame carrying keep and n_words") {
+    def words(s: String, n: Int) = Seq.fill(n)(s).mkString(" ")
+    val df = docsDf(
+      1L -> words("the quick brown fox jumps over lazy dogs", 7),
+      2L -> words("the slow green turtle walks under tall trees", 7),
+      3L -> "the quick brown fox",
+      4L -> words("# the quick brown fox jumps over dogs", 7),
+      5L -> null)
+      .withColumn("keep", lit(false))
+      .withColumn("n_words", lit(-1L))
+    val ref = df.join(TextOps.gopherRules(df).where(col("keep")).select(col("doc_id")),
+      Seq("doc_id"))
+    val kept = TextOps.gopherKeep(df)
+    assert(kept.columns.toSeq === df.columns.toSeq)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select(df.columns.toSeq.map(col): _*).collect().sortBy(_.getLong(0)).toSeq
+    assert(rows(kept) === rows(ref))
+    assert(rows(kept).map(_.getLong(0)) === Seq(1L, 2L))
+  }
+
   test("tokenDrift: hand-computed shares and deltas, |delta|-ranked cut, one-sided tokens") {
     import graft.ext.Diff
     val older = docsDf(1L -> "a a b")
@@ -3532,6 +3585,72 @@ class ExtSpec extends AnyFunSuite {
       Dsir.dsirSelect(cand, tgt, k = 1)
     }
     assert(e.getMessage.contains("reserved"))
+  }
+
+  test("dsir: scoring is row-local; a NULL-text row yields no score row, the others score as before") {
+    import graft.ext.Dsir
+    val cand = Seq(1L -> "the quick brown fox", 2L -> "zxq vvk wop",
+      3L -> "the lazy dog")
+    val tgt = Seq("the quick brown fox runs")
+    val candDf = (cand :+ (9L -> (null: String))).toDF("doc_id", "text")
+    val tgtDf = tgt.map(t => (100L, t)).toDF("doc_id", "text")
+    val got = Dsir.dsirScore(candDf, tgtDf)
+      .select("doc_id", "n_features", "weight_bits")
+      .as[(Long, Long, Long)].collect()
+      .map { case (id, n, w) => id -> ((n, w)) }.toMap
+    assert(got === dsirRef(cand, tgt))
+    val probe = Dsir.dsirScoreAgainstModels(candDf, Dsir.dsirModel(candDf),
+      Dsir.dsirModel(tgtDf))
+    val plan = probe.queryExecution.executedPlan.toString
+    for (node <- Seq("Generate", "Join", "Exchange"))
+      assert(!plan.contains(node), s"DSIR scoring plan holds $node:\n$plan")
+    assert(probe.select("doc_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(!Dsir.dsirSelect(candDf, tgtDf, k = 10)
+      .select("doc_id").as[Long].collect().contains(9L))
+  }
+
+  test("dsir: a model holding a bucket twice or a non-hex bucket is rejected loudly") {
+    import graft.ext.Dsir
+    val batch = Seq(1L -> "the quick fox").toDF("doc_id", "text")
+    val good = Dsir.dsirModel(batch)
+    def model(rows: (String, java.lang.Long)*) = rows.toDF("__bucket", "__cf")
+    val cases = Seq(
+      model("abcd" -> 1L, "abcd" -> 2L) -> "twice",
+      model("abc" -> 1L) -> "4 lowercase hex",
+      model("ABCD" -> 1L) -> "4 lowercase hex",
+      model((null: String) -> 1L) -> "4 lowercase hex")
+    for ((bad, msg) <- cases; (raw, tgt) <- Seq(bad -> good, good -> bad)) {
+      val e = intercept[IllegalArgumentException] {
+        Dsir.dsirScoreAgainstModels(batch, raw, tgt)
+      }
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
+
+  test("dsirSelect and q117 give the same rows under repartition(7)") {
+    import graft.ext.Dsir
+    val cand = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "the quick brown cat sleeps on the warm mat",
+      3L -> "zxq vvk wop qnd lrm zxq vvk wop",
+      4L -> "the lazy dog naps near the quick fox",
+      5L -> "qqq rrr sss ttt uuu",
+      6L -> "the warm sun and the quick dog")
+      .toDF("doc_id", "text")
+    val tgt = Seq(100L -> "the quick brown fox runs over the green hill")
+      .toDF("doc_id", "text")
+    def sel(c: org.apache.spark.sql.DataFrame) =
+      Dsir.dsirSelect(c, tgt, k = 4).collect().toSeq
+    assert(sel(cand.repartition(7)) === sel(cand))
+    // q117 over the same corpus landed as 7 files
+    val dir = SparkTestBase.tmpDir("q117_rep7")
+    spark.read.parquet(s"$sf/documents.parquet").repartition(7)
+      .write.parquet(s"$dir/documents.parquet")
+    def q117(d: String) = SparkEntry.queries("q117_selection_pipeline")(spark, d)
+      .collect().toSeq
+    val base = q117(sf)
+    assert(base.nonEmpty)
+    assert(q117(dir) === base)
   }
 
   // ---- char-mode exact-substring dedup (Lee et al.'s native grain) ----

@@ -121,6 +121,34 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.getSeq[Long](0) === r.getSeq[Long](1))
   }
 
+  test("dsir featureBuckets == the md5-slice Column pipeline, per feature, in order") {
+    import org.apache.spark.sql.functions._
+    // the Column pipeline the native expression replaced: unigrams ++
+    // adjacent bigrams of split(text, " "), each md5(f || salt)[1..4]
+    def oldBuckets(t: org.apache.spark.sql.Column, salt: String) = {
+      val toks = split(t, " ")
+      val m = greatest(size(toks) - 1, lit(0))
+      val bigrams = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
+        (a, b) => concat(a, lit(" "), b))
+      transform(concat(toks, bigrams), f => substring(md5(concat(f, lit(salt))), 1, 4))
+    }
+    val fixtures = Seq("the quick brown fox", "你好 世界 今天 好",
+      "😀🎉 party 🎂 time", "áb̂c d é f", "", "single", "a  double  space",
+      " leading and trailing ", " ", "  ", ("tok " * 100).trim, null)
+    val df = fixtures.toDF("t")
+    for (salt <- Seq("graft", "sälz 塩")) {
+      val rows = df.select(col("t"),
+          graft.ext.Dsir.featureBuckets(col("t"), salt).as("nw"),
+          oldBuckets(col("t"), salt).as("old"))
+        .collect()
+      rows.filter(_.isNullAt(0)).foreach(r => assert(r.isNullAt(1) && r.isNullAt(2)))
+      rows.filter(!_.isNullAt(0)).foreach { r =>
+        assert(r.getSeq[String](1) === r.getSeq[String](2),
+          s"feature buckets diverged for salt=$salt text='${r.getString(0)}'")
+      }
+    }
+  }
+
   test("max_token_multiplicity and interleave_bits callable from SQL") {
     GraftFunctions.register(spark)
     val top = spark.sql("SELECT max_token_multiplicity('a b a c a') AS m")

@@ -378,6 +378,21 @@ class PipelineSpec extends AnyFunSuite {
       === Seq("7", "8", "9"))
   }
 
+  test("a landing that holds a data file but cannot be read fails the delta extract") {
+    val (ctx, _, work) = mkCtx()
+    val c = ctx.copy(lake = Lake(s"$work/lk"))
+    val df = spark.range(10).toDF("k").withColumn("ts", col("k").cast("string"))
+    val p = c.lake.tablePath("datalake", "sys", "main", "sch", "torn")
+    Files.createDirectories(Paths.get(p))
+    Files.write(Paths.get(p, "part-00000.parquet"), "not parquet".getBytes("UTF-8"))
+    // taking it for an empty landing would re-land the whole boundary
+    // slice over data the probe could not see
+    intercept[Exception] {
+      PipelineRunner.extractDf(c, df, "sys", "main", "sch", "torn",
+        readMode = ReadMode.Delta, delta = Some(PipelineRunner.DeltaSpec("ts", "7")))
+    }
+  }
+
   test("warehouse engine step: whole query runs against warehouse catalog") {
     val (ctx, wh, _) = mkCtx()
     wh.replace(spark.range(3).toDF("k"), "stg", "nums")

@@ -36,6 +36,7 @@ class PlanPinSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
   private val tablePath = "src/test/resources/plan_fingerprints.tsv"
+  private val jobBudgetPath = "src/test/resources/job_budget.tsv"
 
   private def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
     val s = df.queryExecution.executedPlan.toString
@@ -75,5 +76,25 @@ class PlanPinSpec extends AnyFunSuite {
       assert(want.keySet === got.map(_._1).toSet,
         s"stale fingerprint rows for removed queries — $regenHint")
     }
+  }
+
+  /** Spark-job budget pins: the exact number of jobs a query starts at
+    * sf0.001 (building its DataFrame, with its eager cuts and model
+    * collects, plus one noop write). The job-bound chains pay per job
+    * in scheduling round trips, not per byte, so a change that adds
+    * jobs to one of them fails here instead of only in a noisy
+    * benchmark. An intentional change re-pins `job_budget.tsv` with the
+    * counts this test reports.
+    */
+  test("pinned queries start exactly their budgeted Spark jobs at sf0.001") {
+    val want: Seq[(String, Int)] = scala.io.Source.fromFile(jobBudgetPath).getLines()
+      .filter(_.nonEmpty)
+      .map { l => val Array(q, n) = l.split("\t"); q -> n.toInt }.toSeq
+    val got = want.map { case (q, _) =>
+      q -> SparkTestBase.jobsDuring(SparkEntry.queries(q)(spark, sf)
+        .write.format("noop").mode("overwrite").save())
+    }
+    assert(got === want,
+      s"job counts drifted; observed:\n${got.map { case (q, n) => s"$q\t$n" }.mkString("\n")}")
   }
 }
