@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.merge.JournalMerge
+import graft.io.Parquet
 
 /** Relational query registry: each entry exercises a library operator
   * end-to-end over the driver's parquet fixtures and has an equivalent
@@ -21,7 +22,7 @@ import graft.merge.JournalMerge
 object Queries {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Driver fixture generations have shipped `events.ts` in two parquet
     * spellings: TIMESTAMP(NANOS) — which Spark's vectorized reader

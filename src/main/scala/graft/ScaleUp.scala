@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Scale-up derivation tool: replicate the driver's deterministic
   * testdata by an integer factor while PRESERVING its statistical
@@ -65,7 +66,7 @@ object ScaleUp {
     // events.parquet is TIMESTAMP(NANOS) — readable only as long (the
     // same conf every events consumer sets, e.g. Queries.events)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Parquet.read(spark, s"$src/$t.parquet")
     // Write the scaled corpus MULTI-FILE (one file per core): the
     // driver fixtures are single-file single-ROW-GROUP parquet, which
     // Spark cannot split — left as-is, every scan of the 10× corpus

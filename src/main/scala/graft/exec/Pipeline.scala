@@ -3,7 +3,7 @@ package graft.exec
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.config._
-import graft.io.{Connections, Lake, Warehouse}
+import graft.io.{Connections, Lake, Parquet, Warehouse}
 import graft.merge.JournalMerge
 
 /** Execution context for a pipeline run — collapses the reference's
@@ -262,26 +262,21 @@ object PipelineRunner {
   /** Already-landed rows at exactly the mark value, or None when the
     * landing holds no visible data file yet (absent, empty, or only a
     * `_temporary` directory left by a crashed first write — the
-    * [[graft.streaming.BatchRoot.committed]] rule) or its schema
-    * drifted (a column added or retyped since the last run makes the
-    * all-columns anti-join unsound). In either None case the caller
-    * lands the whole boundary slice: at-least-once is preserved, the
-    * dedup is best-effort. A landing that holds data but fails to read
-    * throws, rather than being taken for an empty one.
+    * [[Parquet.readIfPresent]] rule) or its schema drifted (a column
+    * added or retyped since the last run makes the all-columns
+    * anti-join unsound). In either None case the caller lands the
+    * whole boundary slice: at-least-once is preserved, the dedup is
+    * best-effort. A landing that holds data but fails to read throws,
+    * rather than being taken for an empty one.
     */
   private def landedBoundary(ctx: EtlContext, path: String, column: String,
                              mark: org.apache.spark.sql.Column,
                              incoming: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    if (!graft.streaming.BatchRoot.holdsDataFile(ctx.spark, path)) None
-    else {
-      val landed = ctx.spark.read.parquet(path)
-      val comparable = incoming.fields.forall(f =>
-        landed.schema.fields.exists(g => g.name == f.name && g.dataType == f.dataType))
-      if (!comparable) None
-      else Some(landed.where(col(column) === mark)
-        .select(incoming.fieldNames.toSeq.map(col): _*))
-    }
+    Parquet.readIfPresent(ctx.spark, path)
+      .filter(landed => incoming.fields.forall(f =>
+        landed.schema.fields.exists(g => g.name == f.name && g.dataType == f.dataType)))
+      .map(_.where(col(column) === mark).select(incoming.fieldNames.toSeq.map(col): _*))
   }
 
   /** F24 with a JDBC source: resolve the connection from variables

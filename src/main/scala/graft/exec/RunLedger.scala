@@ -2,6 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Per-run operational ledger — the audit/lineage record the reference
   * got for free from Airflow's task-instance metadata (task id, run
@@ -70,7 +71,7 @@ object RunLedger {
 
   /** The full run history, newest first. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).orderBy(col("started_ms").desc)
+    Parquet.read(spark, dir).orderBy(col("started_ms").desc)
 
   /** Ledger maintenance: fold the one-tiny-file-per-run appends into
     * `ceil(bytes/targetBytes)` files (usually ONE for years of runs —
@@ -108,7 +109,7 @@ object RunLedger {
     if (n == dataFiles.length) return n // already at target: no-op
     val tmp = new Path(dir.stripSuffix("/") + "__compact_tmp")
     val old = new Path(dir.stripSuffix("/") + "__compact_old")
-    val src = spark.read.parquet(dir)
+    val src = Parquet.read(spark, dir)
     // the staged row count rides the staging write itself (no re-scan)
     val staged = countDuring(
       if (n < dataFiles.length) src.coalesce(n) else src.repartition(n))(
@@ -163,7 +164,7 @@ object RunLedger {
           s"diverged from the staged file set); originals restored, post-swap files " +
           s"moved to $aside — merge them back and re-run quiesced")
     }
-    val live = spark.read.parquet(old.toString).count()
+    val live = Parquet.read(spark, old.toString).count()
     if (live != staged) {
       // d holds the staged rewrite PLUS any append that landed after
       // the swap — move it aside intact rather than deleting it
@@ -261,7 +262,7 @@ object RunLedger {
     * sort last within their run).
     */
   def readDagRuns(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).orderBy(col("started_ms").desc_nulls_last)
+    Parquet.read(spark, dir).orderBy(col("started_ms").desc_nulls_last)
 
   /** Run `write` on the observed frame and return the rows it landed —
     * the count rides the write's own pass (no second scan).

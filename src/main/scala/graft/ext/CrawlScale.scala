@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Corpus-scale WARC measurement: land a scaled documents corpus as
   * REAL `.warc.gz` crawl shards, then time the full q132 composition
@@ -33,7 +34,7 @@ object CrawlScale {
 
   /** The crawl-page frame derived from a corpus dir's documents. */
   def pages(spark: SparkSession, corpusDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$corpusDir/documents.parquet")
     val url =
       when(col("doc_id") % 997 === 0,
         concat(lit("https://ads.example.net/casino/"), col("doc_id")))
@@ -238,8 +239,8 @@ object CrawlScale {
     // inbound edge is absent from the rank snapshot and would be
     // inner-join-dropped — assert the premise instead of assuming it
     import graft.streaming.BatchRoot
-    val gatedN = spark.read.parquet(BatchRoot.dir(s"$workDir/pass1/out", 0L)).count()
-    val ungatedN = spark.read.parquet(BatchRoot.dir(s"$workDir/pass1/uout", 0L)).count()
+    val gatedN = Parquet.read(spark, BatchRoot.dir(s"$workDir/pass1/out", 0L)).count()
+    val ungatedN = Parquet.read(spark, BatchRoot.dir(s"$workDir/pass1/uout", 0L)).count()
     println(s"CRAWLSCALE stream landed $gatedN gated / " +
       s"$ungatedN ungated rows/batch")
     require(gatedN == ungatedN,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.exec.EtlContext
+import graft.io.Parquet
 
 /** The full curation pipeline as ONE composable chain — the product's
   * actual usage shape: encoding gate → normalize-dedup → MinHash
@@ -185,7 +186,7 @@ object CurationChain {
       val path = new Path(dir, stage)
       if (!fs.exists(new Path(path, "_SUCCESS")))
         d.write.mode("overwrite").parquet(path.toString)
-      spark.read.parquet(path.toString)
+      Parquet.read(spark, path.toString)
     }
   }
 

@@ -581,6 +581,16 @@ object Dedup {
       .join(bSizes.select(col(idCol).as("b_id"), col("__n").as("__nb")), "b_id")
       .where(greatest(col("__na"), col("__nb")) * threshold <=
         least(col("__na"), col("__nb")) + lit(1e-9))
+    verifySized(compat, aHashedSets, bHashedSets, idCol, threshold)
+  }
+
+  /** The array half of [[verifyJaccardTwoSided]]: exact Jaccard on
+    * `(a_id, b_id, __na, __nb)` pairs that already carry both set sizes
+    * and passed the size bound.
+    */
+  private def verifySized(compat: DataFrame, aHashedSets: DataFrame,
+                          bHashedSets: DataFrame, idCol: String,
+                          threshold: Double): DataFrame = {
     val aSets = aHashedSets.select(col(idCol).as("a_id"), col("__hs").as("__hsa"))
     val bSets = bHashedSets.select(col(idCol).as("b_id"), col("__hs").as("__hsb"))
     compat.join(aSets, "a_id").join(bSets, "b_id")
@@ -648,7 +658,7 @@ object Dedup {
                             CurationChain.LocalCheckpointMaterializer): DataFrame = {
     // the hashed-set frame feeds every branch of either strategy —
     // postings (twice: docFreq + the candidate join), sizes, and the
-    // exact verify's four consumptions — so an unmaterialized lineage
+    // exact verify's array joins — so an unmaterialized lineage
     // re-shingles the corpus up to ~8× (the q13 plan showed 16 shingle
     // projections over 20 scans). One cut computes it once; the HOW is
     // the injectable StageMaterializer seam (default localCheckpoint).
@@ -741,8 +751,11 @@ object Dedup {
               lit(1) + least(col("__na") - col("__rna"), col("__nb") - col("__rnb")) >=
                 ceil(lit(threshold / (1.0 + threshold)) * (col("__na") + col("__nb")) - lit(1e-9)))
           else joined
-        val cands = bounded.select("a_id", "b_id").distinct()
-        verifyJaccard(cands, hs, idCol, threshold)
+        // both sizes ride the candidate distinct (they are functions of
+        // the ids) and the size bound already ran inside the join, so
+        // the verify skips its size pass
+        val cands = bounded.select("a_id", "b_id", "__na", "__nb").distinct()
+        verifySized(cands, hs, hs, idCol, threshold)
       case other =>
         throw new IllegalArgumentException(s"unknown strategy '$other' (count|prefix)")
     }

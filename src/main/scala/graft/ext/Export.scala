@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Sharded training-corpus export (§2c extension): deterministic
   * hash-assignment of documents to a fixed number of output shards,
@@ -145,7 +146,7 @@ object Export {
       .sortWithinPartitions(col("shard"), col("seq"))
       .write.mode("overwrite").partitionBy("shard")
       .parquet(s"$outDir/data")
-    spark.read.parquet(s"$outDir/data")
+    Parquet.read(spark, s"$outDir/data")
   }
 
   /** One 60-bit seeded hash per (id, epoch) SAMPLE — the multi-epoch
@@ -278,7 +279,7 @@ object Export {
       .write.mode("overwrite").partitionBy("epoch", "shard")
       .parquet(s"$outDir/data")
     intended.coalesce(1).write.mode("overwrite").parquet(s"$outDir/_manifest")
-    val manifest = spark.read.parquet(s"$outDir/_manifest")
+    val manifest = Parquet.read(spark, s"$outDir/_manifest")
     // the cheap witness: the totals the WRITE itself observed vs the
     // landed manifest's totals — one group-cardinality agg, no re-scan
     val m = obs.get
@@ -298,7 +299,7 @@ object Export {
         s"bytes=${t.getAs[Long]("n_bytes")}, " +
         s"xor=${t.getAs[Long]("checksum")}) — torn landing")
     if (!verifyLanded) manifest
-    else spark.read.parquet(s"$outDir/data")
+    else Parquet.read(spark, s"$outDir/data")
       .select(
         col("epoch").cast("long").as("epoch"),
         col("shard").cast("long").as("shard"),
@@ -395,7 +396,7 @@ object Export {
       .write.mode("overwrite").partitionBy("shard")
       .parquet(s"$outDir/data")
     intended.coalesce(1).write.mode("overwrite").parquet(s"$outDir/_manifest")
-    val landed = spark.read.parquet(s"$outDir/data")
+    val landed = Parquet.read(spark, s"$outDir/data")
     // recompute from what actually landed; shard column is read back
     // from the directory layout, so a row in the wrong directory shows
     // up as a manifest mismatch, not silence

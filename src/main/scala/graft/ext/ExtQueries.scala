@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** CORRECTNESS registry for the LLM-data-pipeline operators over the
   * driver's `documents`/`embeddings` fixtures. Each query is an
@@ -29,9 +30,9 @@ object ExtQueries {
   private def fanOut(df: DataFrame, spark: SparkSession): DataFrame =
     df.repartition(spark.sparkContext.defaultParallelism)
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    fanOut(spark.read.parquet(s"$dir/documents.parquet"), spark)
+    fanOut(Parquet.read(spark, s"$dir/documents.parquet"), spark)
   private def emb(spark: SparkSession, dir: String): DataFrame =
-    fanOut(spark.read.parquet(s"$dir/embeddings.parquet"), spark)
+    fanOut(Parquet.read(spark, s"$dir/embeddings.parquet"), spark)
 
   /** Spark-visible scratch location for session-shared artifacts (the
     * pair graph, the MinHash index). `graft.scratch.dir` may point to
@@ -80,7 +81,7 @@ object ExtQueries {
       Dedup.writePairGraph(docs(spark, dir), p, shingleSize = 3, threshold = 0.8)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Marker-token language profiles (sorted by language, which is the
@@ -163,7 +164,7 @@ object ExtQueries {
   def q27(spark: SparkSession, dir: String): DataFrame = {
     val e = graft.Queries.events(spark, dir)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-    val o = spark.read.parquet(s"$dir/orders.parquet")
+    val o = Parquet.read(spark, s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey").as("user_id"),
         (unix_millis(col("o_orderdate").cast("timestamp")) * 1000).as("ous"))
     AsOfJoin.asOf(e, o, keyCols = Seq("user_id"),
@@ -251,8 +252,8 @@ object ExtQueries {
     * referential orphan check, one report row per rule.
     */
   def q58(spark: SparkSession, dir: String): DataFrame = {
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
-    val customer = spark.read.parquet(s"$dir/customer.parquet")
+    val orders = Parquet.read(spark, s"$dir/orders.parquet")
+    val customer = Parquet.read(spark, s"$dir/customer.parquet")
     val scalar = Checks.report(orders, Seq(
       Checks.Rule("null_custkey", col("o_custkey").isNull),
       Checks.Rule("totalprice_over_400k", col("o_totalprice") > 400000),
@@ -274,16 +275,16 @@ object ExtQueries {
 
   /** Column profile of orders (null + exact distinct counts per column). */
   def q60(spark: SparkSession, dir: String): DataFrame =
-    Checks.profile(spark.read.parquet(s"$dir/orders.parquet"),
+    Checks.profile(Parquet.read(spark, s"$dir/orders.parquet"),
       Seq("o_orderstatus", "o_orderpriority", "o_orderdate", "o_custkey"))
       .orderBy("col_name")
 
   /** Salted skew-safe join == plain inner join (the oracle proves it). */
   def q62(spark: SparkSession, dir: String): DataFrame =
     Joins.salted(
-      spark.read.parquet(s"$dir/orders.parquet")
+      Parquet.read(spark, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey")),
-      spark.read.parquet(s"$dir/customer.parquet")
+      Parquet.read(spark, s"$dir/customer.parquet")
         .select(col("c_custkey").as("o_custkey"), col("c_name")),
       keys = Seq("o_custkey"), buckets = 8)
       .orderBy("o_orderkey")
@@ -338,7 +339,7 @@ object ExtQueries {
         minTokens = 8).write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Incremental exact-substring cut ([[Dedup.stripExactSubstringsAgainstIndex]]):
@@ -368,7 +369,7 @@ object ExtQueries {
         minChars = 50).write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Incremental exact-substring cut at CHAR grain
@@ -393,7 +394,7 @@ object ExtQueries {
         shingleSize = 3).write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   def q46(spark: SparkSession, dir: String): DataFrame =
@@ -464,7 +465,7 @@ object ExtQueries {
   /** PII redaction scan over per-customer contact notes. */
   def q36(spark: SparkSession, dir: String): DataFrame =
     Privacy.piiScan(
-      spark.read.parquet(s"$dir/customer.parquet")
+      Parquet.read(spark, s"$dir/customer.parquet")
         .select(col("c_custkey").as("custkey"), piiNote.as("note")),
       "note")
       .select("custkey", "redacted", "n_emails", "n_cards", "n_phones")
@@ -1116,7 +1117,7 @@ object ExtQueries {
     */
   def q42(spark: SparkSession, dir: String): DataFrame =
     TextOps.charClassProfile(
-      spark.read.parquet(s"$dir/part.parquet")
+      Parquet.read(spark, s"$dir/part.parquet")
         .select(col("p_partkey").as("partkey"),
           concat_ws(" ", col("p_name"), col("p_brand"), col("p_type")).as("label")),
       "label")
@@ -1184,11 +1185,11 @@ object ExtQueries {
       val bp = scratchPath(spark, "exact_bloom", dir)
       Dedup.exactIndex(docs(spark, dir).where(col("doc_id") % 10 =!= 0))
         .write.mode("overwrite").parquet(ip)
-      Dedup.bloomOfIndex(spark.read.parquet(ip))
+      Dedup.bloomOfIndex(Parquet.read(spark, ip))
         .write.mode("overwrite").parquet(bp)
       (ip, bp)
     })
-    (spark.read.parquet(ip), spark.read.parquet(bp))
+    (Parquet.read(spark, ip), Parquet.read(spark, bp))
   }
 
   /** q74's incremental exact dedup THROUGH the Bloom prefilter: the
@@ -1231,7 +1232,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Persisted-LM probe: the ingest batch (doc_id % 10 == 0) scored
@@ -1266,7 +1267,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Persisted-ANN probe: the ingest batch (vec_id % 10 == 0) top-k'd
@@ -1321,7 +1322,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Incremental IMAGE dedup: the ingest batch (doc_id % 10 == 0,
@@ -1398,7 +1399,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Persisted-quality-model probe: the ingest batch (doc_id % 10 ==
@@ -1431,7 +1432,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Trained-language-ID probe: the ingest slice (doc_id % 10 == 0)
@@ -2006,7 +2007,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    Bpe.loadMerges(spark.read.parquet(path))
+    Bpe.loadMerges(Parquet.read(spark, path))
   }
 
   /** Sequence packing by SUBWORD (BPE) token counts from the persisted
@@ -2037,7 +2038,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    UnigramLm.loadModel(spark.read.parquet(path))
+    UnigramLm.loadModel(Parquet.read(spark, path))
   }
 
   /** Sequence packing by UNIGRAM-LM (SentencePiece-style) token counts
@@ -2340,7 +2341,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(tp)
       (rp, tp)
     })
-    (spark.read.parquet(rawP), spark.read.parquet(tgtP))
+    (Parquet.read(spark, rawP), Parquet.read(spark, tgtP))
   }
 
   /** Incremental DSIR ([[Dsir.dsirScoreAgainstModels]]): the
@@ -2446,7 +2447,7 @@ object ExtQueries {
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   /** Incremental duplicate-line cut

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.exec.EtlContext
+import graft.io.Parquet
 
 /** TABLE-LEVEL operators as named fn steps — the SQL-pipeline seam for
   * everything a scalar function cannot express.
@@ -176,14 +177,14 @@ object GraftFns {
     step("graft_bpe_tokenize")((ctx, d) =>
       d.withColumn(tokensCol(ctx),
         Bpe.tokens(org.apache.spark.sql.functions.col(textCol(ctx)),
-          Bpe.loadMerges(d.sparkSession.read.parquet(
+          Bpe.loadMerges(Parquet.read(d.sparkSession, 
             ctx.variables.getOrElse("GRAFT_BPE_MODEL",
               throw new graft.config.ConfigException(
                 "graft_bpe_tokenize requires the GRAFT_BPE_MODEL variable (model parquet path)"))))))),
     step("graft_unigram_tokenize")((ctx, d) =>
       d.withColumn(tokensCol(ctx),
         UnigramLm.tokens(org.apache.spark.sql.functions.col(textCol(ctx)),
-          UnigramLm.loadModel(d.sparkSession.read.parquet(
+          UnigramLm.loadModel(Parquet.read(d.sparkSession, 
             ctx.variables.getOrElse("GRAFT_UNIGRAM_MODEL",
               throw new graft.config.ConfigException(
                 "graft_unigram_tokenize requires the GRAFT_UNIGRAM_MODEL variable (model parquet path)"))))))),

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Trainable language identification — the CCNet/fastText-lid shape:
   * a char-n-gram classifier TRAINED on labeled text, persisted, and
@@ -206,5 +207,5 @@ object LangModel {
   /** The persisted predictions face of a [[writePredictions]] dir. */
   def predictions(spark: org.apache.spark.sql.SparkSession,
                   snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/predictions")
+    Parquet.read(spark, s"$snapshotDir/predictions")
 }

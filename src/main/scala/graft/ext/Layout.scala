@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Data-layout operators for the lake side of the pipeline
   * (beyond-reference scope, SURVEY.md §2c): multi-dimensional
@@ -57,7 +58,7 @@ object Layout {
       // a scheduled compactor must not pay a full rewrite for a no-op
       n
     } else {
-      val src = spark.read.parquet(path)
+      val src = Parquet.read(spark, path)
       val rewritten =
         if (sortCols.nonEmpty)
           src.repartitionByRange(n, sortCols.map(col): _*)

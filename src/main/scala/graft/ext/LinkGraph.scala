@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Host-level link graph — the crawl-curation stage the URL/content
   * filters don't cover: WHO LINKS WHOM. Common Crawl publishes exactly
@@ -792,7 +793,7 @@ object LinkGraph {
                         weightedByLinks: Boolean = false,
                         sortedFold: Boolean = true): DataFrame = {
     edges.write.mode("overwrite").parquet(s"$outDir/edges")
-    hostRank(spark.read.parquet(s"$outDir/edges"), iterations, damping,
+    hostRank(Parquet.read(spark, s"$outDir/edges"), iterations, damping,
       sortedFold, weightedByLinks = weightedByLinks)
       .write.mode("overwrite").parquet(s"$outDir/rank")
     // the metadata the PROBE side needs, landed WITH the artifact (the
@@ -801,7 +802,7 @@ object LinkGraph {
     // build parameters let roll-forward fail loudly on drift instead of
     // silently chaining ranks that mean different things
     import spark.implicits._
-    Seq((spark.read.parquet(s"$outDir/rank").count(),
+    Seq((Parquet.read(spark, s"$outDir/rank").count(),
       iterations, damping, weightedByLinks, sortedFold))
       .toDF("n_hosts", "iterations", "damping", "weighted_by_links",
         "sorted_fold")
@@ -813,7 +814,7 @@ object LinkGraph {
     * [[writeRankSnapshot]]) — a cheap parquet scan, host-cardinality.
     */
   def rankSnapshot(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/rank")
+    Parquet.read(spark, s"$snapshotDir/rank")
 
   /** A snapshot's landed build record (see [[writeRankSnapshot]]). */
   final case class RankSnapshotMeta(nHosts: Long, iterations: Int,
@@ -843,7 +844,7 @@ object LinkGraph {
       s"rankSnapshotMeta: $snapshotDir has no meta/ — not a " +
         "writeRankSnapshot artifact (rebuild the snapshot; pre-metadata " +
         "snapshot dirs must be re-landed, not probed blind)")
-    val r = spark.read.parquet(s"$snapshotDir/meta").collect()(0) // 1 row
+    val r = Parquet.read(spark, s"$snapshotDir/meta").collect()(0) // 1 row
     RankSnapshotMeta(r.getAs[Long]("n_hosts"), r.getAs[Int]("iterations"),
       r.getAs[Double]("damping"), r.getAs[Boolean]("weighted_by_links"),
       r.getAs[Boolean]("sorted_fold"))
@@ -884,7 +885,7 @@ object LinkGraph {
         "with the new ones (sortedFold changes the per-node summation " +
         "ORDER — flipping it silently breaks bit-replayability against " +
         "the prior snapshot, the exact drift this guard exists to catch)")
-    val merged = spark.read.parquet(s"$prevSnapshotDir/edges")
+    val merged = Parquet.read(spark, s"$prevSnapshotDir/edges")
       .unionByName(newEdges)
       .groupBy("src_host", "dst_host")
       .agg(sum(col("n_links")).as("n_links"),
@@ -904,7 +905,7 @@ object LinkGraph {
   def writeAnchorSnapshot(spark: SparkSession, anchorEdges: DataFrame,
                           outDir: String): DataFrame = {
     anchorEdges.write.mode("overwrite").parquet(s"$outDir/edges")
-    anchorTextsFromEdges(spark.read.parquet(s"$outDir/edges"))
+    anchorTextsFromEdges(Parquet.read(spark, s"$outDir/edges"))
       .write.mode("overwrite").parquet(s"$outDir/anchors")
     anchorSnapshot(spark, outDir)
   }
@@ -913,7 +914,7 @@ object LinkGraph {
     * [[writeAnchorSnapshot]]).
     */
   def anchorSnapshot(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/anchors")
+    Parquet.read(spark, s"$snapshotDir/anchors")
 
   /** Advance the anchor snapshot by one crawl — [[rollForwardRank]]'s
     * twin: sum the new crawl's [[anchorEdges]] into the previous
@@ -929,7 +930,7 @@ object LinkGraph {
   def rollForwardAnchors(spark: SparkSession, prevSnapshotDir: String,
                          newEdges: DataFrame, outDir: String): DataFrame =
     writeAnchorSnapshot(spark,
-      spark.read.parquet(s"$prevSnapshotDir/edges")
+      Parquet.read(spark, s"$prevSnapshotDir/edges")
         .unionByName(newEdges)
         .groupBy("src_host", "dst_host", "anchor")
         .agg(sum(col("n_links")).as("n_links")),
@@ -957,11 +958,11 @@ object LinkGraph {
                        maxRuleLabels: Int = 10): DataFrame = {
     rules.select(col(ruleCol).as("rule"))
       .write.mode("overwrite").parquet(s"$outDir/rules")
-    val landedRules = spark.read.parquet(s"$outDir/rules")
+    val landedRules = Parquet.read(spark, s"$outDir/rules")
     pslDomainTable(hosts, landedRules, hostCol, "rule", maxRuleLabels)
       .write.mode("overwrite").parquet(s"$outDir/domains")
     import spark.implicits._
-    Seq((spark.read.parquet(s"$outDir/domains").count(),
+    Seq((Parquet.read(spark, s"$outDir/domains").count(),
       pslRulesDigest(landedRules)))
       .toDF("n_hosts", "rules_digest")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
@@ -972,7 +973,7 @@ object LinkGraph {
     * dir — a cheap parquet scan, distinct-host cardinality.
     */
   def pslSnapshot(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/domains")
+    Parquet.read(spark, s"$snapshotDir/domains")
 
   /** A PSL snapshot's landed build record (see [[writePslSnapshot]]). */
   final case class PslSnapshotMeta(nHosts: Long, rulesDigest: Long)
@@ -988,7 +989,7 @@ object LinkGraph {
       s"pslSnapshotMeta: $snapshotDir has no meta/ — not a " +
         "writePslSnapshot artifact (rebuild the snapshot; a bare domains " +
         "table cannot be drift-guarded and must not be probed blind)")
-    val r = spark.read.parquet(s"$snapshotDir/meta").collect()(0) // 1 row
+    val r = Parquet.read(spark, s"$snapshotDir/meta").collect()(0) // 1 row
     PslSnapshotMeta(r.getAs[Long]("n_hosts"), r.getAs[Long]("rules_digest"))
   }
 
@@ -1053,7 +1054,7 @@ object LinkGraph {
       .write.mode("overwrite").parquet(s"$outDir/rules")
     merged.write.mode("overwrite").parquet(s"$outDir/domains")
     import spark.implicits._
-    Seq((spark.read.parquet(s"$outDir/domains").count(), rulesDigest))
+    Seq((Parquet.read(spark, s"$outDir/domains").count(), rulesDigest))
       .toDF("n_hosts", "rules_digest")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
     pslSnapshot(spark, outDir)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Mergeable distinct-count sketches (§2c extension): per-facet
   * DataSketches HLL sketches of a corpus — the scan-once /
@@ -65,7 +66,7 @@ object Sketches {
     sketches.write.mode("overwrite").parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 
   // --- theta sketches: the set ALGEBRA (intersect / subtract) HLL
   // --- doesn't have — corpus overlap and novelty estimation.

@@ -803,25 +803,26 @@ object TextOps {
     * and one division — cross-engine deterministic.
     *
     * Scale shape: pass 1 derives the stop list ([[topTokens]]: partial
-    * agg + TakeOrdered, topK rows total); pass 2 BROADCASTS it as a
-    * left join against ONE exploded-token scan that aggregates hit and
-    * total counts together (count of join matches / count of rows —
-    * the corpus is tokenized once in this pass, not once for hits and
-    * again for totals) — the shuffle carries one (doc, hits, total)
-    * row per document, never raw tokens.
+    * agg + TakeOrdered, topK rows total), folded into a ONE-row array
+    * and BROADCAST against the corpus; pass 2 is one row-local
+    * projection — hits are the document's tokens found in that array,
+    * counted with multiplicity (`size(filter(tokens, t ->
+    * array_contains(stops, t)))`), the total is `size(tokens)` — no
+    * explode, no shuffle of the corpus, no join back on the id (the
+    * [[gopherRules]] shape). A NULL text counts 0 tokens.
     */
   def stopwordFraction(docs: DataFrame, topK: Int, idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
-    val stops = topTokens(docs, topK, idCol, textCol).select(col("token"))
-    val counts = docs.select(col(idCol), explode(tokens(col(textCol))).as("token"))
-      .join(broadcast(stops.withColumn("__stop", lit(1))), Seq("token"), "left")
-      .groupBy(col(idCol))
-      .agg(count(col("__stop")).as("__hits"), count(lit(1)).as("__total"))
-    docs.join(counts, Seq(idCol), "left")
-      .withColumn("n_tokens", coalesce(col("__total"), lit(0L)))
+    val stops = topTokens(docs, topK, idCol, textCol)
+      .agg(collect_list(col("token")).as("__stopword_list"))
+    val toks = tokens(col(textCol))
+    def sizeOr0(arr: Column) = when(toks.isNull, lit(0L)).otherwise(size(arr).cast("long"))
+    docs.crossJoin(broadcast(stops))
+      .withColumn("n_tokens", sizeOr0(toks))
       .withColumn("stopword_frac",
-        coalesce(col("__hits"), lit(0L)).cast("double") / col("n_tokens"))
-      .drop("__hits", "__total")
+        sizeOr0(filter(toks, t => array_contains(col("__stopword_list"), t))).cast("double") /
+          col("n_tokens"))
+      .drop("__stopword_list")
   }
 
   /** TF-IDF-style key terms: the top `k` tokens per document scored by

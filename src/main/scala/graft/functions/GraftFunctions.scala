@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.io.Parquet
 
 /** SQL registration for the graft expressions: user transform steps run
   * through `spark.sql` (the framework's SQL-step engine, F11), so the
@@ -62,14 +63,14 @@ object GraftFunctions {
     (FunctionIdentifier("graft_bpe_tokens"),
       info("graft_bpe_tokens", "_FUNC_(text, model_path) - BPE piece array of text under the persisted merge table at model_path (string literal)"),
       (es: Seq[Expression]) => BpeEncode(es(0),
-        graft.ext.Bpe.loadMerges(org.apache.spark.sql.SparkSession.active
-          .read.parquet(pathLiteral("graft_bpe_tokens", es(1)))))),
+        graft.ext.Bpe.loadMerges(Parquet.read(org.apache.spark.sql.SparkSession.active,
+          pathLiteral("graft_bpe_tokens", es(1)))))),
     (FunctionIdentifier("graft_unigram_tokens"),
       info("graft_unigram_tokens", "_FUNC_(text, model_path) - unigram-LM piece array of text under the persisted model at model_path (string literal)"),
       (es: Seq[Expression]) => {
         val m = graft.ext.UnigramLm.loadModel(
-          org.apache.spark.sql.SparkSession.active
-            .read.parquet(pathLiteral("graft_unigram_tokens", es(1))))
+          Parquet.read(org.apache.spark.sql.SparkSession.active,
+            pathLiteral("graft_unigram_tokens", es(1))))
         UnigramEncode(es(0), m.pieces, m.maxPieceLen)
       })
   )

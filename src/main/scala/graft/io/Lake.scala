@@ -45,10 +45,15 @@ final case class Lake(root: String) {
     * need nothing Hudi-specific — see the class doc) unless the
     * session opts into the native connector via
     * `graft.lake.nativeHudi=true`.
+    *
+    * Parquet (and `hudi` read as parquet) goes through [[Parquet.read]]:
+    * the schema comes from one footer read on the driver, so planning
+    * the read starts no Spark job. ORC already infers its schema on the
+    * driver.
     */
   def read(spark: SparkSession, format: String, path: String): DataFrame = format match {
-    case "hudi" if !nativeHudi(spark) => spark.read.parquet(path)
-    case "parquet"          => spark.read.parquet(path)
+    case "hudi" if !nativeHudi(spark) => Parquet.read(spark, path)
+    case "parquet"          => Parquet.read(spark, path)
     case "orc"              => spark.read.orc(path)
     case "csv"              => spark.read.option("header", "true").csv(path) // all strings, by design
     // JSON-lines: schema inferred from the data (an extra scan — at
@@ -86,8 +91,9 @@ final case class Lake(root: String) {
     * column was added read back with that column NULL — the on-read
     * half of additive schema evolution (the write half is just
     * appending files with the wider schema). Footer merging scans
-    * metadata, not data; use only where evolution actually happens —
-    * the default single-footer read stays the fast path.
+    * metadata, not data, but as a Spark job over every footer; use only
+    * where evolution actually happens — [[read]]'s one driver-side
+    * footer stays the fast path.
     */
   def readEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)

@@ -71,8 +71,11 @@ final class FileWarehouse(val spark: SparkSession, val root: String) extends War
     val p = new Path(dir(schema, table)); fs(p).exists(p)
   }
 
+  /** The table's parquet dir, its schema from one footer read on the
+    * driver ([[Parquet.read]]): no Spark job until the frame runs.
+    */
   override def read(schema: String, table: String): DataFrame =
-    spark.read.parquet(dir(schema, table))
+    Parquet.read(spark, dir(schema, table))
 
   /** Journal-bearing frames (those with a `__record_state` column) are
     * written PARTITIONED by record state: the journal is append-only

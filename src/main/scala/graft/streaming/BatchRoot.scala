@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.io.Parquet
 
 /** The `__batch=<id>` partition-root layout every per-batch sink in
   * this package lands into, written once.
@@ -34,54 +35,24 @@ private[graft] object BatchRoot {
   /** The batch's own partition directory under `root`. */
   def dir(root: String, id: Long): String = s"$root/__batch=$id"
 
-  /** The `<partCol>=` partition directories directly under `root`. */
-  private def partitions(spark: SparkSession, root: String, partCol: String): Seq[Path] = {
+  /** Every `__batch=` partition id under `root`, ascending. */
+  def batchIds(spark: SparkSession, root: String): Seq[Long] = {
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath)
-  }
-
-  /** Every `__batch=` partition id under `root`, ascending. */
-  def batchIds(spark: SparkSession, root: String): Seq[Long] =
-    partitions(spark, root, "__batch").map(_.getName.stripPrefix("__batch=").toLong).sorted
-
-  /** Whether some `<partCol>=` partition under `root` holds a visible
-    * data file — the exact condition under which Spark can infer the
-    * root's schema. Bare existence is not enough: an empty root, or one
-    * holding only a crashed write's hidden `_temporary`, makes the read
-    * throw on every redelivery and wedges the stream, so such a root
-    * is a cold start.
-    */
-  def committed(spark: SparkSession, root: String, partCol: String): Boolean =
-    partitions(spark, root, partCol).exists(p => holdsDataFile(spark, p.toString))
-
-  /** Whether the flat directory `dir` exists and directly holds a
-    * visible (not `_`- or `.`-prefixed) file; the listing stops at the
-    * first one.
-    */
-  def holdsDataFile(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && {
-      val it = fs.listStatusIterator(p)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        found = f.isFile && !Seq("_", ".").exists(f.getPath.getName.startsWith)
-      }
-      found
-    }
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("__batch=")).map(_.stripPrefix("__batch=").toLong).sorted
   }
 
   /** The strictly-earlier state of `root` as seen by batch `batchId`,
-    * or `None` (cold start) until the root is [[committed]].
+    * or `None` (cold start) while no partition holds a visible data
+    * file ([[Parquet.readIfPresent]]). Bare existence is not enough: an
+    * empty root, or one holding only a crashed write's hidden
+    * `_temporary`, would make the read throw on every redelivery and
+    * wedge the stream.
     */
   def prior(spark: SparkSession, root: String, batchId: Long): Option[DataFrame] =
-    Option.when(committed(spark, root, "__batch"))(
-      spark.read.parquet(root).where(col("__batch") < batchId))
+    Parquet.readIfPresent(spark, root).map(_.where(col("__batch") < batchId))
 
   /** `df` cached for the duration of `body`. A lost executor
     * recomputes the cut from the replayable micro-batch.
@@ -104,7 +75,7 @@ private[graft] object BatchRoot {
 
   /** The loss check alone, to re-verify a landing after the fact. */
   def verify(spark: SparkSession, dir: String, staged: Long): Unit = {
-    val landed = spark.read.parquet(dir).count()
+    val landed = Parquet.read(spark, dir).count()
     if (landed != staged)
       throw new IllegalStateException(
         s"batch landing at $dir holds $landed rows where $staged were staged — " +

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.TimeSeries
+import graft.io.Parquet
 
 /** Streaming front-end for the rolling-anomaly monitor (§2c): daily
   * counts accumulate per micro-batch, the published report always
@@ -63,7 +64,7 @@ object StreamingAnomalies {
         .groupBy(col(keyCol), col("day"))
         .agg(count(lit(1)).as("n_events"))
         .write.mode("overwrite").parquet(s"$countsDir/batch_id=$batchId")
-      val all = batch.sparkSession.read.parquet(countsDir)
+      val all = Parquet.read(batch.sparkSession, countsDir)
       TimeSeries.dailyAnomalies(
         TimeSeries.resampleFromDailyCounts(all, keyCol),
         keyCol, window = window, zThreshold = zThreshold)

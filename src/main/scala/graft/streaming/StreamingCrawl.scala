@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.io.Parquet
 
 /** Streaming face of the crawl FRONT HALF (q131's chain): WARC shards
   * arrive as a `binaryFile` stream, each micro-batch parses, applies
@@ -179,7 +180,7 @@ object StreamingCrawl {
       // nothing/the wrong hosts.
       .transform { df =>
         val built = pslRulesPath.map { p =>
-          val rules = spark.read.parquet(p)
+          val rules = Parquet.read(spark, p)
           pslSnapshotRoot match {
             case None =>
               (graft.ext.LinkGraph.pslLookupFor(df, rules)

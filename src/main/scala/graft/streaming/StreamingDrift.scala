@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Diff
+import graft.io.Parquet
 
 /** Streaming COMPOSITION-DRIFT monitor: per micro-batch, land the
   * batch's band counts ([[graft.ext.Diff.bandCounts]]) in the batch's
@@ -35,7 +36,7 @@ object StreamingDrift {
     * batch partition (exact — counts are sum-mergeable).
     */
   def currentCounts(spark: SparkSession, indexRoot: String): DataFrame =
-    spark.read.parquet(indexRoot).drop("__batch")
+    Parquet.read(spark, indexRoot).drop("__batch")
       .groupBy("band").agg(sum(col("n")).as("n"))
 
   /** Current drift report of the stream history vs a baseline counts

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.Dsir
+import graft.io.Parquet
 
 /** Streaming DSIR scoring — importance-score every arriving micro-batch
   * against the persisted hashed-feature models ([[graft.ext.Dsir]]),
@@ -59,7 +60,7 @@ object StreamingDsir {
       case None => // cold start: every count smooths to 1, still exact
         spark.range(0).select(lit("").as("__bucket"), lit(0L).as("__cf"))
     }
-    val tgtModel = spark.read.parquet(tgtModelPath)
+    val tgtModel = Parquet.read(spark, tgtModelPath)
     // the micro-batch frame is tokenized twice (scoring + model roll) —
     // cached so the source is read once per batch, not once per write
     BatchRoot.cached(batch) {
@@ -72,5 +73,5 @@ object StreamingDsir {
   /** The whole scored history, merged on read. */
   def scores(spark: org.apache.spark.sql.SparkSession,
              outRoot: String): DataFrame =
-    spark.read.parquet(outRoot)
+    Parquet.read(spark, outRoot)
 }

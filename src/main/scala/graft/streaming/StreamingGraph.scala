@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.LinkGraph
+import graft.io.Parquet
 
 /** Streaming face of the host link graph (the q137/q138/q140 family):
   * pages arrive continuously, the graph accretes per micro-batch, and
@@ -46,7 +47,7 @@ object StreamingGraph {
     */
   def currentEdges(spark: org.apache.spark.sql.SparkSession,
                    edgeRoot: String): DataFrame =
-    spark.read.parquet(edgeRoot)
+    Parquet.read(spark, edgeRoot)
       .groupBy("src_host", "dst_host")
       .agg(sum(col("n_links")).as("n_links"),
         sum(col("n_pages")).as("n_pages"))
@@ -66,6 +67,6 @@ object StreamingGraph {
                     edgeRoot: String, snapshotDir: String): DataFrame = {
     currentEdges(spark, edgeRoot)
       .write.mode("overwrite").parquet(snapshotDir)
-    spark.read.parquet(snapshotDir)
+    Parquet.read(spark, snapshotDir)
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import graft.ext.LangModel
+import graft.io.Parquet
 
 /** Streaming language-prediction sink — the ingest-time face of the
   * persisted lang-prediction artifact ([[graft.ext.LangModel
@@ -48,7 +49,7 @@ object StreamingLang {
                 ns: Seq[Int] = LangModel.DefaultNs,
                 numBuckets: Int = LangModel.DefaultBuckets)
                (batch: DataFrame, batchId: Long): Unit = {
-    val model = batch.sparkSession.read.parquet(modelPath)
+    val model = Parquet.read(batch.sparkSession, modelPath)
     BatchRoot.land(LangModel.langScoreAgainst(batch, model, alpha, idCol,
       textCol, ns, numBuckets), outRoot, batchId)
   }
@@ -60,5 +61,5 @@ object StreamingLang {
     */
   def predictions(spark: org.apache.spark.sql.SparkSession,
                   outRoot: String): DataFrame =
-    spark.read.parquet(outRoot)
+    Parquet.read(spark, outRoot)
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.merge.Scd2
+import graft.io.Parquet
 
 /** Streaming maintenance of an SCD2 (Type-2) history — the streaming
   * face of [[graft.merge.Scd2]] for continuously-arriving journal
@@ -54,11 +55,10 @@ object StreamingScd2 {
     // cold start only while no bucket holds a data file; a committed
     // root is read, and a failed read throws before any bucket is
     // rewritten (treating it as empty would drop the older versions)
-    val journal =
-      if (!BatchRoot.committed(spark, historyRoot, BucketCol)) batch.distinct()
-      else spark.read.parquet(historyRoot).where(col(BucketCol).isin(touched: _*))
+    val journal = Parquet.readIfPresent(spark, historyRoot).fold(batch.distinct())(
+      _.where(col(BucketCol).isin(touched: _*))
         .drop(Scd2.ValidFrom, Scd2.ValidTo, Scd2.IsCurrent, BucketCol)
-        .unionByName(batch).distinct()
+        .unionByName(batch).distinct())
     Scd2.history(journal, pks, trackCols)
       .withColumn(BucketCol, bucketOf(pks, nBuckets))
       .write.mode("overwrite")
@@ -73,5 +73,5 @@ object StreamingScd2 {
     * prune to a single partition directory.
     */
   def readHistory(spark: SparkSession, historyRoot: String): DataFrame =
-    spark.read.parquet(historyRoot).drop(BucketCol)
+    Parquet.read(spark, historyRoot).drop(BucketCol)
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Sketches
+import graft.io.Parquet
 
 /** Streaming maintenance of a persisted THETA sketch index
   * ([[graft.ext.Sketches]]): per micro-batch, land the batch's
@@ -42,7 +43,7 @@ object StreamingSketches {
     */
   def currentSketches(spark: SparkSession, indexRoot: String,
                       groupCols: Seq[String], lgK: Int = 12): DataFrame = {
-    val all = spark.read.parquet(indexRoot).drop("__batch")
+    val all = Parquet.read(spark, indexRoot).drop("__batch")
     all.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.ThetaExprs.thetaUnionAgg(col("sketch"), lgK).as("sketch"))
   }
@@ -70,7 +71,7 @@ object StreamingSketches {
                   groupCols: Seq[String], k: Int,
                   maxMapSize: Int = 256): DataFrame =
     Sketches.freqTopK(
-      spark.read.parquet(indexRoot).drop("__batch")
+      Parquet.read(spark, indexRoot).drop("__batch")
         .groupBy(groupCols.map(col): _*)
         .agg(graft.functions.FreqExprs.freqMergeAgg(col("sketch"), maxMapSize).as("sketch")),
       groupCols, k)
@@ -89,7 +90,7 @@ object StreamingSketches {
                        groupCols: Seq[String], qs: Seq[Double],
                        k: Int = 256): DataFrame =
     Sketches.quantEstimates(
-      spark.read.parquet(indexRoot).drop("__batch")
+      Parquet.read(spark, indexRoot).drop("__batch")
         .groupBy(groupCols.map(col): _*)
         .agg(graft.functions.QuantileExprs.quantMergeAgg(col("sketch"), k).as("sketch")),
       groupCols, qs)

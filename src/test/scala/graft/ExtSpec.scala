@@ -1248,6 +1248,46 @@ class ExtSpec extends AnyFunSuite {
     assert(out === Map(1L -> 0.75, 2L -> 2.0 / 3, 3L -> 1.0, 4L -> 0.0))
   }
 
+  test("stopwordFraction in-row == the explode/join/groupBy/join-back reference") {
+    // the earlier spelling: explode every token, broadcast left join to
+    // the top-k list, per-doc counts, left join back to the docs
+    def reference(docs: org.apache.spark.sql.DataFrame, topK: Int) = {
+      val stops = TextOps.topTokens(docs, topK).select($"token")
+      val counts = docs.select($"doc_id", explode(TextOps.tokens($"text")).as("token"))
+        .join(broadcast(stops.withColumn("__stop", lit(1))), Seq("token"), "left")
+        .groupBy($"doc_id")
+        .agg(count($"__stop").as("__hits"), count(lit(1)).as("__total"))
+      docs.join(counts, Seq("doc_id"), "left")
+        .withColumn("n_tokens", coalesce($"__total", lit(0L)))
+        .withColumn("stopword_frac", coalesce($"__hits", lit(0L)).cast("double") / $"n_tokens")
+        .drop("__hits", "__total")
+    }
+    def outcome(f: => org.apache.spark.sql.DataFrame) = scala.util.Try(
+      f.select("doc_id", "text", "n_chars", "n_tokens", "stopword_frac")
+        .as[(Long, Option[String], Option[Int], Long, Option[Double])]
+        .collect().sortBy(_._1).toSeq).toEither.left.map(_.getClass)
+    val crafted = docsDf(1L -> "a a b c", 2L -> "a b d", 3L -> "a a b", 4L -> "x y z w",
+      5L -> "a  b", 6L -> "", 7L -> "  ", 8L -> "b b b b a", 9L -> "c c a")
+    val withNull = crafted.union(Seq((10L, null: String)).toDF("doc_id", "text")
+      .withColumn("n_chars", length($"text")))
+    val empty = crafted.where(lit(false))
+    for (docs <- Seq(crafted, empty); k <- Seq(1, 2, 20)) {
+      val got = outcome(TextOps.stopwordFraction(docs, topK = k))
+      assert(got.isRight, s"topK=$k: $got")
+      assert(got === outcome(reference(docs, k)), s"topK=$k")
+    }
+    assert(outcome(TextOps.stopwordFraction(empty, topK = 2)) === Right(Seq.empty))
+    // a NULL text counts 0 tokens on both spellings; the 0/0 fraction is
+    // NULL, or the ANSI divide-by-zero error, alike
+    Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try Seq(1, 2, 20).foreach { k =>
+        assert(outcome(TextOps.stopwordFraction(withNull, topK = k)) ===
+          outcome(reference(withNull, k)), s"ansi=$ansi topK=$k")
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("incremental near-dup: cross-set pairs only, exact Jaccard, no intra-set pairs") {
     val query = docsDf(10L -> "w1 w2 w3 w4 w5 w6", 20L -> "q1 q2 q3 q4")
     val corpus = docsDf(

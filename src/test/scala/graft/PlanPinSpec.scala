@@ -97,4 +97,83 @@ class PlanPinSpec extends AnyFunSuite {
     assert(got === want,
       s"job counts drifted; observed:\n${got.map { case (q, n) => s"$q\t$n" }.mkString("\n")}")
   }
+
+  /** The DWH path's job budget: one incremental cycle, as
+    * `dwh_incremental` times it — a delta `extractDf` of the newly
+    * landed source rows onto the lake, then the delta transform
+    * (append journal, delta merge, record-state flip). The source frame
+    * is the caller's and is read before the count. Seven jobs: the
+    * boundary probe, the lake write, the journal append, three merge
+    * stages and the master write; no schema-inference job.
+    */
+  test("one DWH delta cycle starts exactly its budgeted Spark jobs") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.{col, lit, to_date}
+    import graft.config.{MergeMode, ReadMode, WriteMode}
+    import graft.exec.{EtlContext, PipelineRunner, Tasks}
+    import graft.io.{FileWarehouse, Lake}
+    val work = SparkTestBase.tmpDir("graft_delta_cycle_jobs")
+    val folder = Paths.get(work, "sql", "order_state")
+    Files.createDirectories(folder)
+    val select = "SELECT k, v, updated_at, updated_at AS __transform_dt, " +
+      "updated_at AS __load_dt, seqno AS __seqno, 'A' AS __record_state FROM updates"
+    Files.writeString(folder.resolve("full.sql"), select)
+    Files.writeString(folder.resolve("delta.sql"),
+      select + " WHERE load_date = DATE '{report_date}'")
+    Files.writeString(folder.resolve("config.yaml"),
+      """- dependencies:
+        |  - source: datalake
+        |    format: parquet
+        |    alias: updates
+        |    source_system_name: src
+        |    source_system_tag: erp
+        |    schema: public
+        |    table_name: updates
+        |  transform:
+        |    full:
+        |    - type: select
+        |      sql: full.sql
+        |    delta:
+        |    - type: select
+        |      sql: delta.sql
+        |      parameters:
+        |      - name: report_date
+        |        type: report_date
+        |  target:
+        |    target_schema: dwh
+        |    target_table_name: order_state""".stripMargin)
+    val sourceDir = s"$work/source"
+    def land(batch: Int, keys: Seq[Long]): Unit =
+      spark.createDataFrame(keys.map(k => (k, s"v$batch", 1000L * batch + k)))
+        .toDF("k", "v", "seqno")
+        .withColumn("updated_at", (lit(86400L * batch) + col("seqno") % 60).cast("timestamp"))
+        .withColumn("load_date", to_date(lit(s"2025-01-0${batch + 1}")))
+        .write.mode("append").parquet(sourceDir)
+    def ctx(reportDate: String) = EtlContext(spark, Lake(s"$work/lake"),
+      new FileWarehouse(spark, s"$work/wh"), variables = Map("REPORT_DATE" -> reportDate),
+      sqlRoot = Some(s"$work/sql"), dumpDir = s"$work/dump")
+    land(0, 1L to 40L)
+    val boot = ctx("2025-01-01")
+    boot.warehouse.asInstanceOf[FileWarehouse].registerPrimaryKey("dwh", "order_state", Seq("k"))
+    PipelineRunner.extractDf(
+      boot.copy(taskId = Tasks.extractTaskId("src", "erp", "updates", ReadMode.Full)),
+      spark.read.parquet(sourceDir), "src", "erp", "public", "updates", ReadMode.Full)
+    Tasks.transformDb(boot, "order_state", ReadMode.Full, WriteMode.Overwrite, MergeMode.Full).run()
+    land(1, 30L to 50L)
+    val cycle = ctx("2025-01-02")
+    val source = spark.read.parquet(sourceDir)
+    val mark = spark.read.parquet(s"$work/lake/datalake/src/erp/public/updates")
+      .agg(org.apache.spark.sql.functions.max("updated_at").cast("string")).head().getString(0)
+    val jobs = SparkTestBase.jobsDuring {
+      PipelineRunner.extractDf(
+        cycle.copy(taskId = Tasks.extractTaskId("src", "erp", "updates", ReadMode.Delta)),
+        source, "src", "erp", "public", "updates", ReadMode.Delta, Some(WriteMode.Append),
+        Some(PipelineRunner.DeltaSpec("updated_at", mark)))
+      Tasks.transformDb(cycle, "order_state", ReadMode.Delta, WriteMode.Append, MergeMode.Delta)
+        .run()
+    }
+    val master = new FileWarehouse(spark, s"$work/wh").read("dwh", "order_state")
+    assert(master.count() === 50 && master.where(col("v") === "v1").count() === 21)
+    assert(jobs === 7, s"one delta cycle started $jobs Spark jobs")
+  }
 }
