@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * registry). Plan-only (no execution), so the whole registry dumps in
   * analysis time; uses the bench session shape (sf from
   * `SPARK_GRAFT_SF_DIR`, derived shuffle width) so the dumped plans are
-  * the ones the bench actually runs.
+  * the ones the bench actually runs. A query that fails to plan (or
+  * an unknown name) is reported on stderr, the rest still dump, and
+  * the run exits 1.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,6 +27,7 @@ object PlanDump {
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    var failed = 0
     for (q <- names) {
       try {
         val df = SparkEntry.queries(q)(spark, sfDir)
@@ -36,8 +39,10 @@ object PlanDump {
         println(s"dumped $q")
       } catch { case e: Throwable =>
         System.err.println(s"PLANDUMP $q FAILED: $e")
+        failed += 1
       }
     }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

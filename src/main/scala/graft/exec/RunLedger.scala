@@ -190,18 +190,10 @@ object RunLedger {
     * record: the run ledger above answers "what data landed", this
     * answers "what did the scheduler decide and why". Written as ONE
     * append per DAG run by [[Tasks.runDag]] when a [[DagRecord]] is
-    * passed; default location `<dumpDir>/_graft_dag_runs`
-    * ([[dagDirFor]]). Compact with [[compact]] like the run ledger.
+    * passed, into the [[DagRecord]]'s `dir` (conventionally
+    * `<dumpDir>/_graft_dag_runs`). Compact with [[compact]] like the
+    * run ledger.
     */
-  val DagDirName = "_graft_dag_runs"
-
-  /** Conventional DAG-record directory for a context (the run ledger's
-    * `dumpDir` sibling; [[DagRecord.dir]] is explicit, so any path
-    * works — this is just the default worth standardizing on).
-    */
-  def dagDirFor(ctx: EtlContext): String =
-    s"${ctx.dumpDir.stripSuffix("/")}/$DagDirName"
-
   final case class DagEntry(
       run_id: String,
       task_id: String,

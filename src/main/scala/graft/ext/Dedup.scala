@@ -964,8 +964,7 @@ object Dedup {
     * [[nearDupMinHashAgainstIndex]] — at 100 TB the banding IS the
     * index, and re-deriving it per ingest batch (a full corpus scan +
     * signature pass) is the cost this removes; the probe then touches
-    * the corpus only through the index columns. Same operational
-    * split as [[Similarity.ivfTrain]]/[[Similarity.ivfTopKWithCentroids]].
+    * the corpus only through the index columns.
     *
     * The index is parameter-bound: probes must use the same
     * (shingleSize, numHashes, bands, seed) or candidates are garbage —
@@ -1130,7 +1129,7 @@ object Dedup {
   /** Incremental chunk-signature probe against a PRE-BUILT signature
     * index — the build-once/probe-forever shape for EVERY 64-bit
     * fingerprint family ([[nearDupSimHash]] text, [[Multimodal.dHash]]
-    * images, [[Multimodal.audioHash]] audio): the corpus signatures
+    * images): the corpus signatures
     * live as parquet (16 bytes + id per asset — the payloads
     * themselves never re-read), the query batch brings its own
     * signatures, and candidates come from the asymmetric chunk

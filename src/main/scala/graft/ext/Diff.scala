@@ -39,15 +39,6 @@ object Diff {
         col("old_fp"), col("new_fp"))
   }
 
-  /** Roll-up of [[snapshotDiff]]: one row per status with counts —
-    * the one-screen "what did this run do" report.
-    */
-  def diffSummary(older: DataFrame, newer: DataFrame,
-                  idCol: String = "doc_id",
-                  contentCol: String = "text"): DataFrame =
-    snapshotDiff(older, newer, idCol, contentCol)
-      .groupBy("status").agg(count(lit(1)).as("n_docs"))
-
   /** COMPOSITION DRIFT between two corpus snapshots, per band of a
     * categorical column (language, source, length bucket, quality
     * band, …): did a curation run — or a month of ingest — shift the

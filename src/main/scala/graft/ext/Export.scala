@@ -151,9 +151,9 @@ object Export {
 
   /** One 60-bit seeded hash per (id, epoch) SAMPLE — the multi-epoch
     * twin of [[trainingOrder]]'s per-id hash: `seed:id:epoch` drives
-    * both the shard and the within-shard order, so every epoch is
-    * automatically a FRESH permutation of the corpus (the epoch index
-    * participates in the hash) without any per-epoch seed bookkeeping.
+    * the shard, so every epoch is automatically a FRESH permutation of
+    * the corpus (the epoch index participates in the hash) without any
+    * per-epoch seed bookkeeping.
     * Null ids/epochs RAISE (the total-function rule).
     */
   private def epochOrd(id: Column, epoch: Column, seed: String): Column =
@@ -169,9 +169,7 @@ object Export {
     * into the content hash (`md5(id:epoch:text)`), so two epochs of
     * the identical doc set still land distinct checksums — a loader
     * that replays epoch 1's files against epoch 0's manifest fails
-    * loudly. Shard assignment shares [[epochOrd]] with
-    * [[exportEpochs]], so the manifest is comparable to the landing
-    * with plain equality.
+    * loudly. Shard assignment is [[epochOrd]] modulo `nShards`.
     */
   def epochShardManifest(docs: DataFrame, nShards: Int,
                          idCol: String = "doc_id", textCol: String = "text",
@@ -199,165 +197,11 @@ object Export {
         expr("bit_xor(__h)").as("checksum"))
   }
 
-  /** Physical MULTI-EPOCH export — the training-side story's last
-    * step: land a `(docs × epoch)` frame ([[graft.ext.Sampling
-    * .materializeEpochs]]) under `outDir/data` as
-    * `epoch=<e>/shard=<k>/part-*.parquet`, ONE file per (epoch,
-    * shard), rows inside each file in `seq` order — so a dataloader
-    * that walks one epoch's shard files top-to-bottom replays that
-    * epoch's global shuffle with zero load-time coordination, and
-    * each epoch is a fresh permutation ([[epochOrd]]). The intended
-    * [[epochShardManifest]] lands at `outDir/_manifest`.
-    *
-    * The landing WITNESS has two postures. The default rides the
-    * write itself with `Dataset.observe` totals (docs/tokens/bytes and
-    * the global XOR checksum — XOR of the per-group XORs, so re-binned
-    * or torn rows still flip it) compared against the landed
-    * `_manifest`'s totals, and returns that manifest re-read from
-    * disk — zero extra scans of the data at 100 TB (the
-    * [[graft.exec.RunLedger]] discipline). `verifyLanded = true` is
-    * the full audit: re-read the landed files and RECOMPUTE the
-    * manifest from them (the [[exportShards]] witness — catches a
-    * writer that lost, duplicated, or re-binned rows per (epoch,
-    * shard)), at the cost of a second full scan + tokenization pass.
-    * Either posture fails loudly on disagreement.
-    *
-    * Scale shape: one seeded-hash projection (no shuffle), ONE hash
-    * exchange on (epoch, shard) — a key never splits across tasks, so
-    * one-file-per-directory holds at any width — plus the window's
-    * in-partition sort; the manifest aggregations are map-side
-    * partial on a (epochs × nShards)-sized key domain. No global
-    * sort anywhere; raise `nShards` to hold per-file sizes flat as
-    * the corpus grows.
-    */
-  def exportEpochs(spark: SparkSession, epochDocs: DataFrame, outDir: String,
-                   nShards: Int, seed: String = "graft",
-                   idCol: String = "doc_id", textCol: String = "text",
-                   tokenCount: Option[Column] = None,
-                   verifyLanded: Boolean = false): DataFrame = {
-    require(nShards > 0, "exportEpochs: nShards must be positive")
-    require(epochDocs.columns.contains("epoch"),
-      "exportEpochs: input must carry the epoch column " +
-        "(materializeEpochs attaches it)")
-    val clash = Seq("__ord", "shard", "seq").filter(epochDocs.columns.contains)
-    require(clash.isEmpty,
-      s"exportEpochs: input already carries ${clash.mkString(", ")} — " +
-        "rename or drop before exporting (the operator OWNS these columns)")
-    val intended = epochShardManifest(epochDocs, nShards, idCol, textCol,
-      seed, tokenCount)
-    // bounded 1-value action: epoch count caps at materializeEpochs'
-    // maxEpochs; width = one task per (epoch, shard) directory
-    val nEpochs = epochDocs.select(count_distinct(col("epoch")))
-      .collect()(0).getLong(0)
-    val width = math.max(1, (nEpochs * nShards).toInt)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("epoch"), col("shard"))
-      .orderBy(col("__ord"), col(idCol))
-    // the explicit exchange comes BEFORE the window: HashPartitioning
-    // on (epoch, shard) satisfies the window's ClusteredDistribution
-    // requirement, so the full text payload shuffles exactly once —
-    // repartitioning after row_number would pay a second hash exchange
-    // on the same keys
-    val ntokExpr = tokenCount.getOrElse(size(TextOps.tokens(col(textCol))))
-      .cast("long")
-    val hashExpr = contentHash(concat(col(idCol).cast("string"), lit(":"),
-      col("epoch").cast("string")), col(textCol))
-    val toWrite = epochDocs
-      .withColumn("__ord", epochOrd(col(idCol), col("epoch"), seed))
-      .withColumn("shard", (col("__ord") % nShards).cast("long"))
-      .repartition(width, col("epoch"), col("shard"))
-      .withColumn("seq", (row_number().over(w) - 1).cast("long"))
-      .drop("__ord")
-      .sortWithinPartitions(col("epoch"), col("shard"), col("seq"))
-    val obs = org.apache.spark.sql.Observation()
-    toWrite
-      .observe(obs,
-        count(lit(1)).as("n_docs"),
-        sum(ntokExpr).as("n_tokens"),
-        sum(octet_length(col(textCol)).cast("long")).as("n_bytes"),
-        bit_xor(hashExpr).as("checksum"))
-      .write.mode("overwrite").partitionBy("epoch", "shard")
-      .parquet(s"$outDir/data")
-    intended.coalesce(1).write.mode("overwrite").parquet(s"$outDir/_manifest")
-    val manifest = Parquet.read(spark, s"$outDir/_manifest")
-    // the cheap witness: the totals the WRITE itself observed vs the
-    // landed manifest's totals — one group-cardinality agg, no re-scan
-    val m = obs.get
-    val t = manifest.agg(
-      sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-      sum(col("n_bytes")).as("n_bytes"),
-      expr("bit_xor(checksum)").as("checksum")).collect()(0) // 1 row
-    require(m("n_docs") == t.getAs[Long]("n_docs") &&
-      m("n_tokens") == t.getAs[Long]("n_tokens") &&
-      m("n_bytes") == t.getAs[Long]("n_bytes") &&
-      m("checksum") == t.getAs[Long]("checksum"),
-      s"exportEpochs: the write observed (docs=${m("n_docs")}, " +
-        s"tokens=${m("n_tokens")}, bytes=${m("n_bytes")}, " +
-        s"xor=${m("checksum")}) but the manifest totals are " +
-        s"(docs=${t.getAs[Long]("n_docs")}, " +
-        s"tokens=${t.getAs[Long]("n_tokens")}, " +
-        s"bytes=${t.getAs[Long]("n_bytes")}, " +
-        s"xor=${t.getAs[Long]("checksum")}) — torn landing")
-    if (!verifyLanded) manifest
-    else Parquet.read(spark, s"$outDir/data")
-      .select(
-        col("epoch").cast("long").as("epoch"),
-        col("shard").cast("long").as("shard"),
-        ntokExpr.as("__ntok"),
-        octet_length(col(textCol)).cast("long").as("__nbytes"),
-        hashExpr.as("__h"))
-      .groupBy("epoch", "shard")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("__ntok")).as("n_tokens"),
-        sum(col("__nbytes")).as("n_bytes"),
-        expr("bit_xor(__h)").as("checksum"))
-  }
-
-  /** The packed multi-epoch dataloader artifact — the training-side
-    * chain COMPOSED end to end: a `(docs × epoch)` frame
-    * ([[graft.ext.Sampling.materializeEpochs]]) is first-fit packed at
-    * `(epoch, keyCols..., lane)` bin grain ([[graft.ext.TextOps
-    * .packSequencesText]] — each epoch's each key packs independently
-    * across `subShards` deterministic lanes), and the packed BINS land
-    * as `epoch=<e>/shard=<k>` files in `seq` order via
-    * [[exportEpochs]] — so the dataloader walks capacity-bounded
-    * training windows, not raw documents, and each epoch is still a
-    * fresh permutation of its bins. The bin id (`keyCols:lane:bin_id`)
-    * joins with the epoch to drive shard + order + checksum, and the
-    * manifest's `n_tokens` rides the packer's exact per-bin
-    * `sum_tokens` (no re-tokenization). Returns the epoch-aware
-    * manifest under [[exportEpochs]]' witness contract
-    * (`verifyLanded` picks the posture).
-    *
-    * Scale shape: the packer's one shuffle on (epoch, key, lane) +
-    * the export's one hash exchange on (epoch, shard); both windows
-    * are lane-bounded. Raise `subShards` (or size it with
-    * [[graft.ext.TextOps.derivedPackLanes]]) to keep the packing
-    * windows flat as any one key's corpus grows.
-    */
-  def exportPackedEpochs(spark: SparkSession, epochDocs: DataFrame,
-                         outDir: String, capacity: Int, nShards: Int,
-                         subShards: Int = 4, seed: String = "graft",
-                         keyCols: Seq[String] = Seq("lang"),
-                         idCol: String = "doc_id", textCol: String = "text",
-                         tokenCount: Option[Column] = None,
-                         verifyLanded: Boolean = false): DataFrame = {
-    require(epochDocs.columns.contains("epoch"),
-      "exportPackedEpochs: input must carry the epoch column " +
-        "(materializeEpochs attaches it)")
-    exportEpochs(spark,
-      packedEpochBins(epochDocs, capacity, subShards, keyCols, idCol,
-        textCol, tokenCount),
-      outDir, nShards, seed, idCol = "bin_key", textCol = "packed_text",
-      tokenCount = Some(col("sum_tokens")), verifyLanded = verifyLanded)
-  }
-
-  /** [[exportPackedEpochs]]' bin frame — the packed `(epoch, bin_key,
-    * packed_text, n_docs, sum_tokens)` rows BEFORE the landing, with
-    * `bin_key = keyCols:lane:bin_id` (unique within an epoch). Shared
-    * so the manifest a query oracles and the frame the exporter lands
-    * are one construction (q163 / ExportSpec pin them equal).
+  /** The packed multi-epoch bin frame (q163's input to
+    * [[epochShardManifest]]): `(epoch, bin_key, packed_text, n_docs,
+    * sum_tokens)` rows with `bin_key = keyCols:lane:bin_id` (unique
+    * within an epoch), each `(epoch, keyCols..., lane)` packed
+    * independently by [[graft.ext.TextOps.packSequencesText]].
     */
   def packedEpochBins(epochDocs: DataFrame, capacity: Int,
                       subShards: Int = 4,

@@ -2661,11 +2661,7 @@ object ExtQueries {
     * doc/token/byte counts and the XOR content checksum, the epoch
     * index bound into both the shard hash (every epoch a fresh
     * permutation) and the checksum (two epochs of one doc set land
-    * distinct checksums). The physical writer ([[Export.exportEpochs]]
-    * — one file per (epoch, shard), in-file seq order) returns exactly
-    * these rows recomputed from disk; ExportSpec pins landing ≡
-    * intent, so oracling the manifest oracles the export contract.
-    * Exact end to end: q156's epoch arithmetic + q93's md5/checksum
+    * distinct checksums). Exact end to end: q156's epoch arithmetic + q93's md5/checksum
     * spelling at (epoch, shard) grain.
     */
   def q161(spark: SparkSession, dir: String): DataFrame =
@@ -2702,8 +2698,7 @@ object ExtQueries {
 
   /** PACKED multi-epoch export manifest ([[Sampling
     * .materializeEpochs]] → [[TextOps.packSequencesText]] →
-    * [[Export.epochShardManifest]], the [[Export.exportPackedEpochs]]
-    * composition): q156's repetition decision first-fit PACKED into
+    * [[Export.epochShardManifest]]): q156's repetition decision first-fit PACKED into
     * capacity-bounded training windows at (epoch, lang, lane) bin
     * grain, then accounted as the (epoch, shard) dataloader manifest —
     * the artifact a trainer actually mounts (bins, not raw docs).

@@ -45,14 +45,4 @@ object Ids {
       .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
     sorted.sparkSession.createDataFrame(withIds, schema)
   }
-
-  /** Hash surrogate key: a pure function of the natural key — stable
-    * across runs, engines, and partitionings, no coordination at all.
-    * 64-bit xxhash: collision expectation crosses 50% near 5e9 keys
-    * (birthday bound) — fine for dimensions, audit before using as a
-    * fact-table primary key at full corpus scale.
-    */
-  def hashKey(naturalKeyCols: Seq[String], idName: String = "hash_key")(
-      df: DataFrame): DataFrame =
-    df.withColumn(idName, xxhash64(naturalKeyCols.map(col): _*))
 }

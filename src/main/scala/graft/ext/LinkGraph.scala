@@ -1223,23 +1223,4 @@ object LinkGraph {
         .join(broadcast(blocked), Seq("host"), "left_anti"),
       "host")
   }
-
-  /** [[hostPriorKeep]] at a lookup-table node grain (see
-    * [[hostRankKeepByLookup]]); `edges` must be a lookup-grain frame
-    * ([[domainEdgesByLookup]]).
-    */
-  def hostPriorKeepByLookup(pages: DataFrame, edges: DataFrame,
-                            minInHosts: Long, lookup: DataFrame,
-                            urlCol: String = "url"): DataFrame = {
-    require(minInHosts >= 1,
-      "hostPriorKeepByLookup: minInHosts must be >= 1")
-    requireNoClash(pages, Seq("host", "in_hosts"), "hostPriorKeepByLookup")
-    val endorsed = hostDegrees(edges)
-      .where(col("in_hosts") >= minInHosts)
-      .select(col("host"), col("in_hosts"))
-    markAudit(
-      withPslDomain(pages, lookup, urlCol, outCol = "host")
-        .join(broadcast(endorsed), Seq("host"), "inner"),
-      "host", "in_hosts")
-  }
 }

@@ -632,8 +632,8 @@ object Multimodal {
           gridLum(Codec.readGifFrames(a.payload).head)
         else {
           // skip the GRFT header unconditionally (any kind): the hash
-          // must cover body bytes, not magic/kind/dims — matching
-          // audioHash and the documented contract
+          // must cover body bytes, not magic/kind/dims — the
+          // documented contract
           val start = if (a.payload.length >= FakeCodec.HeaderLen &&
             ByteBuffer.wrap(a.payload, 0, 4).getInt == FakeCodec.Magic) FakeCodec.HeaderLen else 0
           byteGrid(a.payload, start, a.payload.length)
@@ -754,93 +754,6 @@ object Multimodal {
         ceil(least(col("n_frames_a"), col("n_frames_b")) * lit(minMatchFrac)))
       .select("a_id", "b_id", "matched_frames", "n_frames_a", "n_frames_b")
   }
-
-  /** Mean-abs amplitude per window, n samples split into `w` windows
-    * (the audio analogue of the 9×8 pixel grid): window k covers
-    * samples [k·n/w, (k+1)·n/w) via the i·w/n mapping, each normalized
-    * by its own exact sample count so the off-by-one window sizes
-    * can't tilt the gradients.
-    */
-  private def windowMeans(w: Int, n: Int, sample: Int => Double): Array[Double] = {
-    val sums = new Array[Double](w)
-    val counts = new Array[Int](w)
-    var i = 0
-    while (i < n) {
-      val k = (i.toLong * w / n).toInt
-      sums(k) += sample(i)
-      counts(k) += 1
-      i += 1
-    }
-    var k = 0
-    while (k < w) {
-      if (counts(k) > 0) sums(k) /= counts(k)
-      k += 1
-    }
-    sums
-  }
-
-  private def gradientBitsToChunks(vals: Array[Double]): Array[Int] = {
-    var bits = 0L
-    var i = 0
-    while (i < vals.length - 1) {
-      bits = (bits << 1) | (if (vals(i) < vals(i + 1)) 1L else 0L)
-      i += 1
-    }
-    Array.tabulate(4)(c => ((bits >>> (48 - 16 * c)) & 0xFFFF).toInt)
-  }
-
-  /** 64-bit perceptual AUDIO hash: decode, split the clip into 65
-    * windows, take mean absolute amplitude per window, and set bit k
-    * iff window k is quieter than window k+1 — the envelope-gradient
-    * fingerprint, the audio analogue of [[dHash]] (robust to gain
-    * changes and re-encoding because energy GRADIENTS survive what
-    * raw samples don't). Same 4×16-bit chunk layout, same pigeonhole
-    * chunk join. Real WAV decodes via javax.sound with the format
-    * dispatched like [[extractFeatures]] (16-bit signed, 8-bit
-    * unsigned, raw-byte fallback for exotic encodings); GRFT and
-    * other undecodable payloads hash their body bytes — the
-    * deterministic stand-in. Narrow mapPartitions, payloads never
-    * shuffle.
-    */
-  def audioHash(assets: Dataset[Asset]): DataFrame = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions(_.map { a =>
-      val means: Array[Double] =
-        if (a.kind == "audio" && Codec.isWav(a.payload)) {
-          import javax.sound.sampled.AudioFormat.Encoding
-          val (fmt, pcm) = Codec.readWav(a.payload)
-          if (fmt.getEncoding == Encoding.PCM_SIGNED && fmt.getSampleSizeInBits == 16) {
-            val n = pcm.length / 2
-            val le = !fmt.isBigEndian
-            windowMeans(65, n, i => {
-              val lo = pcm(2 * i) & 0xFF
-              val hi = pcm(2 * i + 1) & 0xFF
-              math.abs((if (le) (hi << 8) | lo else (lo << 8) | hi).toShort.toDouble)
-            })
-          } else if (fmt.getEncoding == Encoding.PCM_UNSIGNED && fmt.getSampleSizeInBits == 8)
-            windowMeans(65, pcm.length, i => math.abs((pcm(i) & 0xFF) - 128.0))
-          else
-            windowMeans(65, pcm.length, i => (pcm(i) & 0xFF).toDouble)
-        } else {
-          val start = if (a.payload.length >= FakeCodec.HeaderLen &&
-            ByteBuffer.wrap(a.payload, 0, 4).getInt == FakeCodec.Magic) FakeCodec.HeaderLen else 0
-          windowMeans(65, math.max(0, a.payload.length - start),
-            i => (a.payload(start + i) & 0xFF).toDouble)
-        }
-      ChunkSig(a.asset_id, gradientBitsToChunks(means))
-    }).toDF()
-  }
-
-  /** Near-duplicate AUDIO pairs: [[audioHash]] through the chunked
-    * Hamming join — same contract as [[nearDupImages]] for the audio
-    * modality (re-encodes, gain changes, light noise collide;
-    * different material stays apart).
-    */
-  def nearDupAudio(assets: Dataset[Asset], maxHamming: Int = 3): DataFrame =
-    // the Hamming self-join reads the signatures on both sides: a
-    // [[CurationChain.StageMaterializer]] cut decodes the payloads once
-    Dedup.nearDupChunkSigs(CurationChain.LocalCheckpointMaterializer("chunk_sigs")(
-      audioHash(assets)), "asset_id", "phash", maxHamming)
 
   /** Deterministic text → real-PNG rendering: the document's UTF-8
     * bytes laid out as the 9×8 grayscale pixel grid, PNG-encoded via

@@ -131,8 +131,8 @@ object Similarity {
     * floored (small corpora) and capped (spark.ml KMeans is practical
     * to ~tens of thousands of centroids; past the cap, grow
     * targetCellSize / go hierarchical and train on a sample —
-    * `trainFraction`). Near the cap, note the centroid-literal paths
-    * ([[ivfTopKWithCentroids]], the semantic-dedup assignment): 65536
+    * `trainFraction`). Near the cap, note the centroid-literal path
+    * (the semantic-dedup assignment): 65536
     * cells × 64 float dims ≈ 16 MB embedded in the plan — still a
     * per-executor constant, but at that scale prefer an explicit
     * (lower) nClusters with a larger cell size: the within-cell term
@@ -387,10 +387,9 @@ object Similarity {
   }
 
   /** Train an IVF coarse quantizer and return its centroids as a plain
-    * (cluster, __centroid) DataFrame — a few KB you persist as parquet
-    * and reuse across runs ([[ivfTopKWithCentroids]]), which is the
-    * operational ANN shape: train once on a sample, probe forever.
-    * Same seeding/params as [[ivfTopK]]'s internal training.
+    * (cluster, __centroid) DataFrame — a few KB, the cell table
+    * [[semanticNearDupPairs]] assigns vectors against. Same
+    * seeding/params as [[ivfTopK]]'s internal training.
     */
   def ivfTrain(emb: DataFrame, nClusters: Int = 0,
                vecCol: String = "embedding", seed: Long = 7L,
@@ -404,56 +403,6 @@ object Similarity {
     model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }.toSeq
       .toDF("cluster", "__centroid")
-  }
-
-  /** IVF search against PRE-TRAINED centroids (see [[ivfTrain]]): cell
-    * assignment is the k-means metric (squared L2, codegen'd tight
-    * loop, ties → lowest cluster id), probing is cosine-to-centroid
-    * like [[ivfTopK]], and the exact cosine runs on probed-cell
-    * members only. No training pass — the index is an input.
-    *
-    * Plan shape: the index is a few KB BY CONSTRUCTION (nClusters
-    * rows), so it is collected into a PLAN LITERAL — assignment and
-    * probe selection become per-row array expressions (sort a
-    * nClusters-long struct array), i.e. pure narrow projections. The
-    * only shuffles left are the candidate equi-join on the cell id and
-    * the final per-query top-k window — strictly fewer than the
-    * model-based [[ivfTopK]] path.
-    */
-  def ivfTopKWithCentroids(emb: DataFrame, centroids: DataFrame, k: Int,
-                           nProbe: Int = 3, idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame = {
-    // nClusters rows — an index fetch, not a data collect
-    val cents: Seq[(Int, Seq[Float])] = centroids
-      .select(col("cluster"), col("__centroid"))
-      .collect().toSeq
-      .map(r => (r.getInt(0), r.getSeq[Float](1)))
-    require(cents.nonEmpty, "empty centroid index")
-    val centLit = typedlit(cents)
-    // nearest centroid (k-means metric): sort (distance, cluster)
-    // structs ascending, take the head — ties break to lowest cluster
-    val assign = element_at(array_sort(transform(centLit, c =>
-      struct(
-        graft.functions.ArrayExprs.squaredL2(col(vecCol), c.getField("_2")).as("d"),
-        c.getField("_1").as("cluster")))), 1).getField("cluster")
-    val members = emb.select(col(idCol).as("neighbor_id"),
-      assign.as("cluster"), col(vecCol).as("__vb"))
-    // probe cells: nProbe highest cosine-to-centroid, tie -> lowest id
-    val probeArr = slice(array_sort(transform(centLit, c =>
-      struct(
-        (-cosine(col(vecCol), c.getField("_2"))).as("negsim"),
-        c.getField("_1").as("cluster")))), 1, nProbe)
-    val probes = emb.select(col(idCol).as("vec_id"), col(vecCol).as("__va"),
-      explode(probeArr).as("p"))
-      .select(col("vec_id"), col("__va"), col("p.cluster").as("cluster"))
-    val cands = probes.join(members, "cluster")
-      .where(col("vec_id") =!= col("neighbor_id"))
-      .select(col("vec_id"), col("neighbor_id"),
-        cosine(col("__va"), col("__vb")).as("sim"))
-    val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    cands.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("vec_id", "neighbor_id", "rnk", "sim")
   }
 
   /** Approximate top-k: LSH-bucketed candidate join + exact cosine +

@@ -177,25 +177,6 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Ordered n-CHAR windows — the char-granularity unit of the
-    * exact-substring dedup family (Lee et al. operate on bytes with a
-    * 50-byte threshold; JVM strings are UTF-16, so the unit here is
-    * the CHARACTER — identical on the ASCII web corpora the recipe
-    * targets). Same contract as [[shinglesOrdered]]: one window per
-    * start position, short docs (< n chars) yield the empty array.
-    */
-  private[ext] def charWindowsOrdered(text: Column, n: Int): Column =
-    // native substr, not slice-and-join over a split char array: one
-    // UTF8String substring per window (code-point positions, like
-    // length()) instead of 2n intermediate objects — same span
-    // strings, so downstream xxhash64 values (and any persisted
-    // window index built from them) are bit-identical
-    when(length(text) >= n,
-      transform(
-        sequence(lit(0), length(text) - n),
-        i => substr(text, i + 1, lit(n))))
-      .otherwise(array().cast("array<string>"))
-
   /** Benchmark decontamination: count, per training document, the
     * distinct `n`-gram shingles it shares with a benchmark corpus — the
     * LLM training-data hygiene op (a doc containing test-set n-grams

@@ -489,11 +489,10 @@ case class TokenWindowHashes(child: Expression, n: Int)
 }
 
 /** xxhash64 (seed 42) of every n-CHAR window of a text, one entry per
-  * code-point start position — bit-identical to
-  * `transform(charWindowsOrdered(text, n), s => xxhash64(s))`
-  * (TextOps: `substr` windows in code-point coordinates, the
-  * exact-substring dedup family's unit) but with zero substring
-  * allocation: [[CharNgramBuckets]]'s boundary-offsets + in-place
+  * code-point start position — bit-identical to xxhash64 of
+  * `substr(text, i + 1, n)` at each start i (windows in code-point
+  * coordinates, the exact-substring dedup family's unit) but with
+  * zero substring allocation: [[CharNgramBuckets]]'s boundary-offsets + in-place
   * `XXH64.hashUTF8String` scheme, minus the bucket pmod. Texts shorter
   * than n code points → empty array (the `when(length ≥ n)` guard's
   * semantics).

@@ -56,9 +56,12 @@ trait Warehouse {
 }
 
 /** Parquet-directory warehouse: `<root>/<schema>/<table>/` per table.
-  * Writes are atomic (write temp dir, then swap) so a failed job never
-  * leaves a half-written table, and so a table can be read and replaced
-  * inside one Spark plan (the temp write materializes the plan first).
+  * A replace writes a temp dir, then deletes the table dir and renames
+  * the temp dir into place. A failed job leaves the old table as it
+  * was, and a table can be read and replaced inside one Spark plan (the
+  * temp write materializes the plan first). A process crash between
+  * the delete and the rename is not safe: it leaves no table dir, and
+  * the new data sits in `<table>__tmp_<id>` (ROADMAP item 9).
   */
 final class FileWarehouse(val spark: SparkSession, val root: String) extends Warehouse {
 
@@ -121,58 +124,6 @@ final class FileWarehouse(val spark: SparkSession, val root: String) extends War
 
   override def query(sql: String): DataFrame = { syncCatalog(); spark.sql(sql) }
   override def execute(sql: String): Unit = { syncCatalog(); spark.sql(sql).collect(); () }
-
-  /** Bucketed replace: write the table hash-bucketed (and sorted) by
-    * `bucketCols` as a catalog table at the warehouse path. Two tables
-    * bucketed the same way join/aggregate on those columns WITHOUT a
-    * shuffle — at 100 TB, pre-bucketing master and journal by primary
-    * key turns every merge's join/window exchange into a local sort.
-    * The table must then be read via [[readTable]]/[[query]] (bucketing
-    * metadata lives in the catalog, not the files).
-    */
-  def replaceBucketed(df: DataFrame, schema: String, table: String,
-                      bucketCols: Seq[String], numBuckets: Int): Unit = {
-    require(bucketCols.nonEmpty, "bucketed write requires bucket columns")
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `${schema.toLowerCase}`")
-    val qualified = s"`${schema.toLowerCase}`.`${table.toLowerCase}`"
-    // stage-then-swap, like replace(): write the bucketed data to a tmp
-    // path via a scratch catalog entry (materializes the plan — which
-    // may read the very table being replaced — and never exposes a
-    // half-written table), then rename the dir and rebind the catalog
-    // entry. Bucket ids live in the file NAMES, so re-declaring the
-    // bucket spec over the moved files preserves shuffle-free joins.
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val target = new Path(dir(schema, table))
-    val tmp = new Path(dir(schema, table) + "__tmp_" + stamp)
-    val tmpTable = s"`${schema.toLowerCase}`.`${table.toLowerCase}__tmp_$stamp`"
-    df.write.mode("overwrite")
-      .option("path", tmp.toString)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(tmpTable)
-    val schemaDdl = spark.table(tmpTable).schema.toDDL
-    spark.sql(s"DROP TABLE $tmpTable") // external: metadata only, files stay
-    val f = fs(target)
-    if (f.exists(target) && !f.delete(target, true))
-      throw new java.io.IOException(s"could not delete $target")
-    if (!f.rename(tmp, target))
-      throw new java.io.IOException(s"could not rename $tmp -> $target")
-    spark.sql(s"DROP TABLE IF EXISTS $qualified")
-    val bucketList = bucketCols.map(c => s"`$c`").mkString(", ")
-    spark.sql(s"CREATE TABLE $qualified ($schemaDdl) USING PARQUET " +
-      s"CLUSTERED BY ($bucketList) SORTED BY ($bucketList) INTO $numBuckets BUCKETS " +
-      s"LOCATION '${target.toString}'")
-  }
-
-  /** Catalog-aware read: resolves through the session catalog (so
-    * bucketing metadata applies); falls back to the path for tables
-    * written with the plain API.
-    */
-  def readTable(schema: String, table: String): DataFrame = {
-    val qualified = s"`${schema.toLowerCase}`.`${table.toLowerCase}`"
-    if (spark.catalog.tableExists(qualified)) spark.table(qualified)
-    else read(schema, table)
-  }
 
   /** Partition-move flip: rename `__record_state=A`'s files into
     * `__record_state=H` and drop the A directory — O(active files)

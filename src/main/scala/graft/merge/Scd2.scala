@@ -89,12 +89,6 @@ object Scd2 {
     history.where(col(ValidFrom) <= ts &&
       (col(ValidTo).isNull || ts < col(ValidTo)))
 
-  /** Current-rows view — must equal [[JournalMerge.full]] on the same
-    * journal modulo the interval columns (MergeSpec pins it).
-    */
-  def current(history: DataFrame): DataFrame =
-    history.where(col(IsCurrent))
-
   /** Roll a persisted history forward from a new journal batch: keys
     * untouched by the batch pass through untouched; each touched key is
     * rebuilt from its RETAINED versions plus the batch rows (the

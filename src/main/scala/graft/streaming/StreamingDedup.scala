@@ -124,8 +124,8 @@ object StreamingDedup {
     * ingest loop for binary assets ("is this incoming image/clip a
     * near-copy of anything we already hold?"). The batch must carry
     * the Asset schema (asset_id, kind, payload); `sigOf` picks the
-    * fingerprint family ([[graft.ext.Multimodal.dHash]] for images —
-    * the default — or [[graft.ext.Multimodal.audioHash]] for audio).
+    * fingerprint family (default [[graft.ext.Multimodal.dHash]], for
+    * images).
     * Per micro-batch:
     *
     *  1. hash the batch payloads ONCE (narrow mapPartitions — the

@@ -68,7 +68,8 @@ object StreamingScd2 {
   }
 
   /** The maintained history, bucket column dropped — feed it to
-    * [[graft.merge.Scd2.asOf]] / [[graft.merge.Scd2.current]]. A
+    * [[graft.merge.Scd2.asOf]], or filter `Scd2.IsCurrent` for the
+    * current rows. A
     * point-in-time read of ONE key can instead filter `__kb` first and
     * prune to a single partition directory.
     */

@@ -234,23 +234,6 @@ class ExtSpec extends AnyFunSuite {
       s"sampled-train IVF top-1 recall $recall collapsed (full-train pin is 0.65)")
   }
 
-  test("IVF with persisted centroids: train once, probe from the saved index") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val bf = Similarity.bruteForceTopK(emb, 1)
-      .select("vec_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    // round-trip the index through parquet — the operational shape
-    val dir = SparkTestBase.tmpDir("graft_ivf_index")
-    Similarity.ivfTrain(emb, nClusters = 16).write.mode("overwrite").parquet(dir)
-    val centroids = spark.read.parquet(dir)
-    val ivf = Similarity.ivfTopKWithCentroids(emb, centroids, k = 1, nProbe = 4)
-      .select("vec_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    assert(ivf.size === bf.size, "index-based IVF must cover every vector")
-    val recall = bf.count { case (v, n) => ivf.get(v).contains(n) }.toDouble / bf.size
-    // seeded + deterministic; expression-based assignment reproduces the
-    // model's cells (same euclidean metric), so recall matches ivfTopK's
-    assert(recall >= 0.6, s"index-based IVF top-1 recall $recall collapsed")
-  }
-
   test("dims audit: all-mismatched corpus throws, partial mismatch is counted not fatal") {
     import graft.ext.Similarity
     // a wrong dims argument zeroes EVERY signature -> one O(m²) garbage

@@ -420,13 +420,6 @@ class LinkGraphSpec extends AnyFunSuite {
         """<a href="https://p.good.co.uk/k">1</a>"""))
     val lookup = LinkGraph.pslLookupFor(crawl, rules, htmlCol = Some("html"))
     val edges = LinkGraph.domainEdgesByLookup(crawl, lookup)
-    // every registered domain is endorsed by at least one other; a
-    // threshold of 2 keeps only good.co.uk (acme + www.ck point at it)
-    val kept = LinkGraph.hostPriorKeepByLookup(
-      crawl.select($"doc_id", $"url"), edges, minInHosts = 2L, lookup)
-    assert(kept.select("doc_id", "host").as[(Long, String)].collect().toSeq ===
-      Seq((2L, "good.co.uk")),
-      "the prior gates by FOLDED node id — subdomain pages ride their domain")
     // rank artifact BUILT at PSL grain feeds the rank cut at PSL grain
     val rank = LinkGraph.hostRank(edges, iterations = 2)
     val floor = (1.0 - 0.85) / rank.count()

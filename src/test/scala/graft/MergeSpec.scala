@@ -263,7 +263,8 @@ class MergeSpec extends AnyFunSuite {
       (1, "b", "2024-01-02 00:00:00", "2024-01-02 00:00:00", 7L, "A"),
       (1, "c", "2024-01-02 00:00:00", "2024-01-02 00:00:00", 3L, "A"),
       (2, "x", "2024-01-01 00:00:00", "2024-01-01 00:00:00", 2L, "A"))
-    val cur = winners(Scd2.current(Scd2.history(j, Seq("id"))).select("id", "v"))
+    import org.apache.spark.sql.functions.col
+    val cur = winners(Scd2.history(j, Seq("id")).where(col(Scd2.IsCurrent)).select("id", "v"))
     assert(cur == winners(JournalMerge.full(j, Seq("id")).select("id", "v")))
   }
 
@@ -281,7 +282,7 @@ class MergeSpec extends AnyFunSuite {
       .select("id", "v")) == Map(1 -> "A"))
     // far future == current rows
     assert(winners(Scd2.asOf(h, lit("2099-01-01 00:00:00").cast("timestamp"))
-      .select("id", "v")) == winners(Scd2.current(h).select("id", "v")))
+      .select("id", "v")) == winners(h.where(col(Scd2.IsCurrent)).select("id", "v")))
     // interval boundary is [from, to): AT the change instant the NEW row holds
     assert(winners(Scd2.asOf(h, lit("2024-01-03 00:00:00").cast("timestamp"))
       .select("id", "v")) == Map(1 -> "B", 2 -> "X"))

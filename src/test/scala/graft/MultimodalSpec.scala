@@ -382,46 +382,6 @@ class MultimodalSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
-  test("audio near-dup: gain-scaled/noisy twin pairs up, different envelope stays apart") {
-    // a 440-ish tone under a rising-then-falling envelope; its twin is
-    // the same material at 60% gain with light noise (gradients of the
-    // energy envelope survive both); the third clip decays
-    // monotonically — structurally different audio (a symmetric
-    // envelope is its own reverse, so "reversed" would NOT differ)
-    val n = 6500
-    def env(i: Int): Double = if (i < n / 2) i.toDouble / (n / 2) else (n - i).toDouble / (n / 2)
-    def tone(i: Int): Double = math.sin(i * 0.35)
-    val rnd = new scala.util.Random(7)
-    val base = Array.tabulate(n)(i => (env(i) * tone(i) * 16000).toInt.toShort)
-    val twin = Array.tabulate(n)(i =>
-      (env(i) * tone(i) * 9600 + rnd.nextInt(201) - 100).toInt.toShort)
-    val other = Array.tabulate(n)(i => ((1.0 - i.toDouble / n) * tone(i) * 16000).toInt.toShort)
-    val assets = Seq(Asset(1L, "audio", wavOf(base)),
-      Asset(2L, "audio", wavOf(twin)),
-      Asset(3L, "audio", wavOf(other))).toDS()
-    val pairs = Multimodal.nearDupAudio(assets)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(pairs === Set((1L, 2L)), s"expected only the planted twin pair, got $pairs")
-    // brute-force differential on what the hash measures: the
-    // GAIN-NORMALIZED energy envelope (raw PCM distance would punish
-    // the twin's 60% gain — exactly the difference a perceptual hash
-    // must ignore). The twin's normalized envelope is far closer to
-    // the base's than any unpaired combination
-    def envelope(x: Array[Short]): Array[Double] = {
-      val w = Array.fill(65)(0.0); val c = Array.fill(65)(0)
-      for (i <- x.indices) { val k = (i.toLong * 65 / x.length).toInt; w(k) += math.abs(x(i).toDouble); c(k) += 1 }
-      val m = w.indices.map(k => w(k) / c(k))
-      val mean = m.sum / m.size
-      m.map(_ / mean).toArray
-    }
-    def dist(x: Array[Short], y: Array[Short]): Double = {
-      val (ex, ey) = (envelope(x), envelope(y))
-      ex.indices.map(k => math.abs(ex(k) - ey(k))).sum / 65
-    }
-    assert(dist(base, twin) < dist(base, other) / 4 && dist(base, twin) < dist(twin, other) / 4,
-      s"planted twin must be envelope-closer: ${dist(base, twin)} vs ${dist(base, other)}, ${dist(twin, other)}")
-  }
-
   test("incremental chunk-sig probe == full pair set (cross-frame), corpus never re-decodes") {
     // split the q82-style corpus: index on doc_id%10!=0, probe the rest;
     // the probe must reproduce exactly the cross-frame slice of the
