@@ -15,12 +15,7 @@ import org.apache.spark.sql.functions._
   * `last(..., ignoreNulls)` running window carries the most recent
   * right payload forward into each left row. ONE shuffle on the key,
   * O(|L|+|R|) rows through it, no pair blow-up. A hot key degrades to
-  * one sorted partition (same profile as any per-key window) — that is
-  * what [[asOfSalted]] is for: it splits each key's timeline into
-  * `timeBuckets` ranges, runs the carry-forward per (key, bucket), and
-  * stitches buckets with a per-key carry-in pass over ≤ `timeBuckets`
-  * rows — identical results, hot key spread over `timeBuckets`
-  * partitions.
+  * one sorted partition (same profile as any per-key window).
   *
   * Tie semantics (deterministic): right rows sort before left rows at
   * equal time (inclusive ≤), and equal-time right rows resolve by the
@@ -74,99 +69,5 @@ object AsOfJoin {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = unioned.withColumn("__asof", last(col("__r"), ignoreNulls = true).over(w))
     finish(carried, left, col("__asof"), rightPayload)
-  }
-
-  /** Skew-safe as-of: identical results to [[asOf]], but the big window
-    * partitions on (key, time-bucket) instead of key alone, so a hot
-    * key spreads over up to `timeBuckets` partitions.
-    *
-    * Mechanics: fixed-width time buckets over the global [min, max]
-    * time span (two scalars — a metadata aggregate, not a data
-    * collect). Each (key, bucket) runs the same carry-forward window;
-    * a row whose bucket holds no earlier right row takes the carry-in:
-    * the last right payload of any PRECEDING bucket, computed by a
-    * second window over the per-(key, bucket) summary — at most
-    * `timeBuckets` rows per key, so that window is trivially small.
-    * Equal timestamps always share a bucket, so tie semantics are
-    * unchanged.
-    */
-  def asOfSalted(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-                 leftTs: String, rightTs: String, tieBreak: String,
-                 rightPayload: Seq[String], timeBuckets: Int = 32): DataFrame = {
-    require(keyCols.nonEmpty, "as-of join requires at least one key column")
-    require(timeBuckets > 1, "timeBuckets must be > 1 (use asOf for the unsalted path)")
-    // bucket on a monotonic long image of the time column. Only types
-    // whose long cast PRESERVES ORDER are allowed: numerics (double
-    // truncation is non-decreasing), timestamp, date. A numeric STRING
-    // would pass a lossless-cast check yet order lexicographically in
-    // the window ("10" < "9") while bucketing numerically — silent
-    // divergence from asOf — so the gate is on the TYPE, at plan time.
-    val unioned0 = taggedUnion(left, right, keyCols, leftTs, rightTs, tieBreak, rightPayload)
-    import org.apache.spark.sql.types._
-    unioned0.schema("__t").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case TimestampType | DateType => ()
-      // fractional types are rejected too: a NaN time sorts LAST in the
-      // window but casts to a near-minimum bucket — the same silent
-      // order-vs-bucket divergence the string gate exists to prevent
-      case other => throw new IllegalArgumentException(
-        s"asOfSalted: time columns '$leftTs'/'$rightTs' must be integral, timestamp, or " +
-          s"date (got $other); use asOf for other orderable types")
-    }
-    val unioned = unioned0.withColumn("__tnum", col("__t").cast("long"))
-    // one full-scan min/max to size the buckets (the one extra pass the
-    // salted path pays; everything else below is the same single big
-    // shuffle as asOf plus a tiny per-(key,bucket) aggregate)
-    val span = unioned.agg(min(col("__tnum")).as("lo"), max(col("__tnum")).as("hi")).head()
-    if (span.isNullAt(0))
-      // every time is null: bucketing has nothing to split — the
-      // unsalted path IS the correct (and identical) plan here
-      return asOf(left, right, keyCols, leftTs, rightTs, tieBreak, rightPayload)
-    val (lo, hi) = (span.getLong(0), span.getLong(1))
-    // width/bucket arithmetic in BigInt/decimal: a sentinel time near
-    // Long.MinValue next to epoch times must not overflow into
-    // non-monotonic bucket ids (ANSI would at least throw; decimal
-    // arithmetic just works)
-    val width = ((BigInt(hi) - BigInt(lo)) / timeBuckets + 1)
-      .min(BigInt(Long.MaxValue)).toLong
-    val bucketed = unioned.withColumn("__bkt",
-      floor((col("__tnum").cast("decimal(38,0)") - lit(lo)) / lit(width)).cast("int"))
-    val keyAndBkt = (keyCols :+ "__bkt").map(col)
-    val order = Seq(col("__t").asc, col("__side").asc, col("__tie").asc_nulls_last)
-    val wLocal = Window.partitionBy(keyAndBkt: _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = bucketed
-      .withColumn("__asof_local", last(col("__r"), ignoreNulls = true).over(wLocal))
-    // per-(key, bucket) last right payload via ONE aggregate over the
-    // WINDOWED frame: `local` preserves the (key, bucket) hash
-    // partitioning, so this groupBy needs no new exchange AND both
-    // sides of the stitch self-join share one Exchange subtree — the
-    // source scan + union + shuffle-write happen once (aggregating the
-    // pre-window `bucketed` instead would plan a second full scan).
-    // Ordering = (is-right, time, tie-is-null, tie) reproduces the
-    // window order's winner — right rows beat left rows, then max time,
-    // then null tie sorts last (asc_nulls_last), then max tie. Buckets
-    // with no right rows keep a row with a null payload (left rows lose
-    // max_by but define the group), so the carry window sees EVERY
-    // bucket that exists.
-    val bucketOrd = struct(
-      when(col("__r").isNotNull, 1).otherwise(0).as("is_right"),
-      col("__t").as("t"),
-      when(col("__tie").isNull && col("__r").isNotNull, 1).otherwise(0).as("tie_null"),
-      col("__tie").as("tie"))
-    val wCarry = Window.partitionBy(keyCols.map(col): _*).orderBy(col("__bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carryIn = local.groupBy(keyAndBkt: _*)
-      .agg(max_by(col("__r"), bucketOrd).as("__blast"))
-      .withColumn("__carry", last(col("__blast"), ignoreNulls = true).over(wCarry))
-      .select(keyCols.map(c => col(c).as(s"__ci_$c")) ++
-        Seq(col("__bkt").as("__ci_bkt"), col("__carry")): _*)
-    // null-SAFE stitch join: null key values and the null time bucket
-    // must rejoin their carry rows exactly like asOf's window groups them
-    val joinCond = keyCols.map(c => col(c) <=> col(s"__ci_$c"))
-      .reduce(_ && _) && (col("__bkt") <=> col("__ci_bkt"))
-    val stitched = local.join(carryIn, joinCond)
-      .withColumn("__asof", coalesce(col("__asof_local"), col("__carry")))
-    finish(stitched, left, col("__asof"), rightPayload)
   }
 }

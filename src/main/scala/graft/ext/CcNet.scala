@@ -18,8 +18,8 @@ import graft.exec.EtlContext
   * precisely so the WHOLE composed pipeline keeps an exact DuckDB
   * oracle; the perplexity path stays available through
   * [[TextOps.lmPerplexityAgainst]] for users who want the real
-  * cross-entropy), exact terciles ([[TextOps.groupQuantiles]]'s exact
-  * percentile path, q24), and [[Sampling.mixtureSample]]'s md5
+  * cross-entropy), exact terciles (Spark's exact `percentile`, as
+  * verified by q24), and [[Sampling.mixtureSample]]'s md5
   * threshold rule (q33) keyed by band. Registry query q111.
   *
   * Like [[CurationChain]], two faces drive identical code: [[curate]]

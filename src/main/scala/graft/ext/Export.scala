@@ -1,15 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.io.Parquet
 
 /** Sharded training-corpus export (§2c extension): deterministic
   * hash-assignment of documents to a fixed number of output shards,
-  * a per-shard MANIFEST (docs / tokens / bytes / content checksum),
-  * and a physical parquet writer that lands exactly one file per
-  * shard and returns the manifest recomputed FROM the landed files —
-  * a witness that what's on disk is what was intended.
+  * a per-shard MANIFEST (docs / tokens / bytes / content checksum)
+  * that any engine can recompute from the landed files, and a seeded
+  * within-shard training order.
   *
   * Why not `df.randomSplit` / `spark.write` alone: a training-data
   * export must be (a) reproducible — the same corpus always lands in
@@ -24,10 +22,8 @@ import graft.io.Parquet
   *
   * Scale shape: assignment is a narrow codegen'd projection (no
   * shuffle); the manifest is one partial-aggregated groupBy on a
-  * small key domain (nShards rows out); the writer's only shuffle is
-  * the repartition that co-locates each shard into one task. At
-  * 100 TB you'd raise nShards to keep shards at file-system-friendly
-  * sizes — the layout stays one-file-per-shard by construction.
+  * small key domain (nShards rows out). At 100 TB you'd raise
+  * nShards to keep shards at file-system-friendly sizes.
   */
 object Export {
 
@@ -97,10 +93,9 @@ object Export {
     * Scale shape: NO global sort (the naive `orderBy(rand())` is a
     * full range-partitioned TeraSort) — one hash exchange on `shard`
     * plus an in-partition sort under the window; each shard lands in
-    * one task, so pick `nShards` for target shard sizes exactly as
-    * with [[exportShards]]. Null ids RAISE ([[shardOf]]'s total-
-    * function rule). Exact-oracled: md5 + modulo + row_number replay
-    * verbatim in DuckDB (q139).
+    * one task, so pick `nShards` for target shard sizes. Null ids
+    * RAISE ([[shardOf]]'s total-function rule). Exact-oracled: md5 +
+    * modulo + row_number replay verbatim in DuckDB (q139).
     */
   def trainingOrder(docs: DataFrame, nShards: Int, seed: String = "graft",
                     idCol: String = "doc_id"): DataFrame = {
@@ -119,34 +114,6 @@ object Export {
       .withColumn("shard", (col("__ord") % nShards).cast("long"))
       .withColumn("seq", (row_number().over(w) - 1).cast("long"))
       .drop("__ord")
-  }
-
-  /** Physical EPOCH export: [[trainingOrder]] materialized — land
-    * `docs` under `outDir/data` as `shard=<k>/part-*.parquet`, one
-    * file per shard, with rows inside each file IN `seq` ORDER (a
-    * parquet file preserves row order, so a loader that reads shard
-    * files top-to-bottom replays the epoch's global shuffle with zero
-    * load-time coordination). Returns the landed frame re-read from
-    * disk; callers assert `seq` monotonicity per shard (ExportSpec
-    * does) — a violated order means the writer reordered rows.
-    *
-    * Scale shape: [[trainingOrder]]'s window exchange is the ONLY
-    * row-level shuffle; the writer repartitions on the (already
-    * computed) shard column and sorts within partitions by seq — the
-    * same one-task-per-shard layout as [[exportShards]], plus the
-    * in-file order. A fresh `seed` per epoch re-lands a fresh
-    * permutation of the same corpus.
-    */
-  def exportEpoch(spark: SparkSession, docs: DataFrame, outDir: String,
-                  nShards: Int, seed: String = "graft",
-                  idCol: String = "doc_id"): DataFrame = {
-    val ordered = trainingOrder(docs, nShards, seed, idCol)
-    ordered
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("seq"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$outDir/data")
-    Parquet.read(spark, s"$outDir/data")
   }
 
   /** One 60-bit seeded hash per (id, epoch) SAMPLE — the multi-epoch
@@ -218,43 +185,5 @@ object Export {
       (if (subShards > 1) Seq(col("lane")) else Nil) :+ col("bin_id"))
       .map(_.cast("string"))
     packed.withColumn("bin_key", concat_ws(":", keyParts: _*))
-  }
-
-  /** Physical export: land `docs` under `outDir` as
-    * `shard=<k>/part-*.parquet` with EXACTLY one data file per shard
-    * (each shard is co-located into one task by the repartition on the
-    * shard column, and `partitionBy` then splits tasks by directory),
-    * write the source-side manifest to `outDir/_manifest`, and return
-    * the manifest recomputed from the landed files. Callers assert
-    * returned == intended (ExportSpec does) — a disagreement means
-    * the write lost or duplicated rows.
-    */
-  def exportShards(spark: SparkSession, docs: DataFrame, outDir: String,
-                   nShards: Int, idCol: String = "doc_id",
-                   textCol: String = "text", salt: String = "graft",
-                   tokenCount: Option[Column] = None): DataFrame = {
-    val intended = shardManifest(docs, nShards, idCol, textCol, salt, tokenCount)
-    docs
-      .withColumn("shard", shardOf(col(idCol), nShards, salt))
-      .repartition(nShards, col("shard"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$outDir/data")
-    intended.coalesce(1).write.mode("overwrite").parquet(s"$outDir/_manifest")
-    val landed = Parquet.read(spark, s"$outDir/data")
-    // recompute from what actually landed; shard column is read back
-    // from the directory layout, so a row in the wrong directory shows
-    // up as a manifest mismatch, not silence
-    landed
-      .select(
-        col("shard").cast("long").as("shard"),
-        tokenCount.getOrElse(size(TextOps.tokens(col(textCol)))).cast("long").as("__ntok"),
-        octet_length(col(textCol)).cast("long").as("__nbytes"),
-        contentHash(col(idCol), col(textCol)).as("__h"))
-      .groupBy("shard")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("__ntok")).as("n_tokens"),
-        sum(col("__nbytes")).as("n_bytes"),
-        expr("bit_xor(__h)").as("checksum"))
   }
 }

@@ -10,7 +10,7 @@ import graft.io.Parquet
   * The exposure model, in one place (FunctionsSpec pins the matrix and
   * README documents it):
   *  - ROW-level expressions (cosine similarity, shingle hashes,
-  *    simhash, Morton codes, …) register as real SQL functions via
+  *    simhash, subword tokenizers, …) register as real SQL functions via
   *    [[graft.functions.GraftFunctions]] — use them inside any SQL
   *    step.
   *  - TABLE-level operators (dedup families, decontamination,

@@ -1,39 +1,36 @@
 package graft.ext
 
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata, plus decode / feature-extract / resize /
-  * frame-sample operators implemented as partition-wise batch
-  * transforms (`mapPartitions` with product encoders — the Scala
-  * analogue of arrow-batched pandas UDFs: one JVM call per partition,
-  * rows streamed through an iterator, never collected).
+  * columns with typed metadata, plus decode and perceptual-hash
+  * operators implemented as partition-wise batch transforms
+  * (`mapPartitions` with product encoders — the Scala analogue of
+  * arrow-batched pandas UDFs: one JVM call per partition, rows
+  * streamed through an iterator, never collected).
   *
   * Codec status: IMAGES, AUDIO, AND ANIMATED-GIF VIDEO ARE REAL —
-  * PNG (and any other `javax.imageio` format) payloads are decoded,
-  * resized, and feature-extracted with the JDK's ImageIO; WAV/PCM
-  * payloads are decoded and feature-extracted with the JDK's
-  * `javax.sound.sampled`; and `kind=video` payloads carrying an
-  * animated GIF are decoded frame-by-frame, frame-sampled, resized,
-  * and feature-extracted through ImageIO's multi-image GIF
-  * reader/writer — no external deps anywhere. MP4-CLASS CONTAINER
-  * VIDEO IS DEMUXED FOR REAL ([[Codec.readMp4Video]]: ISO BMFF box
-  * walk + stsz/stsc/stco sample-table expansion, pure byte parsing) —
-  * decode metadata (dims, frame count, codec fourcc) and
-  * frame-sampling (encoded access units, exactly what a downstream
-  * GPU decoder consumes) work without any codec; only operations
-  * needing PIXELS from those samples (resize) sit behind the
-  * native-codec seam and fail loudly. [[FakeCodec.decode]]'s
-  * deterministic 24-byte "GRFT" header remains the stand-in for
-  * payloads no real path claims. The Spark-side contract — binary
-  * column in, typed struct out, per-partition batching, partition
-  * balance by asset id — is identical for all paths.
+  * PNG (and any other `javax.imageio` format) payloads are decoded
+  * and hashed with the JDK's ImageIO; WAV/PCM payloads are decoded
+  * with the JDK's `javax.sound.sampled`; and `kind=video` payloads
+  * carrying an animated GIF are decoded frame-by-frame through
+  * ImageIO's multi-image GIF reader/writer — no external deps
+  * anywhere. MP4-CLASS CONTAINER VIDEO IS DEMUXED FOR REAL
+  * ([[Codec.readMp4Video]]: ISO BMFF box walk + stsz/stsc/stco
+  * sample-table expansion, pure byte parsing) — decode metadata
+  * (dims, frame count, codec fourcc) and per-frame signatures over
+  * the encoded access units work without any codec.
+  * [[FakeCodec.decode]]'s deterministic 24-byte "GRFT" header remains
+  * the stand-in for payloads no real path claims. The Spark-side
+  * contract — binary column in, typed struct out, per-partition
+  * batching, partition balance by asset id — is identical for all
+  * paths.
   *
   * Scale notes: payload bytes never transit a shuffle in any operator
-  * here — decode/feature/resize are narrow maps; only the extracted
-  * features (small, fixed-size) should ever be joined or aggregated.
+  * here — decode and the hashes are narrow maps; only the extracted
+  * signatures (small, fixed-size) are ever joined or aggregated.
   */
 object Multimodal {
 
@@ -43,8 +40,6 @@ object Multimodal {
   final case class Asset(asset_id: Long, kind: String, payload: Array[Byte])
   final case class Decoded(asset_id: Long, kind: String, width: Int, height: Int,
                            sampleRate: Int, nFrames: Int, payloadBytes: Int)
-  final case class Features(asset_id: Long, features: Array[Float])
-  final case class Frame(asset_id: Long, frame_idx: Int, frame: Array[Byte])
 
   /** The stand-in codec for this environment. A real deployment
     * replaces the bodies of decode/encode; signatures stay.
@@ -190,8 +185,7 @@ object Multimodal {
     // The DEMUX side of container video is plain structure walking the
     // JDK handles fine (boxes, sample tables); only pixel DECODE of the
     // H.264/H.265 samples needs a native codec. So sample extraction,
-    // frame counts, and dimensions are REAL here; anything needing
-    // pixels (resize) stays behind the codec seam.
+    // frame counts, and dimensions are REAL here.
 
     private val FtypSig = "ftyp".getBytes("US-ASCII")
 
@@ -343,115 +337,6 @@ object Multimodal {
     })
   }
 
-  /** Feature extraction: payload → fixed-size float vector,
-    * L1-normalized (`array<float>` of fixed dim, joinable with
-    * [[Similarity]] ops). Real images: a `dim`-bin 8-bit luminance
-    * histogram over decoded pixels. Real WAV audio: a `dim`-bin
-    * amplitude histogram over the decoded 16-bit PCM samples. GRFT
-    * payloads: a byte histogram of the synthetic body — the
-    * deterministic stand-in for an embedding model's output.
-    */
-  def extractFeatures(assets: Dataset[Asset], dim: Int = 64): Dataset[Features] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions(_.map { a =>
-      val counts = new Array[Float](dim)
-      var total = 0f
-      if (a.kind == "audio" && Codec.isWav(a.payload)) {
-        import javax.sound.sampled.AudioFormat.Encoding
-        val (fmt, pcm) = Codec.readWav(a.payload)
-        // dispatch on the ACTUAL sample format — assuming 16-bit here
-        // would fuse byte pairs of an 8-bit WAV into garbage samples
-        if (fmt.getEncoding == Encoding.PCM_SIGNED && fmt.getSampleSizeInBits == 16) {
-          val n = pcm.length / 2
-          val le = !fmt.isBigEndian
-          var i = 0
-          while (i < n) {
-            val lo = pcm(2 * i) & 0xFF
-            val hi = pcm(2 * i + 1) & 0xFF
-            val s = (if (le) (hi << 8) | lo else (lo << 8) | hi).toShort.toInt
-            counts(((s + 32768) * dim) >>> 16) += 1f // 16-bit range -> dim bins
-            i += 1
-          }
-          total = math.max(1f, n.toFloat)
-        } else if (fmt.getEncoding == Encoding.PCM_UNSIGNED && fmt.getSampleSizeInBits == 8) {
-          var i = 0
-          while (i < pcm.length) {
-            counts(((pcm(i) & 0xFF) * dim) >>> 8) += 1f // 8-bit range -> dim bins
-            i += 1
-          }
-          total = math.max(1f, pcm.length.toFloat)
-        } else {
-          // other encodings (float, u-law, 24-bit...): raw-byte histogram,
-          // still deterministic and L1-normalized, never garbage samples
-          var i = 0
-          while (i < pcm.length) {
-            counts((pcm(i) & 0xFF) % dim) += 1f
-            i += 1
-          }
-          total = math.max(1f, pcm.length.toFloat)
-        }
-      } else if (a.kind == "image" && Codec.isImage(a.payload)) {
-        val img = Codec.readImage(a.payload)
-        lumHistogram(img, counts, dim)
-        total = math.max(1f, (img.getWidth * img.getHeight).toFloat)
-      } else if (a.kind == "video" && Codec.isGif(a.payload)) {
-        // luminance histogram pooled over every frame — the video
-        // analogue of the image feature, deterministic per payload
-        val frames = Codec.readGifFrames(a.payload)
-        var px = 0L
-        frames.foreach { f =>
-          lumHistogram(f, counts, dim)
-          px += f.getWidth.toLong * f.getHeight
-        }
-        total = math.max(1f, px.toFloat)
-      } else if (a.kind == "video" && Codec.isMp4(a.payload)) {
-        // encoded-domain byte histogram over the demuxed video samples
-        // (pixel features need the codec seam); deterministic, and
-        // sample-bounded rather than payload-bounded — container
-        // metadata bytes don't pollute the signature
-        val v = Codec.readMp4Video(a.payload)
-        var n = 0L
-        var s = 0
-        while (s < v.sampleSizes.length) {
-          val start = v.sampleOffsets(s).toInt
-          var i = 0
-          while (i < v.sampleSizes(s)) {
-            counts(java.lang.Byte.toUnsignedInt(a.payload(start + i)) % dim) += 1f
-            i += 1
-          }
-          n += v.sampleSizes(s)
-          s += 1
-        }
-        total = math.max(1f, n.toFloat)
-      } else {
-        var i = FakeCodec.HeaderLen
-        while (i < a.payload.length) {
-          counts(java.lang.Byte.toUnsignedInt(a.payload(i)) % dim) += 1f
-          i += 1
-        }
-        total = math.max(1f, (a.payload.length - FakeCodec.HeaderLen).toFloat)
-      }
-      Features(a.asset_id, counts.map(_ / total))
-    })
-  }
-
-  /** Accumulate an 8-bit-luminance histogram of an image into `counts`. */
-  private def lumHistogram(img: java.awt.image.BufferedImage,
-                           counts: Array[Float], dim: Int): Unit = {
-    var y = 0
-    while (y < img.getHeight) {
-      var x = 0
-      while (x < img.getWidth) {
-        val rgb = img.getRGB(x, y)
-        val lum = (((rgb >> 16) & 0xFF) * 299 + ((rgb >> 8) & 0xFF) * 587 +
-          (rgb & 0xFF) * 114) / 1000
-        counts(lum * dim / 256) += 1f
-        x += 1
-      }
-      y += 1
-    }
-  }
-
   /** Bilinear rescale of one frame to (width, height). */
   private def rescale(img: java.awt.image.BufferedImage, width: Int, height: Int,
                       imageType: Int): java.awt.image.BufferedImage = {
@@ -462,92 +347,6 @@ object Multimodal {
     g.drawImage(img, 0, 0, width, height, null)
     g.dispose()
     scaled
-  }
-
-  /** Resize. Real images: bilinear pixel rescale via Graphics2D,
-    * re-encoded as PNG. Real WAV audio: pass-through (pixel dimensions
-    * don't apply to audio; resampling is a different operator). GRFT
-    * payloads: stub transform — re-encode header + body scaled by area
-    * ratio. Narrow map, payload stays partition-local.
-    */
-  def resize(assets: Dataset[Asset], width: Int, height: Int): Dataset[Asset] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions(_.map { a =>
-      if (a.kind == "audio" && Codec.isWav(a.payload)) {
-        a
-      } else if (a.kind == "image" && Codec.isImage(a.payload)) {
-        val scaled = rescale(Codec.readImage(a.payload), width, height,
-          java.awt.image.BufferedImage.TYPE_INT_ARGB)
-        a.copy(payload = Codec.writePng(scaled))
-      } else if (a.kind == "video" && Codec.isGif(a.payload)) {
-        // per-frame bilinear rescale, re-encoded as an animated GIF
-        // (TYPE_INT_RGB: the GIF writer quantizes opaque frames itself)
-        val frames = Codec.readGifFrames(a.payload).map(
-          rescale(_, width, height, java.awt.image.BufferedImage.TYPE_INT_RGB))
-        a.copy(payload = Codec.writeGif(frames))
-      } else if (a.kind == "video" && Codec.isMp4(a.payload)) {
-        // resize needs PIXELS: demux can hand over the encoded samples
-        // (see sampleFrames) but rescaling them means decode+re-encode —
-        // the one genuinely codec-bound operation. Fail loudly rather
-        // than pass through silently at the wrong resolution.
-        throw new UnsupportedOperationException(
-          "MP4 resize requires a pixel codec (H.264/H.265 decode + encode); " +
-            "demux/sampleFrames/decode/extractFeatures are available without one")
-      } else {
-        val m = FakeCodec.decode(a.kind, a.payload)
-        val body = a.payload.length - FakeCodec.HeaderLen
-        // scale body size with area ratio, deterministically
-        val newBody = math.max(1,
-          (body.toLong * (width.toLong * height) /
-            math.max(1, m.width.toLong * m.height)).toInt)
-        a.copy(payload = FakeCodec.encode(m.copy(width = width, height = height),
-          a.asset_id, newBody))
-      }
-    })
-  }
-
-  /** Frame sampling: one output row per sampled frame (every `stride`th
-    * of nFrames), frame payload sliced deterministically from the body.
-    * flatMap — output can exceed input; frames of one asset stay in its
-    * partition.
-    */
-  def sampleFrames(assets: Dataset[Asset], stride: Int = 2): Dataset[Frame] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions(_.flatMap { a =>
-      // same kind+signature dispatch as decode/extractFeatures/resize —
-      // a record must take one consistent path across ALL operators
-      if ((a.kind == "image" && Codec.isImage(a.payload)) ||
-          (a.kind == "audio" && Codec.isWav(a.payload))) {
-        // a still image / a single audio clip is its own one frame
-        Seq(Frame(a.asset_id, 0, a.payload))
-      } else if (a.kind == "video" && Codec.isGif(a.payload)) {
-        // real frame sampling: every strideth GIF frame, each re-encoded
-        // as a standalone PNG (lossless, single-frame container)
-        val frames = Codec.readGifFrames(a.payload)
-        (0 until frames.length by stride).map { f =>
-          Frame(a.asset_id, f, Codec.writePng(frames(f)))
-        }
-      } else if (a.kind == "video" && Codec.isMp4(a.payload)) {
-        // real container demux: every strideth SAMPLE (encoded access
-        // unit) extracted via the stsz/stsc/stco tables — exactly the
-        // bytes a downstream GPU decoder consumes; no pixel decode
-        val v = Codec.readMp4Video(a.payload)
-        (0 until v.sampleSizes.length by stride).map { f =>
-          val start = v.sampleOffsets(f)
-          Frame(a.asset_id, f, java.util.Arrays.copyOfRange(
-            a.payload, start.toInt, start.toInt + v.sampleSizes(f)))
-        }
-      } else {
-      val m = FakeCodec.decode(a.kind, a.payload)
-      val body = a.payload.length - FakeCodec.HeaderLen
-      val perFrame = math.max(1, body / math.max(1, m.nFrames))
-      (0 until m.nFrames by stride).map { f =>
-        val start = FakeCodec.HeaderLen + f * perFrame
-        val end = math.min(a.payload.length, start + perFrame)
-        Frame(a.asset_id, f, java.util.Arrays.copyOfRange(a.payload, start, end))
-      }
-      }
-    })
   }
 
   /** One 64-bit perceptual signature per asset, in the SimHash 4×16-bit
@@ -572,24 +371,6 @@ object Multimodal {
     out
   }
 
-  /** 64-bit perceptual difference-hash (dHash) per asset: decode,
-    * bilinear-downsample to a 9×8 luminance grid, and set bit (y,x)
-    * iff the pixel is darker than its right neighbor — the classic
-    * row-gradient fingerprint, robust to resizing/re-encoding/small
-    * edits because gradients survive what raw pixels don't. Returned
-    * in the SimHash 4×16-bit chunk layout (chunk 0 = the 16 highest
-    * bits), so image near-dup rides the SAME pigeonhole chunk
-    * equi-join as text SimHash ([[Dedup.nearDupChunkSigs]]): Hamming
-    * ≤ 3 candidates collide on at least one chunk, never all-pairs.
-    *
-    * Real images hash their pixels; GIF videos hash their first frame
-    * (a video-level hash would want per-frame signatures — that's
-    * [[sampleFrames]] + this); GRFT and other undecodable payloads
-    * hash their body bytes laid out as the 9×8 grid directly — the
-    * deterministic stand-in keeping the pipeline testable without
-    * codecs. Scale shape: one narrow mapPartitions, payloads never
-    * shuffle; only (id, 16-byte signature) leaves the scan.
-    */
   /** Byte range laid out as the 9×8 luminance grid — the deterministic
     * stand-in for payloads with no pixel decoder (GRFT bodies, encoded
     * MP4 access units): byte i is cell i, short ranges zero-pad.
@@ -622,6 +403,24 @@ object Multimodal {
     Array.tabulate(4)(c => ((bits >>> (48 - 16 * c)) & 0xFFFF).toInt)
   }
 
+  /** 64-bit perceptual difference-hash (dHash) per asset: decode,
+    * bilinear-downsample to a 9×8 luminance grid, and set bit (y,x)
+    * iff the pixel is darker than its right neighbor — the classic
+    * row-gradient fingerprint, robust to resizing/re-encoding/small
+    * edits because gradients survive what raw pixels don't. Returned
+    * in the SimHash 4×16-bit chunk layout (chunk 0 = the 16 highest
+    * bits), so image near-dup rides the SAME pigeonhole chunk
+    * equi-join as text SimHash ([[Dedup.nearDupChunkSigs]]): Hamming
+    * ≤ 3 candidates collide on at least one chunk, never all-pairs.
+    *
+    * Real images hash their pixels; GIF videos hash their first frame
+    * (per-frame signatures are [[videoFrameSigs]]); GRFT and other
+    * undecodable payloads hash their body bytes laid out as the 9×8
+    * grid directly — the deterministic stand-in keeping the pipeline
+    * testable without codecs. Scale shape: one narrow mapPartitions,
+    * payloads never shuffle; only (id, 16-byte signature) leaves the
+    * scan.
+    */
   def dHash(assets: Dataset[Asset]): DataFrame = {
     import assets.sparkSession.implicits._
     assets.mapPartitions(_.map { a =>
@@ -658,16 +457,14 @@ object Multimodal {
 
   /** One 64-bit signature per SAMPLED FRAME of a video asset — the
     * frame-level fingerprint family that closes the modality matrix
-    * (text SimHash / image dHash / audio gradient hash are one
-    * signature per asset; video needs one per frame because two clips
-    * relate through their frame SETS, not a single hash). Same frame
-    * dispatch as [[sampleFrames]]: GIF videos dHash every `stride`th
+    * (text SimHash and image dHash are one signature per asset; video
+    * needs one per frame because two clips relate through their frame
+    * SETS, not a single hash). GIF videos dHash every `stride`th
     * DECODED frame's pixels; MP4 videos hash every `stride`th demuxed
     * access unit's BYTES (no pixel decoder in this environment — the
     * byte grid is the documented stand-in, deterministic on the exact
     * encoded bytes); GRFT payloads hash per-frame body slices.
-    * Non-video kinds are ignored (images/audio have their own
-    * single-signature families).
+    * Non-video kinds are ignored.
     *
     * Scale shape: one narrow mapPartitions; payloads never shuffle —
     * only (id, frame_idx, 16-byte signature) leaves the scan, ~24
@@ -795,16 +592,4 @@ object Multimodal {
     val bytes = text.getBytes("UTF-8")
     Codec.writeGif((0 until nFrames).map(f => renderTextFrame(bytes, 9 * f)))
   }
-
-  /** Metadata facet profile of an asset table — the typed-metadata side
-    * of the contract: group on small decoded columns, payloads pruned
-    * from the scan entirely.
-    */
-  def assetStats(decoded: Dataset[Decoded]): DataFrame =
-    decoded.groupBy(col("kind"))
-      .agg(count(lit(1)).as("n_assets"),
-        sum(col("payloadBytes")).as("total_bytes"),
-        avg(col("width")).as("avg_width"),
-        max(col("nFrames")).as("max_frames"))
-      .orderBy("kind")
 }

@@ -343,8 +343,8 @@ object Sampling {
     * so for a DOWNSAMPLED group (E < 1) the single epoch 0 is exactly
     * [[mixtureSample]]'s keep set at rate E (pinned in the spec). This
     * is the repetition decision the planner surfaces made executable:
-    * feed the result to [[Export.trainingOrder]] / [[Export.exportEpoch]]
-    * keyed on (id, epoch) and the multi-epoch stream is reproducible
+    * feed the result to [[Export.epochShardManifest]], whose shards are
+    * keyed on (id, epoch), and the multi-epoch stream is reproducible
     * row for row.
     *
     * Groups absent from `weights` are excluded (the planner's weight-0

@@ -1,30 +1,31 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.io.Parquet
 
-/** Mergeable distinct-count sketches (§2c extension): per-facet
-  * DataSketches HLL sketches of a corpus — the scan-once /
-  * merge-forever answer to "how many distinct users / documents /
-  * normalized texts per (source, lang)" at 100 TB, where an exact
-  * `count(distinct)` re-shuffles the whole corpus on every refresh.
+/** Per-facet corpus sketches (§2c extension): HLL and theta distinct
+  * counts, frequent items and quantiles — the scan-once answer to
+  * "how many distinct users / documents / normalized texts per
+  * (source, lang)" at 100 TB, where an exact `count(distinct)`
+  * re-shuffles the whole corpus on every refresh.
   *
   * The sketch column is an opaque `binary` any DataSketches-speaking
-  * engine can consume. The lifecycle mirrors the repo's other
-  * persisted indexes (digest / MinHash / ANN): BUILD once over the
-  * corpus ([[build]]), persist as parquet ([[write]]), then keep
-  * current by merging each ingest batch's sketch in ([[merge]]) —
-  * the old data is never rescanned. Estimates come out via
-  * [[estimates]].
+  * engine can consume. The theta, frequent-items and quantile
+  * families share the lifecycle of the repo's other persisted indexes
+  * (digest / MinHash / ANN): BUILD once over the corpus, persist the
+  * sketch table as plain parquet, then keep it current by folding each
+  * ingest batch's sketch rows in with the family's merge
+  * ([[thetaMerge]], [[freqMerge]], [[quantMerge]]) — the old data is
+  * never rescanned. [[graft.streaming.StreamingSketches]] lands one
+  * sketch table per micro-batch and reads through those merges.
   *
-  * Scale shape: build is one partial-aggregated groupBy (HLL partials
-  * combine map-side; only ~2^lgK-byte sketches shuffle, never
-  * values); merge is a groupBy over (facets × generations) rows —
-  * index-scale, not corpus-scale. Estimate error is the standard HLL
-  * bound ~1.04/sqrt(2^lgK) RSE (lgK=12 → ~1.6%); SketchSpec pins a
-  * 3-sigma envelope against exact counts plus the merge≡rebuild and
-  * parquet round-trip contracts.
+  * Scale shape: build is one partial-aggregated groupBy (partials
+  * combine map-side; only the sketches shuffle, never values); merge
+  * is a groupBy over (facets × generations) rows — index-scale, not
+  * corpus-scale. HLL estimate error is the standard bound
+  * ~1.04/sqrt(2^lgK) RSE (lgK=12 → ~1.6%); ExportSpec pins a 3-sigma
+  * envelope against exact counts, and the merge ≡ rebuild and parquet
+  * round-trip contracts of the merging families.
   */
 object Sketches {
 
@@ -40,16 +41,6 @@ object Sketches {
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
   }
 
-  /** Merge two sketch tables (same facets, same lgK — differing lgK
-    * RAISES via the underlying union, surfacing config drift rather
-    * than silently degrading accuracy): one sketch per facet over the
-    * union of both inputs' value sets.
-    */
-  def merge(a: DataFrame, b: DataFrame, groupCols: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy(groupCols.map(col): _*)
-      .agg(hll_union_agg(col("sketch"), allowDifferentLgConfigK = false).as("sketch"))
-
   /** Read the estimates off a sketch table:
     * `(groupCols…, distinct_est: double)` — rounded estimate as a
     * whole number of values (still a double: HLL's contract).
@@ -58,15 +49,6 @@ object Sketches {
     sketches.select(
       groupCols.map(col) :+
         round(hll_sketch_estimate(col("sketch"))).as("distinct_est"): _*)
-
-  /** Persist / reload a sketch table (plain parquet; the sketch is an
-    * engine-portable DataSketches binary).
-    */
-  def write(sketches: DataFrame, path: String): Unit =
-    sketches.write.mode("overwrite").parquet(path)
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    Parquet.read(spark, path)
 
   // --- theta sketches: the set ALGEBRA (intersect / subtract) HLL
   // --- doesn't have — corpus overlap and novelty estimation.
@@ -83,15 +65,15 @@ object Sketches {
       .agg(graft.functions.ThetaExprs.thetaSketchAgg(col(valueCol), lgK).as("sketch"))
   }
 
-  /** Merge two theta sketch tables. `lgK` must be the family's build
-    * value: a smaller union silently DOWNSAMPLES (theta's contract —
-    * there is no strict mode like the HLL aggregate's), so this is a
+  /** Fold a frame of theta sketch rows — any number per facet, e.g.
+    * one per landed batch — into one sketch per facet. `lgK` must be
+    * the family's build value: a smaller union silently DOWNSAMPLES
+    * (theta's contract — there is no strict mode), so this is a
     * parameter, not a guess, and [[thetaBuild]]'s default matches.
     */
-  def thetaMerge(a: DataFrame, b: DataFrame, groupCols: Seq[String],
+  def thetaMerge(sketches: DataFrame, groupCols: Seq[String],
                  lgK: Int = 12): DataFrame =
-    a.unionByName(b)
-      .groupBy(groupCols.map(col): _*)
+    sketches.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.ThetaExprs.thetaUnionAgg(col("sketch"), lgK).as("sketch"))
 
   /** Estimates off a theta sketch table (same shape as [[estimates]]). */
@@ -122,14 +104,14 @@ object Sketches {
     df.groupBy(groupCols.map(col): _*).agg(agg.as("sketch"))
   }
 
-  /** Merge two frequent-items sketch tables — same family `maxMapSize`
-    * (the merged buffer keeps ITS size; mixing sizes silently loosens
-    * the error bound, so thread one value per family, as with theta lgK).
+  /** Fold a frame of frequent-items sketch rows into one sketch per
+    * facet — same family `maxMapSize` (the merged buffer keeps ITS
+    * size; mixing sizes silently loosens the error bound, so thread one
+    * value per family, as with theta lgK).
     */
-  def freqMerge(a: DataFrame, b: DataFrame, groupCols: Seq[String],
+  def freqMerge(sketches: DataFrame, groupCols: Seq[String],
                 maxMapSize: Int = 256): DataFrame =
-    a.unionByName(b)
-      .groupBy(groupCols.map(col): _*)
+    sketches.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.FreqExprs.freqMergeAgg(col("sketch"), maxMapSize).as("sketch"))
 
   /** Top-k heavy hitters per facet off a sketch table, EXPLODED to one
@@ -182,13 +164,12 @@ object Sketches {
         .quantSketchAgg(col(valueCol).cast("double"), k).as("sketch"))
   }
 
-  /** Merge two quantile sketch tables — a `k` mismatch RAISES (the
-    * buffer checks), like the HLL strict mode.
+  /** Fold a frame of quantile sketch rows into one sketch per facet —
+    * a `k` mismatch RAISES (the buffer checks).
     */
-  def quantMerge(a: DataFrame, b: DataFrame, groupCols: Seq[String],
+  def quantMerge(sketches: DataFrame, groupCols: Seq[String],
                  k: Int = 256): DataFrame =
-    a.unionByName(b)
-      .groupBy(groupCols.map(col): _*)
+    sketches.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.QuantileExprs.quantMergeAgg(col("sketch"), k).as("sketch"))
 
   /** Read quantile estimates off a sketch table: one row per facet

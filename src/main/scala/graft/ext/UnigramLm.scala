@@ -19,7 +19,7 @@ import graft.functions.{BpeCore, UnigramCore, UnigramExpr}
   * digests, repartition determinism), which a soft E-step's float
   * accumulation order would complicate for marginal fit quality at
   * these vocab sizes. All randomness-free: seeds are substring counts
-  * with (count DESC, piece ASC) caps, log-scores are [[StrictMath]]
+  * with (count DESC, piece ASC) caps, log-scores are [[java.lang.StrictMath]]
   * over exact integer counts with add-one smoothing, and Viterbi ties
   * break longer-piece-first ([[UnigramCore.viterbi]] — the ONE
   * segmenter trainer and apply expression share).

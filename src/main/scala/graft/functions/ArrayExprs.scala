@@ -67,10 +67,6 @@ object ArrayExprs {
   def maxTokenMultiplicity(text: Column): Column =
     ColumnBridge.column(MaxTokenMultiplicity(ColumnBridge.expression(text)))
 
-  /** Morton (z-order) code of pre-scaled long ranks. */
-  def interleaveBits(cols: Seq[Column], bitsPerCol: Int): Column =
-    ColumnBridge.column(InterleaveBits(cols.map(ColumnBridge.expression), bitsPerCol))
-
   /** Squared L2 distance of two float arrays (double accumulation). */
   def squaredL2(a: Column, b: Column): Column =
     ColumnBridge.column(SquaredL2Distance(
@@ -571,65 +567,6 @@ case class MaxTokenMultiplicity(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Morton (z-order) code: interleave the low `bits` bits of each child
-  * (already range-scaled to 0..2^bits−1; values outside are clamped),
-  * most significant first — children earlier in the list take the
-  * higher bit of each round. `nCols·bits` must fit a non-negative long
-  * (≤ 63). NULL in any child → NULL code (sorts first in ASC NULLS
-  * FIRST, the "unknown locality" bucket).
-  */
-case class InterleaveBits(children: Seq[Expression], bits: Int)
-  extends Expression with ExpectsInputTypes with CodegenFallback {
-  require(children.nonEmpty, "need at least one column to interleave")
-  require(bits >= 1 && children.length * bits <= 63,
-    s"${children.length} cols x $bits bits must fit in 63 bits")
-
-  override def inputTypes: Seq[DataType] = Seq.fill(children.length)(LongType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "interleave_bits"
-
-  private val maxVal = (1L << bits) - 1
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val n = children.length
-    val vals = new Array[Long](n)
-    var c = 0
-    while (c < n) {
-      val v = children(c).eval(input)
-      if (v == null) return null
-      val x = v.asInstanceOf[Long]
-      vals(c) = if (x < 0) 0L else if (x > maxVal) maxVal else x
-      c += 1
-    }
-    var out = 0L
-    var i = bits - 1
-    while (i >= 0) {
-      var j = 0
-      while (j < n) {
-        out = (out << 1) | ((vals(j) >> i) & 1L)
-        j += 1
-      }
-      i -= 1
-    }
-    out
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
-}
-
-/** Random-hyperplane LSH signatures: for each table, an int whose bit r
-  * (first plane = highest bit) is sign(v · plane_r), i.e. the bucket
-  * key of [[graft.ext.Similarity.lshBuckets]]. Replaces a
-  * tables×bits×dims interpreted HOF pyramid (`transform`/`aggregate`/
-  * `zip_with`) with one straight triple loop — the signature job was
-  * the dominant cost of the ANN scan at the 10× scale factor. Numeric
-  * contract is the HOF chain's, reproduced exactly: sequential double
-  * accumulation in element order, strict `> 0` sign test,
-  * `acc*2 + bit` packing — bit-identical buckets (the pinned q16
-  * digest verifies this).
-  */
 /** Hamming distance between two chunked int signatures: Σ
   * bit_count(a(i) ^ b(i)). Replaces the interpreted
   * `aggregate(zip_with(...))` HOF chain in the chunk-join verify —
@@ -717,6 +654,17 @@ case class ChunkHammingDistance(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** Random-hyperplane LSH signatures: for each table, an int whose bit r
+  * (first plane = highest bit) is sign(v · plane_r), i.e. the bucket
+  * key of [[graft.ext.Similarity.lshBuckets]]. Replaces a
+  * tables×bits×dims interpreted HOF pyramid (`transform`/`aggregate`/
+  * `zip_with`) with one straight triple loop — the signature job was
+  * the dominant cost of the ANN scan at the 10× scale factor. Numeric
+  * contract is the HOF chain's, reproduced exactly: sequential double
+  * accumulation in element order, strict `> 0` sign test,
+  * `acc*2 + bit` packing — bit-identical buckets (the pinned q16
+  * digest verifies this).
+  */
 case class HyperplaneSignatures(child: Expression, planes: Seq[Seq[Seq[Double]]])
   extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
   require(planes.nonEmpty && planes.head.nonEmpty, "need >= 1 table of >= 1 plane")

@@ -45,13 +45,6 @@ object GraftFunctions {
     (FunctionIdentifier("max_token_multiplicity"),
       info("max_token_multiplicity", "_FUNC_(text) - count of the most frequent whitespace token"),
       (es: Seq[Expression]) => MaxTokenMultiplicity(es(0))),
-    (FunctionIdentifier("interleave_bits"),
-      info("interleave_bits", "_FUNC_(bits, col1, col2, ...) - Morton z-order code of pre-scaled bigint ranks"),
-      (es: Seq[Expression]) => InterleaveBits(es.tail, es.head match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"interleave_bits width must be an integer literal, got $other")
-      })),
     // the two in-engine subword tokenizers, SQL-callable: the model
     // path must be a STRING LITERAL — the persisted model is loaded
     // driver-side at analysis time (O(model) rows, the fn-step

@@ -14,8 +14,8 @@ import graft.io.Parquet
   * partial counts — a few rows per active key, never raw events; the
   * report recompute reads partial counts only (days × keys rows), so
   * its cost tracks the series length, not the stream volume. The
-  * append-only partials dir compacts like any lake table
-  * (`Layout.compactParquet`).
+  * partials dir gains one `batch_id=` directory per batch; nothing
+  * here compacts it.
   */
 object StreamingAnomalies {
 

@@ -455,9 +455,8 @@ object StreamingDedup {
     * Why it exists: each micro-batch appends one partition directory
     * forever, so after a week at a 10 s trigger the index is ~60k
     * directories of KB-files — listing, footer parses, and task
-    * scheduling start to dominate every probe (the same small-files
-    * disease [[graft.ext.Layout.compactParquet]] cures for plain
-    * tables, compounded by partition discovery).
+    * scheduling start to dominate every probe (the small-files disease
+    * of any append-only table, compounded by partition discovery).
     *
     * Replay contract preserved BY CONSTRUCTION: the merged rows are
     * exactly `__batch < latest` — what a redelivery of the latest
@@ -467,8 +466,7 @@ object StreamingDedup {
     * after a crash it may belong to an uncommitted batch that will be
     * redelivered and must overwrite its own directory untouched by us.
     *
-    * Not atomic (two rename windows), same documented posture as
-    * [[graft.ext.Layout.compactParquet]]: run it between restarts or
+    * Not atomic (two rename windows): run it between restarts or
     * while the stream is quiesced. The staging and trash directories
     * carry no `=` in their names, so Spark's partition discovery never
     * sees them even mid-swap. Returns the number of batch partitions

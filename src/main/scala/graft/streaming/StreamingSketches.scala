@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.ext.Sketches
 import graft.io.Parquet
 
@@ -42,11 +41,8 @@ object StreamingSketches {
     * every batch partition down to one sketch per facet.
     */
   def currentSketches(spark: SparkSession, indexRoot: String,
-                      groupCols: Seq[String], lgK: Int = 12): DataFrame = {
-    val all = Parquet.read(spark, indexRoot).drop("__batch")
-    all.groupBy(groupCols.map(col): _*)
-      .agg(graft.functions.ThetaExprs.thetaUnionAgg(col("sketch"), lgK).as("sketch"))
-  }
+                      groupCols: Seq[String], lgK: Int = 12): DataFrame =
+    Sketches.thetaMerge(batches(spark, indexRoot), groupCols, lgK)
 
   /** Current per-facet distinct estimates of the whole stream history. */
   def currentEstimates(spark: SparkSession, indexRoot: String,
@@ -71,10 +67,7 @@ object StreamingSketches {
                   groupCols: Seq[String], k: Int,
                   maxMapSize: Int = 256): DataFrame =
     Sketches.freqTopK(
-      Parquet.read(spark, indexRoot).drop("__batch")
-        .groupBy(groupCols.map(col): _*)
-        .agg(graft.functions.FreqExprs.freqMergeAgg(col("sketch"), maxMapSize).as("sketch")),
-      groupCols, k)
+      Sketches.freqMerge(batches(spark, indexRoot), groupCols, maxMapSize), groupCols, k)
 
   /** foreachBatch sink: the batch's per-facet quantile sketch under
     * `indexRoot/__batch=<batchId>` — running percentile tracking
@@ -90,8 +83,9 @@ object StreamingSketches {
                        groupCols: Seq[String], qs: Seq[Double],
                        k: Int = 256): DataFrame =
     Sketches.quantEstimates(
-      Parquet.read(spark, indexRoot).drop("__batch")
-        .groupBy(groupCols.map(col): _*)
-        .agg(graft.functions.QuantileExprs.quantMergeAgg(col("sketch"), k).as("sketch")),
-      groupCols, qs)
+      Sketches.quantMerge(batches(spark, indexRoot), groupCols, k), groupCols, qs)
+
+  /** Every landed batch's sketch rows, without the partition column. */
+  private def batches(spark: SparkSession, indexRoot: String): DataFrame =
+    Parquet.read(spark, indexRoot).drop("__batch")
 }

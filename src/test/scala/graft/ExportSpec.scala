@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Diff, Export, Sketches, TextOps}
+import graft.io.Parquet
 
 /** Sharded export, sketch statistics, and snapshot diff — the corpus
   * lifecycle operators around a curation run. The oracled behavior is
@@ -78,30 +79,6 @@ class ExportSpec extends AnyFunSuite {
     assert(a === b)
   }
 
-  test("exportShards: landed manifest == intended, one file per shard, rows survive") {
-    val d = spark.read.parquet(s"$sf/documents.parquet")
-    val out = SparkTestBase.tmpDir("graft_export")
-    val landed = Export.exportShards(spark, d, out, nShards = 4)
-      .orderBy("shard").collect().toSeq
-    val intended = Export.shardManifest(d, 4).orderBy("shard").collect().toSeq
-    assert(landed === intended, "manifest recomputed from landed files must match the intent")
-    // the persisted manifest matches too
-    val persisted = spark.read.parquet(s"$out/_manifest").orderBy("shard").collect().toSeq
-    assert(persisted === intended)
-    // physical layout: every shard directory holds exactly ONE data file
-    val dirs = new java.io.File(s"$out/data").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-    assert(dirs.length === 4)
-    for (dir <- dirs) {
-      val files = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length === 1, s"${dir.getName} must hold one data file, got ${files.length}")
-    }
-    // round trip: nothing lost, nothing duplicated
-    val back = spark.read.parquet(s"$out/data")
-    assert(back.count() === d.count())
-    assert(back.select("doc_id").distinct().count() === d.count())
-  }
-
   // --- Sketches ---------------------------------------------------------
 
   test("HLL estimates are near-exact for small cardinalities and within 3 sigma at 50k") {
@@ -119,34 +96,6 @@ class ExportSpec extends AnyFunSuite {
     val rse = 1.04 / math.sqrt(1 << 12)
     assert(math.abs(estL - n) <= 3 * rse * n,
       s"estimate $estL outside 3-sigma of $n")
-  }
-
-  test("HLL merge of halves == single-pass build (estimates), incl. parquet round-trip") {
-    val d = spark.read.parquet(s"$sf/documents.parquet")
-      .withColumn("__norm", TextOps.normalizeText($"text"))
-    val full = Sketches.estimates(
-      Sketches.build(d, Seq("source"), "__norm"), Seq("source"))
-      .orderBy("source").collect().toSeq
-    val h1 = Sketches.build(d.where($"doc_id" % 2 === 0), Seq("source"), "__norm")
-    val h2 = Sketches.build(d.where($"doc_id" % 2 =!= 0), Seq("source"), "__norm")
-    val merged = Sketches.estimates(Sketches.merge(h1, h2, Seq("source")), Seq("source"))
-      .orderBy("source").collect().toSeq
-    assert(merged === full, "merge of disjoint halves must estimate like the single-pass build")
-    // the persisted-index lifecycle: write half 1, reload, merge batch 2
-    val path = SparkTestBase.tmpDir("graft_sketch") + "/idx"
-    Sketches.write(h1, path)
-    val viaDisk = Sketches.estimates(
-      Sketches.merge(Sketches.read(spark, path), h2, Seq("source")), Seq("source"))
-      .orderBy("source").collect().toSeq
-    assert(viaDisk === full, "parquet round-trip must not change the union")
-  }
-
-  test("HLL lgK drift raises on merge instead of silently degrading") {
-    val a = Sketches.build(Seq(("g", "x")).toDF("g", "v"), Seq("g"), "v", lgK = 12)
-    val b = Sketches.build(Seq(("g", "y")).toDF("g", "v"), Seq("g"), "v", lgK = 13)
-    val e = intercept[Exception] { Sketches.merge(a, b, Seq("g")).collect() }
-    assert(e.getMessage.toLowerCase.matches("(?s).*(lgconfigk|sketch|union).*"),
-      s"expected an lgK/union error, got: ${e.getMessage.take(200)}")
   }
 
   test("golden digest: q94 per-facet estimates are bit-stable at sf0.001") {
@@ -188,9 +137,10 @@ class ExportSpec extends AnyFunSuite {
     val h1 = Sketches.thetaBuild(d.where($"doc_id" % 2 === 0), Seq("source"), "__norm")
     val h2 = Sketches.thetaBuild(d.where($"doc_id" % 2 =!= 0), Seq("source"), "__norm")
     val path = SparkTestBase.tmpDir("graft_theta") + "/idx"
-    Sketches.write(h1, path)
+    h1.write.parquet(path)
     val merged = Sketches.thetaEstimates(
-      Sketches.thetaMerge(Sketches.read(spark, path), h2, Seq("source")), Seq("source"))
+      Sketches.thetaMerge(Parquet.read(spark, path).unionByName(h2), Seq("source")),
+      Seq("source"))
       .orderBy("source").collect().toSeq
     assert(merged === full)
   }
@@ -357,9 +307,9 @@ class ExportSpec extends AnyFunSuite {
     val h1 = Sketches.freqBuild(df.where(crc32($"v") % 2 === 0), Seq("g"), "v", maxMapSize = 1024)
     val h2 = Sketches.freqBuild(df.where(crc32($"v") % 2 =!= 0), Seq("g"), "v", maxMapSize = 1024)
     val path = SparkTestBase.tmpDir("graft_freq") + "/idx"
-    Sketches.write(h1, path)
+    h1.write.parquet(path)
     val merged = Sketches.freqTopK(
-      Sketches.freqMerge(Sketches.read(spark, path), h2, Seq("g"), maxMapSize = 1024),
+      Sketches.freqMerge(Parquet.read(spark, path).unionByName(h2), Seq("g"), maxMapSize = 1024),
       Seq("g"), 300)
       .as[(String, String, Long, Long, Long, Long)].collect().toSeq
     assert(merged === full,

@@ -503,109 +503,31 @@ class ExtSpec extends AnyFunSuite {
       (1L, 12L, 100L), // inclusive boundary; tie at t=100 -> max quote_id
       (2L, 13L, 200L)))
     // trade 3 (t=50, before any quote) and trade 4 (z-quote after) drop
-  }
-
-  test("asOfSalted == asOf on a skewed fixture (one key with ~50% of rows)") {
-    import graft.ext.AsOfJoin
-    val rnd = new scala.util.Random(7)
-    // hot key "h": 500 trades + 500 quotes; 20 cold keys share the rest
-    val trades = ((1 to 500).map(i => (i.toLong, "h", rnd.nextInt(100000).toLong)) ++
-      (501 to 1000).map(i => (i.toLong, s"k${i % 20}", rnd.nextInt(100000).toLong)))
-      .toDF("trade_id", "sym", "t")
-    val quotes = ((1 to 500).map(i => (i.toLong + 10000, "h", rnd.nextInt(100000).toLong)) ++
-      (501 to 1000).map(i => (i.toLong + 10000, s"k${i % 20}", rnd.nextInt(100000).toLong)))
-      .toDF("quote_id", "sym", "qt")
-    def collectOut(df: org.apache.spark.sql.DataFrame) =
-      df.select("trade_id", "quote_id", "asof_ts").as[(Long, Long, Long)].collect().toSet
-    val plain = collectOut(AsOfJoin.asOf(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id")))
-    assert(plain.nonEmpty)
-    // equality must hold for ANY bucketing granularity, including one
-    // finer than the data (most buckets empty) and the 2-bucket edge
-    for (buckets <- Seq(2, 16, 4096)) {
-      val salted = collectOut(AsOfJoin.asOfSalted(trades, quotes, Seq("sym"), "t", "qt",
-        "quote_id", Seq("quote_id"), timeBuckets = buckets))
-      assert(salted === plain, s"timeBuckets=$buckets diverged")
-    }
-  }
-
-  test("asOfSalted handles crafted boundaries (carry-in across empty buckets, ties)") {
-    import graft.ext.AsOfJoin
-    val trades = Seq((1L, "k", 100L), (2L, "k", 205L), (3L, "k", 50L), (4L, "z", 10L),
-      (5L, "k", 99999L)) // far future: its match carries across many empty buckets
-      .toDF("trade_id", "sym", "t")
-    val quotes = Seq((10L, "k", 90L), (11L, "k", 100L), (12L, "k", 100L), (13L, "k", 200L),
-      (14L, "z", 99L))
-      .toDF("quote_id", "sym", "qt")
-    val out = AsOfJoin.asOfSalted(trades, quotes, Seq("sym"), "t", "qt", "quote_id",
-      Seq("quote_id"), timeBuckets = 8)
-      .select("trade_id", "quote_id", "asof_ts")
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    assert(out === Seq((1L, 12L, 100L), (2L, 13L, 200L), (5L, 13L, 200L)))
-  }
-
-  test("asOfSalted == asOf with null keys and null right timestamps") {
-    import graft.ext.AsOfJoin
-    val trades = Seq((1L, Option("k"), Option(100L)), (2L, None, Option(50L)),
-      (3L, None, Option(200L)), (4L, Option("k"), Option(300L)))
-      .toDF("trade_id", "sym", "t")
-    // quote 12 has a NULL time: sorts before everything (baseline quote)
-    val quotes = Seq((10L, Option("k"), Option(90L)), (11L, None, Option(40L)),
-      (12L, None, Option.empty[Long]))
-      .toDF("quote_id", "sym", "qt")
-    def run(f: => org.apache.spark.sql.DataFrame) =
-      f.select("trade_id", "quote_id").as[(Long, Long)].collect().toSet
-    val plain = run(AsOfJoin.asOf(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id")))
-    val salted = run(AsOfJoin.asOfSalted(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id"), timeBuckets = 4))
-    assert(plain.nonEmpty, "null-key rows must match within the null-key group")
-    assert(salted === plain)
-  }
-
-  test("asOfSalted rejects string time columns at plan time (lexicographic != numeric)") {
-    import graft.ext.AsOfJoin
-    // a NUMERIC string would even cast losslessly, but the window orders
-    // it lexicographically ("10" < "9") while buckets order numerically —
-    // the type gate must reject it before any job runs
-    val trades = Seq((1L, "k", "50")).toDF("trade_id", "sym", "t")
-    val quotes = Seq((10L, "k", "9"), (11L, "k", "10")).toDF("quote_id", "sym", "qt")
-    val e = intercept[IllegalArgumentException] {
-      AsOfJoin.asOfSalted(trades, quotes, Seq("sym"), "t", "qt", "quote_id",
-        Seq("quote_id"), timeBuckets = 4)
-    }
-    assert(e.getMessage.contains("integral, timestamp, or date"))
-  }
-
-  test("asOfSalted == asOf when every timestamp is null (delegates to unsalted)") {
-    import graft.ext.AsOfJoin
-    val trades = Seq((1L, "k", Option.empty[Long]), (2L, "k", Option.empty[Long]))
-      .toDF("trade_id", "sym", "t")
-    val quotes = Seq((10L, "k", Option.empty[Long]), (11L, "k", Option.empty[Long]))
-      .toDF("quote_id", "sym", "qt")
-    def run(df: org.apache.spark.sql.DataFrame) =
-      df.select("trade_id", "quote_id").as[(Long, Long)].collect().toSet
-    val plain = run(AsOfJoin.asOf(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id")))
-    val salted = run(AsOfJoin.asOfSalted(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id"), timeBuckets = 4))
-    assert(plain === Set(1L -> 11L, 2L -> 11L), "null-time rights are the baseline match")
-    assert(salted === plain)
-  }
-
-  test("asOfSalted survives sentinel times near Long.MinValue (no bucket overflow)") {
-    import graft.ext.AsOfJoin
+    def pairs(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
+      AsOfJoin.asOf(l, r, Seq("sym"), "t", "qt", "quote_id", Seq("quote_id"))
+        .select("trade_id", "quote_id").as[(Long, Long)].collect().toSet
+    // null keys match within the null-key group; a NULL right time sorts
+    // before every time (the baseline quote)
+    assert(pairs(
+      Seq((1L, Option("k"), Option(100L)), (2L, None, Option(50L)),
+        (3L, None, Option(200L)), (4L, Option("k"), Option(300L)))
+        .toDF("trade_id", "sym", "t"),
+      Seq((10L, Option("k"), Option(90L)), (11L, None, Option(40L)),
+        (12L, None, Option.empty[Long]))
+        .toDF("quote_id", "sym", "qt")) ===
+      Set(1L -> 10L, 2L -> 11L, 3L -> 11L, 4L -> 10L))
+    // every time null: null-time rights are the baseline match
+    assert(pairs(
+      Seq((1L, "k", Option.empty[Long]), (2L, "k", Option.empty[Long]))
+        .toDF("trade_id", "sym", "t"),
+      Seq((10L, "k", Option.empty[Long]), (11L, "k", Option.empty[Long]))
+        .toDF("quote_id", "sym", "qt")) === Set(1L -> 11L, 2L -> 11L))
+    // sentinel times near Long.MinValue order like any other time
     val sentinel = Long.MinValue / 2
-    val trades = Seq((1L, "k", 100L), (2L, "k", sentinel + 5)).toDF("trade_id", "sym", "t")
-    val quotes = Seq((10L, "k", sentinel), (11L, "k", 90L)).toDF("quote_id", "sym", "qt")
-    def run(df: org.apache.spark.sql.DataFrame) =
-      df.select("trade_id", "quote_id").as[(Long, Long)].collect().toSet
-    val plain = run(AsOfJoin.asOf(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id")))
-    val salted = run(AsOfJoin.asOfSalted(trades, quotes, Seq("sym"), "t", "qt",
-      "quote_id", Seq("quote_id"), timeBuckets = 8))
-    assert(plain === Set(1L -> 11L, 2L -> 10L))
-    assert(salted === plain)
+    assert(pairs(
+      Seq((1L, "k", 100L), (2L, "k", sentinel + 5)).toDF("trade_id", "sym", "t"),
+      Seq((10L, "k", sentinel), (11L, "k", 90L)).toDF("quote_id", "sym", "qt")) ===
+      Set(1L -> 11L, 2L -> 10L))
   }
 
   test("connectedComponents throws instead of returning unconverged labels") {

@@ -149,13 +149,11 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("max_token_multiplicity and interleave_bits callable from SQL") {
+  test("max_token_multiplicity callable from SQL") {
     GraftFunctions.register(spark)
     val top = spark.sql("SELECT max_token_multiplicity('a b a c a') AS m")
       .as[Int].head()
     assert(top === 3)
-    val z = spark.sql("SELECT interleave_bits(3, 5L, 3L) AS z").as[Long].head()
-    assert(z === 39L) // x=101, y=011 -> 100111
   }
 
   test("a user SQL step can call the extension functions") {
@@ -178,7 +176,7 @@ class FunctionsSpec extends AnyFunSuite {
     // ROW-level expressions -> real SQL functions
     val sqlFns = GraftFunctions.functions.map(_._1.funcName).toSet
     assert(sqlFns === Set("cosine_similarity", "shingle_hashes", "simhash_chunks",
-      "sorted_intersect_count", "max_token_multiplicity", "interleave_bits",
+      "sorted_intersect_count", "max_token_multiplicity",
       "graft_bpe_tokens", "graft_unigram_tokens"))
     // TABLE-level operators -> named fn steps (F17); composed pipelines
     // keep their own stage registries

@@ -853,32 +853,6 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(deg === Seq((1L, 4L)))
   }
 
-  test("exportEpoch: one file per shard, in-file row order IS the epoch order") {
-    val out = SparkTestBase.tmpDir("graft_epoch")
-    val docs = (0L until 240L).toDF("doc_id")
-      .withColumn("text", concat(lit("d"), col("doc_id")))
-    val landed = Export.exportEpoch(spark, docs, out, nShards = 4, seed = "e7")
-    // landed content is the full corpus with the trainingOrder columns
-    val want = Export.trainingOrder(docs, 4, "e7")
-      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-    val got = landed.select("doc_id", "text", "seq", "shard")
-      .as[(Long, String, Long, Long)].collect()
-      .map { case (id, t, q, s) => (id, t, s, q) }.sortBy(_._1)
-    assert(got === want)
-    // one data file per shard directory, and WITHIN each file the
-    // physical row order is seq ascending (no .orderBy on the read —
-    // parquet preserves in-file order)
-    for (k <- 0 until 4) {
-      val files = new java.io.File(s"$out/data/shard=$k").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      assert(files.length === 1, s"shard $k must land as one file")
-      val seqs = spark.read.parquet(files.head.getPath)
-        .select("seq").as[Long].collect()
-      assert(seqs === seqs.sorted, s"shard $k rows out of epoch order")
-      assert(seqs.head === 0L && seqs.last === seqs.length - 1L)
-    }
-  }
-
   // ------------------------------------------- persisted rank snapshot
 
   test("writeRankSnapshot: parquet round-trip == direct hostRank bit-for-bit") {

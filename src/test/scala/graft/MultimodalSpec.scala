@@ -33,38 +33,6 @@ class MultimodalSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("bad magic")))
   }
 
-  test("feature extraction: fixed dim, L1-normalized, deterministic") {
-    val f1 = Multimodal.extractFeatures(assets).collect().map(x => x.asset_id -> x.features).toMap
-    val f2 = Multimodal.extractFeatures(assets).collect().map(x => x.asset_id -> x.features).toMap
-    assert(f1.values.forall(_.length === 64))
-    f1.foreach { case (id, v) =>
-      assert(math.abs(v.sum - 1f) < 1e-3, s"asset $id not normalized: ${v.sum}")
-      assert(v.toSeq === f2(id).toSeq, s"asset $id features not deterministic")
-    }
-  }
-
-  test("resize rewrites header dims and scales the body") {
-    val small = Multimodal.resize(assets.filter(_.kind == "image"), 32, 32)
-    val d = Multimodal.decode(small).collect()
-    assert(d.nonEmpty)
-    assert(d.forall(x => x.width === 32 && x.height === 32))
-    assert(d.forall(_.payloadBytes < 1024 + FakeCodec.HeaderLen),
-      "downscale must shrink the payload")
-  }
-
-  test("frame sampling emits every strideth frame per video asset") {
-    val frames = Multimodal.sampleFrames(assets.filter(_.kind == "video"), stride = 2)
-      .collect().groupBy(_.asset_id)
-    val metas = Multimodal.decode(assets.filter(_.kind == "video")).collect()
-      .map(x => x.asset_id -> x.nFrames).toMap
-    assert(frames.keySet === metas.keySet)
-    frames.foreach { case (id, fs) =>
-      assert(fs.length === (metas(id) + 1) / 2, s"asset $id frame count")
-      assert(fs.map(_.frame_idx).sorted.toSeq === (0 until metas(id) by 2).toSeq)
-      assert(fs.forall(_.frame.nonEmpty))
-    }
-  }
-
   private def pngBytes(w: Int, h: Int): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_ARGB)
@@ -81,38 +49,6 @@ class MultimodalSpec extends AnyFunSuite {
     val d = Multimodal.decode(real).collect().map(x => x.asset_id -> x).toMap
     assert(d(100L).width === 2 && d(100L).height === 2 && d(100L).nFrames === 1)
     assert(d(101L).width === 5 && d(101L).height === 3)
-  }
-
-  test("real PNG resize rescales pixels and re-encodes a decodable PNG") {
-    val real = Seq(Asset(100L, "image", pngBytes(8, 8))).toDS()
-    val resized = Multimodal.resize(real, 4, 4).collect().head
-    assert(Multimodal.Codec.isPng(resized.payload), "resize must emit PNG bytes")
-    val d = Multimodal.decode(Seq(resized).toDS()).collect().head
-    assert(d.width === 4 && d.height === 4)
-  }
-
-  test("real PNG features: luminance histogram, L1-normalized") {
-    val real = Seq(Asset(100L, "image", pngBytes(4, 4))).toDS()
-    val f = Multimodal.extractFeatures(real).collect().head.features
-    assert(f.length === 64)
-    assert(math.abs(f.sum - 1f) < 1e-3)
-    // a black image lands all 16 pixels in the lowest luminance bin
-    val black = Seq(Asset(101L, "image", {
-      val img = new java.awt.image.BufferedImage(4, 4,
-        java.awt.image.BufferedImage.TYPE_INT_ARGB)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    })).toDS()
-    val fb = Multimodal.extractFeatures(black).collect().head.features
-    assert(fb(0) === 1f)
-  }
-
-  test("PNG assets sample as their own single frame") {
-    val real = Seq(Asset(100L, "image", pngBytes(2, 2))).toDS()
-    val frames = Multimodal.sampleFrames(real).collect()
-    assert(frames.length === 1 && frames.head.frame_idx === 0)
-    assert(Multimodal.Codec.isPng(frames.head.frame))
   }
 
   private def wavBytes(nSamples: Int, rate: Float = 8000f): Array[Byte] = {
@@ -138,51 +74,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(d(201L).sampleRate === 16000 && d(201L).nFrames === 100)
   }
 
-  test("real WAV features: amplitude histogram over decoded PCM, L1-normalized") {
-    val real = Seq(Asset(200L, "audio", wavBytes(500))).toDS()
-    val f = Multimodal.extractFeatures(real).collect().head.features
-    assert(f.length === 64)
-    assert(math.abs(f.sum - 1f) < 1e-3)
-    // a sine wave at ±16000 of ±32768 spans roughly the middle half of
-    // the bins and never the extremes
-    assert(f(0) === 0f && f(63) === 0f)
-    assert(f.count(_ > 0f) > 5, "sine amplitudes must spread over multiple bins")
-    // silence lands every sample in the midpoint bin
-    val silent = Seq(Asset(201L, "audio", {
-      import javax.sound.sampled._
-      val fmt = new AudioFormat(8000f, 16, 1, true, false)
-      val ais = new AudioInputStream(
-        new java.io.ByteArrayInputStream(new Array[Byte](200)), fmt, 100L)
-      val bos = new java.io.ByteArrayOutputStream()
-      AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    })).toDS()
-    val fs = Multimodal.extractFeatures(silent).collect().head.features
-    assert(fs(32) === 1f)
-  }
-
-  test("8-bit WAV features use per-byte samples, not fused 16-bit pairs") {
-    import javax.sound.sampled._
-    // constant 8-bit unsigned amplitude 200 -> all mass in one upper bin
-    val pcm = Array.fill[Byte](100)(200.toByte)
-    val fmt = new AudioFormat(AudioFormat.Encoding.PCM_UNSIGNED, 8000f, 8, 1, 1, 8000f, false)
-    val ais = new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, 100L)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    val asset = Seq(Asset(210L, "audio", bos.toByteArray)).toDS()
-    val f = Multimodal.extractFeatures(asset).collect().head.features
-    assert(math.abs(f.sum - 1f) < 1e-3)
-    assert(f((200 * 64) >>> 8) === 1f, "all samples share one amplitude bin")
-  }
-
-  test("WAV assets: resize passes through, sampleFrames emits the clip once") {
-    val real = Seq(Asset(200L, "audio", wavBytes(50))).toDS()
-    val resized = Multimodal.resize(real, 32, 32).collect().head
-    assert(resized.payload.toSeq === real.collect().head.payload.toSeq)
-    val frames = Multimodal.sampleFrames(real).collect()
-    assert(frames.length === 1 && frames.head.frame_idx === 0)
-  }
-
   /** Deterministic animated GIF: `n` solid-color full frames. */
   private def gifBytes(w: Int, h: Int, n: Int): Array[Byte] = {
     val frames = (0 until n).map { f =>
@@ -205,40 +96,14 @@ class MultimodalSpec extends AnyFunSuite {
     assert(d(301L).nFrames === 1)
   }
 
-  test("real GIF frame sampling emits every strideth frame as decodable PNG") {
-    val real = Seq(Asset(300L, "video", gifBytes(4, 4, 7))).toDS()
-    val frames = Multimodal.sampleFrames(real, stride = 2).collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq === Seq(0, 2, 4, 6))
-    frames.foreach { f =>
-      assert(Multimodal.Codec.isPng(f.frame))
-      val img = Multimodal.Codec.readImage(f.frame)
-      assert(img.getWidth === 4 && img.getHeight === 4)
-    }
-  }
-
-  test("real GIF resize rescales every frame and re-encodes an animated GIF") {
-    val real = Seq(Asset(300L, "video", gifBytes(8, 8, 3))).toDS()
-    val resized = Multimodal.resize(real, 4, 2).collect().head
-    assert(Multimodal.Codec.isGif(resized.payload), "resize must emit GIF bytes")
-    val d = Multimodal.decode(Seq(resized).toDS()).collect().head
-    assert(d.width === 4 && d.height === 2 && d.nFrames === 3)
-  }
-
-  test("real GIF features: luminance histogram pooled over all frames") {
-    // all-black 2-frame GIF -> all pixel mass in the lowest bin
-    val black = (0 until 2).map { _ =>
-      new java.awt.image.BufferedImage(4, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    }
-    val asset = Seq(Asset(302L, "video", Multimodal.Codec.writeGif(black))).toDS()
-    val f = Multimodal.extractFeatures(asset).collect().head.features
-    assert(math.abs(f.sum - 1f) < 1e-3)
-    assert(f(0) === 1f, "all-black frames land every pixel in bin 0")
-  }
-
-  test("asset stats groups on decoded metadata only") {
-    val stats = Multimodal.assetStats(Multimodal.decode(assets))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(stats === Map("image" -> 10L, "audio" -> 10L, "video" -> 10L))
+  test("real GIF frame sampling: every strideth stored frame decodes at the GIF's dims") {
+    val gif = gifBytes(4, 4, 7)
+    val frames = Multimodal.Codec.readGifFrames(gif)
+    assert(frames.length === 7)
+    frames.foreach(f => assert(f.getWidth === 4 && f.getHeight === 4))
+    val sampled = Multimodal.videoFrameSigs(Seq(Asset(300L, "video", gif)).toDS(), stride = 2)
+      .select("frame_idx").as[Int].collect().sorted
+    assert(sampled.toSeq === Seq(0, 2, 4, 6))
   }
 
   // ---- MP4 container demux (ISO BMFF built box-by-box per spec) ----
@@ -290,33 +155,16 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("real MP4 frame sampling extracts the exact encoded access units") {
     val (payload, samples) = mp4Bytes()
-    val ds = Seq(Asset(7L, "video", payload)).toDS
-    val all = Multimodal.sampleFrames(ds, stride = 1).collect().sortBy(_.frame_idx)
-    assert(all.length === 5)
-    all.foreach(f => assert(f.frame.toSeq === samples(f.frame_idx).toSeq,
-      s"sample ${f.frame_idx} bytes drifted from the stsz/stsc/stco map"))
-    val strided = Multimodal.sampleFrames(ds, stride = 2).collect().map(_.frame_idx).sorted
+    val v = Multimodal.Codec.readMp4Video(payload)
+    assert(v.sampleSizes.length === 5)
+    samples.indices.foreach { i =>
+      val start = v.sampleOffsets(i).toInt
+      assert(payload.slice(start, start + v.sampleSizes(i)).toSeq === samples(i).toSeq,
+        s"sample $i bytes drifted from the stsz/stsc/stco map")
+    }
+    val strided = Multimodal.videoFrameSigs(Seq(Asset(7L, "video", payload)).toDS, stride = 2)
+      .select("frame_idx").as[Int].collect().sorted
     assert(strided.toSeq === Seq(0, 2, 4))
-  }
-
-  test("real MP4 features: encoded-domain histogram over samples only, L1-normalized") {
-    val (payload, _) = mp4Bytes()
-    val ds = Seq(Asset(2L, "video", payload)).toDS
-    val f1 = Multimodal.extractFeatures(ds, dim = 16).collect().head.features
-    val f2 = Multimodal.extractFeatures(ds, dim = 16).collect().head.features
-    assert(f1.toSeq === f2.toSeq)
-    assert(math.abs(f1.sum - 1f) < 1e-5)
-    // 25 sample bytes across 5 distinct values: exactly 5 non-zero bins
-    // iff only SAMPLE bytes (never box/metadata bytes) are histogrammed
-    assert(f1.count(_ > 0f) === 5)
-  }
-
-  test("MP4 resize fails loudly at the pixel-codec seam") {
-    val (payload, _) = mp4Bytes()
-    val e = intercept[org.apache.spark.SparkException](
-      Multimodal.resize(Seq(Asset(3L, "video", payload)).toDS, 64, 64).collect())
-    assert(e.getMessage.contains("pixel codec") ||
-      e.getCause.getMessage.contains("pixel codec"))
   }
 
   private def grayPng(w: Int, h: Int)(lum: (Int, Int) => Int): Array[Byte] = {
@@ -366,20 +214,6 @@ class MultimodalSpec extends AnyFunSuite {
     val pairs = Multimodal.nearDupImages(assets)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(pairs === Set((1L, 2L)), "resized re-encode of the same scene must near-dup")
-  }
-
-  private def wavOf(samples: Array[Short]): Array[Byte] = {
-    import javax.sound.sampled._
-    val pcm = new Array[Byte](samples.length * 2)
-    for (i <- samples.indices) {
-      pcm(2 * i) = (samples(i) & 0xFF).toByte
-      pcm(2 * i + 1) = ((samples(i) >> 8) & 0xFF).toByte
-    }
-    val fmt = new AudioFormat(8000f, 16, 1, true, false)
-    val ais = new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, samples.length.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
   }
 
   test("incremental chunk-sig probe == full pair set (cross-frame), corpus never re-decodes") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Sketches
+import graft.io.Parquet
 import graft.functions.QuantileBuffer
 
 /** Deterministic mergeable quantile sketch (q102's no-oracle gate):
@@ -64,9 +65,9 @@ class QuantileSpec extends AnyFunSuite {
     val h1 = Sketches.quantBuild(df.where($"v" % 2 === 0), Seq("g"), "v", k = 256)
     val h2 = Sketches.quantBuild(df.where($"v" % 2 =!= 0), Seq("g"), "v", k = 256)
     val path = SparkTestBase.tmpDir("graft_quant") + "/idx"
-    Sketches.write(h1, path)
+    h1.write.parquet(path)
     val merged = Sketches.quantEstimates(
-      Sketches.quantMerge(Sketches.read(spark, path), h2, Seq("g"), k = 256),
+      Sketches.quantMerge(Parquet.read(spark, path).unionByName(h2), Seq("g"), k = 256),
       Seq("g"), qs)
       .collect().head.toSeq
     assert(merged === full,
@@ -77,7 +78,7 @@ class QuantileSpec extends AnyFunSuite {
     val a = Sketches.quantBuild(Seq(("g", 1.0)).toDF("g", "v"), Seq("g"), "v", k = 64)
     val b = Sketches.quantBuild(Seq(("g", 2.0)).toDF("g", "v"), Seq("g"), "v", k = 128)
     val e = intercept[Exception] {
-      Sketches.quantMerge(a, b, Seq("g"), k = 64).collect()
+      Sketches.quantMerge(a.unionByName(b), Seq("g"), k = 64).collect()
     }
     assert(e.getMessage.toLowerCase.contains("mismatch"),
       s"expected a k-mismatch error, got: ${e.getMessage.take(200)}")

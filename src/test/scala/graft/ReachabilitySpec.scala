@@ -4,8 +4,9 @@ import scala.sys.process._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every `def` in `src/main` outside `streaming/` that no entry point
-  * reaches is on the README keep-list, and every keep-list entry still
-  * names an unreached def (`tools/reachability.py --check`).
+  * reaches is on the README keep-list, every keep-list entry still
+  * names an unreached def, and every `[[link]]` in a comment names
+  * something declared (`tools/reachability.py --check`).
   */
 class ReachabilitySpec extends AnyFunSuite {
   test("every unreached def is on the README keep-list, and the keep-list holds nothing else") {

@@ -593,27 +593,6 @@ class TasksSpec extends AnyFunSuite {
       "failed/skipped tasks must not append ledger rows")
   }
 
-  test("ledger compaction: N one-row appends fold to one file with history intact") {
-    import graft.exec.RunLedger
-    val dir = SparkTestBase.tmpDir("graft_ledger_compact") + "/led"
-    (1 to 6).foreach { i =>
-      RunLedger.append(spark, dir, RunLedger.Entry(
-        s"task_$i", "extract", Seq(s"src_$i"), None,
-        rows_out = i.toLong, landed_path = s"/lake/t$i",
-        started_ms = 1000L * i, wall_ms = 5L))
-    }
-    def files = new java.io.File(dir).listFiles()
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(files === 6, "each append lands its own tiny file")
-    val before = RunLedger.read(spark, dir)
-      .select("task_id", "rows_out").as[(String, Long)].collect().toSeq
-    assert(RunLedger.compact(spark, dir) === 1)
-    assert(files === 1)
-    val after = RunLedger.read(spark, dir)
-      .select("task_id", "rows_out").as[(String, Long)].collect().toSeq
-    assert(after === before, "compaction preserves every row and the read order")
-  }
-
   private def ledgerEntry(id: String, i: Int) = graft.exec.RunLedger.Entry(
     id, "extract", Seq(s"src_$i"), None, rows_out = i.toLong,
     landed_path = s"/lake/t$i", started_ms = 1000L * i, wall_ms = 5L)
@@ -663,7 +642,7 @@ class TasksSpec extends AnyFunSuite {
     assert(RunLedger.readDagRuns(spark, s"$dir-dag").count() === 2)
   }
 
-  test("ledger: hidden in-progress residue of a crashed append is ignored by read and compact") {
+  test("ledger: hidden in-progress residue of a crashed append is ignored by read") {
     import graft.exec.RunLedger
     val work = SparkTestBase.tmpDir("graft_ledger_residue")
     def withResidue(dir: String): Unit = Files.write(
@@ -688,12 +667,6 @@ class TasksSpec extends AnyFunSuite {
     assert(dagRows("crashed") === dagRows("clean"))
     assert(ledgerRows("crashed").map(_._1) === Seq("t3", "t2", "t1"))
     assert(parquetFiles(s"$work/crashed/led") === 3)
-    Seq("led", "dag").foreach { d =>
-      assert(RunLedger.compact(spark, s"$work/crashed/$d") ===
-        RunLedger.compact(spark, s"$work/clean/$d"))
-    }
-    assert(ledgerRows("crashed") === ledgerRows("clean"))
-    assert(dagRows("crashed") === dagRows("clean"))
   }
 
   test("RunTask rejects malformed invocations with actionable errors") {

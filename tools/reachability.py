@@ -5,6 +5,7 @@ Usage:
     python3 tools/reachability.py            # print every unreached def
     python3 tools/reachability.py --check    # exit 1 unless the unreached
                                              # set equals the README keep-list
+                                             # and every [[link]] resolves
 
 The scan is by name, over the Scala sources of src/main and perfbench/src
 with every comment and string literal stripped (the code inside `${...}`
@@ -41,6 +42,12 @@ its first column holds `Owner.name` (or a type's name). What a listed
 def calls is kept with it. --check fails on an unreached def that the
 list does not cover, and on a list entry that names no def or names a
 def that is now reached.
+
+--check also fails on a dangling [[link]] in a comment: one whose last
+name segment is declared nowhere in src/main or perfbench/src as a def,
+val, var, type, object, class, trait or constructor parameter. Links
+qualified by org., java., javax. or scala. are not checked. Only the
+innermost [[...]] of a nest is a link, so "[[[A]], [[B]]]" holds two.
 """
 import os
 import re
@@ -69,10 +76,11 @@ NUMBER = re.compile(r"0[xX][0-9a-fA-F_]+[lL]?|\d[\d_]*(\.\d[\d_]*)?([eE][+-]?\d+
 
 # ---------------------------------------------------------------- lexing
 
-def lex(src, i=0, in_splice=False):
+def lex(src, i=0, in_splice=False, notes=None):
     """Tokens of `src` from `i`: (text, line) pairs with comments and
     string literals removed, newlines kept as "\\n". Inside a `${...}`
-    splice, stops at its closing brace and returns the index after it."""
+    splice, stops at its closing brace and returns the index after it.
+    Each comment's (text, line) is appended to `notes` when given."""
     toks, depth, n = [], 0, len(src)
     line = src.count("\n", 0, i) + 1
     while i < n:
@@ -84,8 +92,11 @@ def lex(src, i=0, in_splice=False):
         elif c in " \t\r\f":
             i += 1
         elif src.startswith("//", i):
-            i = src.find("\n", i)
-            i = n if i < 0 else i
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+            if notes is not None:
+                notes.append((src[i:j], line))
+            i = j
         elif src.startswith("/*", i):
             j, nest = i + 2, 1
             while j < n and nest:
@@ -95,6 +106,8 @@ def lex(src, i=0, in_splice=False):
                     nest, j = nest - 1, j + 2
                 else:
                     j += 1
+            if notes is not None:
+                notes.append((src[i:j], line))
             line += src.count("\n", i, j)
             i = j
         elif c == '"':
@@ -329,7 +342,8 @@ def imported_objects(toks):
 
 
 def load(root):
-    templates = []
+    """The parsed templates, and every comment as (path, text, line)."""
+    templates, notes = [], []
     for base in (SRC_MAIN, PERFBENCH):
         for dirpath, _, files in sorted(os.walk(os.path.join(root, base))):
             for f in sorted(files):
@@ -337,10 +351,48 @@ def load(root):
                     continue
                 path = os.path.relpath(os.path.join(dirpath, f), root)
                 with open(os.path.join(root, path), encoding="utf-8") as fh:
-                    toks, _ = lex(fh.read())
+                    file_notes = []
+                    toks, _ = lex(fh.read(), notes=file_notes)
                 parse_body(toks, 0, len(toks), None, path, templates,
                            imported_objects(toks))
-    return templates
+                notes += [(path, text, line) for text, line in file_notes]
+    return templates, notes
+
+
+# ---------------------------------------------------------------- links
+
+LINK = re.compile(r"\[\[([^\[\]]+)\]\]")
+EXTERNAL = ("org.", "java.", "javax.", "scala.")
+
+
+def declared_names(templates):
+    """Every name src/main and perfbench/src declare: members, types and
+    the parameters of class constructors."""
+    names = set()
+    for t in templates:
+        names.add(t.name)
+        names |= {m.name for m in t.members}
+        if t.kind == "class":
+            toks = [x[0] for x in t.loose if x[0] != "\n"]
+            names |= {a for a, b in zip(toks, toks[1:])
+                      if b == ":" and IDENT.fullmatch(a)}
+    return names
+
+
+def dangling_links(templates, notes):
+    """"path:line [[link]]" of every link whose last segment names nothing."""
+    names = declared_names(templates)
+    out = []
+    for path, text, line in notes:
+        for m in LINK.finditer(text):
+            target = re.sub(r"\s*\n\s*\*?\s*", "", m.group(1)).strip()
+            if target.startswith(EXTERNAL):
+                continue
+            last = re.split(r"[.#]", target.split("(")[0].rstrip("*$!"))[-1]
+            if last not in names:
+                at = line + text.count("\n", 0, m.start())
+                out.append(f"{path}:{at} [[{target}]]")
+    return out
 
 
 # ---------------------------------------------------------------- closure
@@ -505,7 +557,7 @@ def keep_list(root):
 
 
 def main(argv):
-    templates = load(ROOT)
+    templates, notes = load(ROOT)
     keep = keep_list(ROOT)
     unreached = analyse(templates)
     # what a kept def calls is kept with it
@@ -526,6 +578,8 @@ def main(argv):
             errors.append(f"keep-list entry names no def: {n}")
         elif n not in unreached:
             errors.append(f"keep-list entry is reached now, drop it: {n}")
+    errors += [f"dangling link, its last name is declared nowhere: {d}"
+               for d in dangling_links(templates, notes)]
     for e in errors:
         print(e, file=sys.stderr)
     return 1 if errors else 0
